@@ -1278,15 +1278,16 @@ object CdcQueries {
       // route them into the last batch — a silent semantic change on a
       // feed that ever carries null seqs (well-formed feeds never do:
       // seq is framing-mandatory per the ChangeRecord contract).
-      // sortWithinPartitions($"seq") keeps within-file row order
-      // deterministic (r16 ADVICE: repartition replaced coalesce(1), so
-      // file order became shuffle-fetch order; latestWithTombstones
-      // breaks ties by seq only, so a duplicate (key, seq) in a feed
-      // would otherwise resolve nondeterministically).
+      // sortWithinPartitions($"b", $"seq") keeps within-file row order
+      // deterministic (file order would otherwise be shuffle-fetch
+      // order; latestWithTombstones breaks ties by seq only, so a
+      // duplicate (key, seq) in a feed would resolve
+      // nondeterministically). Leading with the partition column meets
+      // the writer's required ordering, so it adds no sort of its own.
       changes.filter($"seq".isNotNull)
         .withColumn("b", when($"seq" <= cut, "00").otherwise("01"))
         .repartition($"b")
-        .sortWithinPartitions($"seq")
+        .sortWithinPartitions($"b", $"seq")
         .write.mode("overwrite").partitionBy("b").parquet(tmp.toString)
       Seq("00", "01").zipWithIndex.foreach { case (name, i) =>
         val dst = inDir.resolve(s"$name.parquet")

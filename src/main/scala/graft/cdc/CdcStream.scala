@@ -291,56 +291,74 @@ object CdcStream {
     * require its min event-time to be post-2000 — cheap (one small
     * agg) and it turns silent garbage into a named failure. */
   /** Min `ts` in MICROS from the parquet FOOTER statistics of every
-    * data file under `path` (r17, guide §6: the sanity guard below ran
-    * a full-feed min-aggregation JOB for every streaming runner on
-    * every bench run — column-chunk min/max answer the same question
-    * from metadata on the driver). Returns None when any chunk lacks
-    * trustworthy stats (caller falls back to the Spark agg);
-    * Some(None) for an empty/all-null feed; Some(Some(micros))
-    * otherwise. The unit normalization mirrors
-    * [[graft.Tables.eventTsMicros]]: a LongType feed stores nanos
-    * (div 1000), the timestamp types store micros. */
+    * data file under `path` — column-chunk min/max answer the guard's
+    * question from metadata on the driver, without a min-aggregation
+    * job. Returns None whenever the metadata cannot answer (caller
+    * falls back to the Spark agg): a chunk without trustworthy stats, a
+    * `ts` column whose physical unit is unknown, or a directory with
+    * subdirectories (nested layouts the readers discover recursively
+    * but this one-level listing would miss). Some(None) for an
+    * empty/all-null feed; Some(Some(micros)) otherwise. The unit
+    * normalization mirrors what [[graft.Tables.eventTsMicros]] reads: a
+    * LongType feed is the raw int64 as nanos (div 1000); a timestamp
+    * feed is decoded by its footer's TIMESTAMP unit. */
   private def minTsMicrosFromFooters(spark: SparkSession, path: String,
       tsType: org.apache.spark.sql.types.DataType): Option[Option[Long]] = try {
     val conf = spark.sparkContext.hadoopConfiguration
     val p = new org.apache.hadoop.fs.Path(path)
     val fs = p.getFileSystem(conf)
-    val files =
-      if (fs.getFileStatus(p).isDirectory)
-        fs.listStatus(p).toSeq.map(_.getPath)
-          .filter(_.getName.endsWith(".parquet"))
-      else Seq(p)
-    var min: Option[Long] = None
-    var trusted = true
-    files.foreach { f =>
-      val rdr = org.apache.parquet.hadoop.ParquetFileReader.open(
-        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(f, conf))
-      try {
-        val blocks = rdr.getFooter.getBlocks
-        blocks.forEach { b =>
-          if (trusted && b.getRowCount > 0) {
-            val col = b.getColumns.asScala
-              .find(_.getPath.toDotString == "ts").orNull
-            val st = if (col == null) null else col.getStatistics
-            if (st != null && st.hasNonNullValue) {
-              val v = st.genericGetMin.asInstanceOf[java.lang.Long].longValue()
-              min = Some(min.fold(v)(math.min(_, v)))
-            } else if (st == null || !st.isNumNullsSet ||
-                st.getNumNulls < b.getRowCount) {
-              // stats absent (vs a genuinely all-null chunk) — the
-              // metadata cannot answer; the caller must scan
-              trusted = false
-            }
-          }
+    val (nested, files) =
+      if (!fs.getFileStatus(p).isDirectory) (false, Seq(p))
+      else {
+        val visible = fs.listStatus(p).toSeq.filterNot { e =>
+          val n = e.getPath.getName; n.startsWith("_") || n.startsWith(".")
         }
-      } finally rdr.close()
+        (visible.exists(_.isDirectory),
+          visible.map(_.getPath).filter(_.getName.endsWith(".parquet")))
+      }
+    if (nested) None
+    else {
+      val mins = files.map(footerMinMicros(_, conf, tsType))
+      if (mins.exists(_.isEmpty)) None else Some(mins.flatMap(_.get).minOption)
     }
-    if (!trusted) None
-    else Some(min.map(v => tsType match {
-      case LongType => v / 1000 // raw nanos feed (legacy read)
-      case _ => v
-    }))
   } catch { case _: Exception => None }
+
+  /** [[minTsMicrosFromFooters]] for one file. The raw int64 becomes
+    * micros by the file's own `ts` annotation (MILLIS ×1000, NANOS
+    * ÷1000); a timestamp feed without one is untrusted. */
+  private def footerMinMicros(f: org.apache.hadoop.fs.Path,
+      conf: org.apache.hadoop.conf.Configuration,
+      tsType: org.apache.spark.sql.types.DataType): Option[Option[Long]] = {
+    import org.apache.parquet.schema.LogicalTypeAnnotation.{TimestampLogicalTypeAnnotation, TimeUnit}
+    val rdr = org.apache.parquet.hadoop.ParquetFileReader.open(
+      org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(f, conf))
+    try {
+      val footer = rdr.getFooter
+      val fileSchema = footer.getFileMetaData.getSchema
+      val toMicros: Option[Long => Long] =
+        fileSchema.getType(fileSchema.getFieldIndex("ts")).getLogicalTypeAnnotation match {
+          case _ if tsType == LongType => Some(_ / 1000) // raw nanos feed (legacy read)
+          case t: TimestampLogicalTypeAnnotation => t.getUnit match {
+            case TimeUnit.MILLIS => Some(_ * 1000)
+            case TimeUnit.MICROS => Some(identity)
+            case TimeUnit.NANOS => Some(_ / 1000)
+          }
+          case _ => None
+        }
+      toMicros.flatMap { conv =>
+        val chunks = footer.getBlocks.asScala.toSeq.filter(_.getRowCount > 0).map { b =>
+          val st = b.getColumns.asScala
+            .find(_.getPath.toDotString == "ts").map(_.getStatistics).orNull
+          if (st != null && st.hasNonNullValue)
+            Some(Some(conv(st.genericGetMin.asInstanceOf[java.lang.Long].longValue())))
+          else if (st != null && st.isNumNullsSet && st.getNumNulls >= b.getRowCount)
+            Some(None) // a genuinely all-null chunk
+          else None // stats absent: the metadata cannot answer
+        }
+        if (chunks.exists(_.isEmpty)) None else Some(chunks.flatMap(_.get).minOption)
+      }
+    } finally rdr.close()
+  }
 
   /** 2000-01-01T00:00:00Z in epoch micros — the sanity floor. */
   private val Year2000Micros = 946684800000000L
@@ -415,6 +433,18 @@ object CdcStream {
     try w.write(g) finally w.close()
   }
 
+  /** Publish the sentinel into the live stream directory `inDir`: it
+    * is written under a dot-prefixed name, which the file source
+    * ignores, then moved to `01_sentinel.parquet` in one rename, so the
+    * running query can never list a half-written file. */
+  private[cdc] def publishSentinel(inDir: java.nio.file.Path,
+      tsType: org.apache.spark.sql.types.DataType): Unit = {
+    val tmp = inDir.resolve(".01_sentinel.parquet.tmp")
+    writeSentinelFile(tmp, tsType)
+    java.nio.file.Files.move(tmp, inDir.resolve("01_sentinel.parquet"),
+      java.nio.file.StandardCopyOption.ATOMIC_MOVE)
+  }
+
   /** Run a watermarked APPEND-mode streaming aggregation over the
     * events file with end-of-stream punctuation: the events parquet is
     * batch 1; a far-future sentinel event (user −1, year 2100) arrives
@@ -482,14 +512,11 @@ object CdcStream {
       try {
         q.processAllAvailable()
         // sentinel ts must carry the FILE's representation (2100-01-01).
-        // Written with parquet-java directly (r17, r16 verdict task 3):
-        // the 1-row sentinel was a full Spark write JOB (plan + schedule
-        // + commit protocol, ~0.15 s × 4 punctuated runners per bench
-        // run) for a constant row — a driver-side file write needs none
-        // of that. Same bytes semantically: the declared read schema is
-        // per-column name/type-matched, so the stream decodes the
-        // sentinel identically to the old Spark-written file.
-        writeSentinelFile(inDir.resolve("01_sentinel.parquet"), tsType)
+        // Written with parquet-java directly: a Spark write JOB (plan +
+        // schedule + commit protocol) buys nothing for a constant row,
+        // and the declared read schema is per-column name/type-matched,
+        // so the stream decodes it like a Spark-written file.
+        publishSentinel(inDir, tsType)
         q.processAllAvailable()
       } finally q.stop()
     }

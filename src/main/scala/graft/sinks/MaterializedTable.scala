@@ -1,10 +1,13 @@
 package graft.sinks
 
-import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import java.nio.file.{Files, StandardCopyOption}
+
+import org.apache.hadoop.fs.{FileContext, FileSystem, LocalFileSystem, Options, Path, RawLocalFileSystem}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
+import org.apache.spark.sql.types.StructType
 
 import graft.cdc.ChangeRecord
 
@@ -23,19 +26,49 @@ import graft.cdc.ChangeRecord
   * lower-seq change can never resurrect a deleted key across batches;
   * [[readLatest]] filters them out.
   *
-  * Scale: each snapshot write is one shuffle on the key (the same cost
-  * as the batch operator); with key-range partitioned snapshots only
-  * touched partitions would rewrite — noted as the compaction upgrade
-  * path. On a real deployment the pointer flip is the only
-  * coordination point and parquet files are immutable, exactly the
-  * log-structured pattern table formats formalize.
+  * Known schema: the sink writes exactly the [[ChangeRecord]] columns,
+  * so every snapshot read declares [[Schema]] instead of inferring it
+  * from a footer (inference is a Spark job of its own). File sources
+  * read a declared schema as nullable, as they do an inferred one.
+  *
+  * Job budget: a micro-batch is the snapshot write (one shuffle on the
+  * key, the same cost as the batch operator); a [[readLatest]] lookup
+  * is the lookup's own job. With key-range partitioned snapshots only
+  * touched partitions would rewrite — [[PartitionedTable]] is that
+  * upgrade path. The pointer flip is the only coordination point and
+  * parquet files are immutable, exactly the log-structured pattern
+  * table formats formalize.
   */
 object MaterializedTable {
+
+  /** The layout's row schema: every snapshot holds exactly these
+    * columns (plus the `__b` partition dir in [[PartitionedTable]]). */
+  private[sinks] val Schema: StructType = Encoders.product[ChangeRecord].schema
+
+  /** The batch's [[ChangeRecord]] columns, in [[Schema]] order — what
+    * the sink writes, whatever else the batch's plan carries. */
+  private[sinks] def changeColumns(batch: Dataset[ChangeRecord]): DataFrame =
+    batch.toDF().select(Schema.fieldNames.toIndexedSeq.map(col): _*)
+
+  /** Read sink-written parquet under the known [[Schema]] (no
+    * inference job). */
+  private[sinks] def readParquet(s: SparkSession, paths: String*): DataFrame =
+    s.read.schema(Schema).parquet(paths: _*)
 
   private[sinks] def fs(s: SparkSession, p: String): FileSystem =
     new Path(p).getFileSystem(s.sparkContext.hadoopConfiguration)
 
   private def pointerPath(table: String) = new Path(table, "_LATEST")
+
+  /** Where the pointer is read and written. On `file:` that is the raw
+    * local file system: the checksummed one keeps a `.crc` sidecar that
+    * it renames separately from the pointer, so a reader could pair the
+    * new pointer with the old checksum. */
+  private def pointerFs(s: SparkSession, table: String): FileSystem =
+    fs(s, table) match {
+      case l: LocalFileSystem => l.getRaw
+      case f => f
+    }
 
   /** Small-file read shared by the pointer and manifest readers. */
   private[sinks] def readSmallFile(f: FileSystem, p: Path): String = {
@@ -48,28 +81,36 @@ object MaterializedTable {
   }
 
   private[sinks] def readPointer(s: SparkSession, table: String): Option[String] = {
-    val f = fs(s, table)
+    val f = pointerFs(s, table)
     val p = pointerPath(table)
     if (!f.exists(p)) None
     else Some(readSmallFile(f, p).trim)
   }
 
+  /** Publish `version` as the table's current state: write a temp file,
+    * then replace `_LATEST` with it in one step, so a concurrent reader
+    * sees either the old pointer or the new one, never neither. */
   private[sinks] def writePointer(s: SparkSession, table: String, version: String): Unit = {
-    val f = fs(s, table)
-    val tmp = new Path(table, s"_LATEST.tmp")
+    val f = pointerFs(s, table)
+    val tmp = new Path(table, "_LATEST.tmp")
     val out = f.create(tmp, true)
     try out.write(version.getBytes("UTF-8")) finally out.close()
-    // FileSystem.rename refuses existing destinations; FileContext's
-    // OVERWRITE rename is the atomic pointer-flip primitive on HDFS.
-    val fc = org.apache.hadoop.fs.FileContext.getFileContext(
-      tmp.toUri, s.sparkContext.hadoopConfiguration)
-    fc.rename(tmp, pointerPath(table),
-      org.apache.hadoop.fs.Options.Rename.OVERWRITE)
+    f match {
+      case raw: RawLocalFileSystem =>
+        // POSIX rename(2) replaces the destination atomically
+        Files.move(raw.pathToFile(tmp).toPath, raw.pathToFile(pointerPath(table)).toPath,
+          StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
+      case _ =>
+        // FileSystem.rename refuses existing destinations; FileContext's
+        // OVERWRITE rename is the atomic pointer-flip primitive on HDFS
+        FileContext.getFileContext(tmp.toUri, s.sparkContext.hadoopConfiguration)
+          .rename(tmp, pointerPath(table), Options.Rename.OVERWRITE)
+    }
   }
 
   /** Current snapshot including tombstones; empty if none yet. */
   def readSnapshot(s: SparkSession, table: String): Option[DataFrame] =
-    readPointer(s, table).map(v => s.read.parquet(s"$table/$v"))
+    readPointer(s, table).map(readVersion(s, table, _))
 
   /** Current materialized state (tombstones filtered). */
   def readLatest(s: SparkSession, table: String): DataFrame =
@@ -77,9 +118,12 @@ object MaterializedTable {
       .map(_.filter(col("op") =!= "d"))
       .getOrElse(throw new IllegalStateException(s"no snapshot at $table"))
 
-  /** Latest row per key, KEEPING delete tombstones. */
-  private[sinks] def latestWithTombstones(changes: DataFrame): DataFrame = {
-    val w = Window.partitionBy(col("key")).orderBy(col("seq").desc)
+  /** Latest row per key, KEEPING delete tombstones. `partition` must
+    * include `key`; a caller may lead with a function of the key (the
+    * bucket) so the window reuses a clustering the input already has. */
+  private[sinks] def latestWithTombstones(changes: DataFrame,
+      partition: Column*): DataFrame = {
+    val w = Window.partitionBy(partition: _*).orderBy(col("seq").desc)
     changes.withColumn("__rn", row_number().over(w))
       .filter(col("__rn") === 1).drop("__rn")
   }
@@ -89,10 +133,10 @@ object MaterializedTable {
     * restarts — batch ids reset to 0 on a fresh checkpoint, so a
     * batch-id-first sort would rank a restarted job's new snapshots
     * below the old run's and make vacuum delete the NEWEST dirs while
-    * retaining stale ones; r10 review finding), then the numeric batch
-    * id (two batches can share a millisecond in a fast loop; same-run
-    * batch ids are monotone), then the name. Lexicographic-only order
-    * would also put v10 before v2. */
+    * retaining stale ones), then the numeric batch id (two batches can
+    * share a millisecond in a fast loop; same-run batch ids are
+    * monotone), then the name. Lexicographic-only order would also put
+    * v10 before v2. */
   private[sinks] def versionKey(v: String): (Long, Long, String) = {
     val digits = v.drop(1).takeWhile(_.isDigit)
     val ts = v.split('_').lift(1).filter(t => t.nonEmpty && t.forall(_.isDigit))
@@ -111,7 +155,7 @@ object MaterializedTable {
   /** Read a specific (immutable) snapshot — time travel. Includes
     * tombstones; filter `op <> 'd'` for the visible state. */
   def readVersion(s: SparkSession, table: String, version: String): DataFrame =
-    s.read.parquet(s"$table/$version")
+    readParquet(s, s"$table/$version")
 
   /** Delete all snapshots except the `keep` most recent (never the
     * current pointer target). Returns the deleted version names.
@@ -141,16 +185,13 @@ object MaterializedTable {
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: Dataset[ChangeRecord], batchId: Long) =>
         val s = batch.sparkSession
-        val prior = readSnapshot(s, table)
-        val all = prior match {
-          case Some(p) => p.unionByName(batch.toDF())
-          case None => batch.toDF()
-        }
+        val changes = changeColumns(batch)
+        val all = readSnapshot(s, table).map(_.unionByName(changes)).getOrElse(changes)
         // batch ids restart at 0 with a fresh checkpoint — suffix with
         // wall time so a restarted job can never overwrite a snapshot
         // a reader may currently hold (immutable snapshots = MVCC)
         val version = s"v${batchId}_${System.currentTimeMillis()}"
-        latestWithTombstones(all).write.mode("overwrite")
+        latestWithTombstones(all, col("key")).write.mode("overwrite")
           .parquet(s"$table/$version")
         writePointer(s, table, version)
         ()

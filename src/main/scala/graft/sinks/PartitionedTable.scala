@@ -1,7 +1,7 @@
 package graft.sinks
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
@@ -17,15 +17,25 @@ import graft.cdc.ChangeRecord
   * Iceberg/Delta formalize):
   * {{{
   *   table/_LATEST              name of the current manifest (the only
-  *                              mutable file; flipped atomically via
-  *                              FileContext OVERWRITE rename)
+  *                              mutable file; replaced atomically)
   *   table/m{batch}_{ts}        immutable manifest: "<bucket>\t<dir>"
   *                              per line — bucket → version dir
   *   table/v{batch}_{ts}/__b=K/ immutable parquet, one dir per bucket
   * }}}
-  * Readers resolve pointer → manifest → bucket dirs, so they see one
-  * consistent version end-to-end (MVCC); old manifests remain valid
-  * snapshots until vacuumed.
+  * Readers resolve pointer → manifest → bucket dirs once per read, so
+  * they see one consistent version end-to-end (MVCC); old manifests
+  * remain valid snapshots until vacuumed.
+  *
+  * Known schema: bucket files hold exactly the [[ChangeRecord]]
+  * columns, so every read declares [[MaterializedTable.Schema]] and
+  * Spark runs no inference job.
+  *
+  * Job budget per micro-batch: one job materializes the persisted batch
+  * and collects its touched buckets; the write is one shuffle — hash
+  * clustering on the bucket, which also satisfies the latest-row window
+  * on (bucket, key) and, sorted by (bucket, key, seq), the writer's
+  * partition ordering — so two jobs under AQE. A [[readLatest]] lookup
+  * is the lookup's own job.
   *
   * 100 TB: per batch, write cost ∝ size of touched buckets, not table
   * size — with enough buckets that approaches the change volume, which
@@ -41,12 +51,13 @@ import graft.cdc.ChangeRecord
   */
 object PartitionedTable {
 
-  import MaterializedTable.{fs, latestWithTombstones, readPointer, readSmallFile, writePointer}
+  import MaterializedTable.{changeColumns, fs, latestWithTombstones, readParquet,
+    readPointer, readSmallFile, writePointer}
 
   private def bucketCol(buckets: Int) = pmod(hash(col("key")), lit(buckets))
 
   /** Parse a manifest body: header line `buckets\t<N>` (the persisted
-    * layout contract — see [[requireBuckets]]) + `<bucket>\t<dir>`
+    * layout contract — see [[currentManifest]]) + `<bucket>\t<dir>`
     * rows. The header is optional on read so pre-header tables still
     * open (they just skip the layout check). */
   private def parseManifest(text: String): (Option[Int], Map[Int, String]) = {
@@ -75,17 +86,23 @@ object PartitionedTable {
   def declaredBuckets(s: SparkSession, table: String): Option[Int] =
     readPointer(s, table).flatMap(m => readManifestNamed(s, table, m)._1)
 
-  /** FAIL FAST when a caller's bucket count disagrees with the one the
-    * table was written with: `pmod(hash(key), buckets)` routes keys,
-    * so a mismatched count silently splits a key's history across two
+  /** The current manifest (empty if none), resolving the pointer once
+    * and validating that same manifest's layout. FAILS FAST when the
+    * caller's bucket count disagrees with the one the table was
+    * written with: `pmod(hash(key), buckets)` routes keys, so a
+    * mismatched count silently splits a key's history across two
     * buckets — the upsert window then never sees the key's prior row
-    * and readLatest returns DUPLICATE rows per key (r10 review
-    * finding). The count is persisted in every manifest header. */
-  private def requireBuckets(s: SparkSession, table: String, buckets: Int): Unit =
-    declaredBuckets(s, table).foreach { d =>
-      if (d != buckets) throw new IllegalArgumentException(
-        s"$table was written with buckets=$d but caller passed buckets=$buckets — " +
-          "a mismatched bucket count splits keys across buckets and corrupts upserts")
+    * and readLatest returns DUPLICATE rows per key. */
+  private def currentManifest(s: SparkSession, table: String,
+      buckets: Int): Map[Int, String] =
+    readPointer(s, table).fold(Map.empty[Int, String]) { m =>
+      val (declared, entries) = readManifestNamed(s, table, m)
+      declared.foreach { d =>
+        if (d != buckets) throw new IllegalArgumentException(
+          s"$table was written with buckets=$d but caller passed buckets=$buckets — " +
+            "a mismatched bucket count splits keys across buckets and corrupts upserts")
+      }
+      entries
     }
 
   private def writeManifest(s: SparkSession, table: String, name: String,
@@ -99,18 +116,18 @@ object PartitionedTable {
     writePointer(s, table, name) // manifests immutable; pointer flips
   }
 
-  private def bucketPaths(table: String, m: Map[Int, String]): Seq[String] =
-    m.toSeq.sorted.map { case (b, v) => s"$table/$v/__b=$b" }
+  /** The listed buckets of `m` under the known schema; `__b` is
+    * recomputed from the key (partition-dir reads drop the partition
+    * column). */
+  private def readBuckets(s: SparkSession, table: String, buckets: Int,
+      m: Map[Int, String]): DataFrame =
+    readParquet(s, m.toSeq.sorted.map { case (b, v) => s"$table/$v/__b=$b" }: _*)
+      .withColumn("__b", bucketCol(buckets))
 
-  /** Current table state incl. tombstones (None before first batch).
-    * `__b` is recomputed from the key (partition-dir reads drop the
-    * partition column). */
+  /** Current table state incl. tombstones (None before first batch). */
   def readSnapshot(s: SparkSession, table: String, buckets: Int): Option[DataFrame] = {
-    requireBuckets(s, table, buckets)
-    val m = readManifest(s, table)
-    if (m.isEmpty) None
-    else Some(s.read.parquet(bucketPaths(table, m): _*)
-      .withColumn("__b", bucketCol(buckets)))
+    val m = currentManifest(s, table, buckets)
+    if (m.isEmpty) None else Some(readBuckets(s, table, buckets, m))
   }
 
   /** Current materialized state (tombstones filtered, bucket dropped). */
@@ -127,38 +144,28 @@ object PartitionedTable {
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: Dataset[ChangeRecord], batchId: Long) =>
         val s = batch.sparkSession
-        requireBuckets(s, table, buckets)
+        val manifest = currentManifest(s, table, buckets)
         // persisted: the touched-bucket collect AND the snapshot write
-        // both act on the micro-batch — unpersisted, a file-backed
-        // source would re-read and re-parse its segments twice per
-        // batch (r10 review finding)
-        val b = batch.toDF().withColumn("__b", bucketCol(buckets)).persist()
+        // both act on the micro-batch; unpersisted, a file-backed source
+        // would re-read and re-parse its segments twice per batch
+        val b = changeColumns(batch).withColumn("__b", bucketCol(buckets)).persist()
         try {
-          // the touched-bucket list is ≤ `buckets` ints — a bounded
-          // driver-side manifest decision, not per-row driver work
-          val touched = b.select("__b").distinct()
-            .collect().map(_.getInt(0)).sorted
-          val manifest = readManifest(s, table)
-          val priorPaths = touched
-            .flatMap(p => manifest.get(p).map(v => s"$table/$v/__b=$p"))
-          val prior =
-            if (priorPaths.isEmpty) None
-            else Some(s.read.parquet(priorPaths.toIndexedSeq: _*)
-              .withColumn("__b", bucketCol(buckets)))
-          val all = prior.map(_.unionByName(b)).getOrElse(b)
+          // ≤ `buckets` ints, deduplicated per partition inside the job
+          // that fills the cache (a distinct() would add an exchange)
+          val touched = b.select("__b").as(Encoders.scalaInt)
+            .mapPartitions(_.toSet.iterator)(Encoders.scalaInt)
+            .collect().distinct.sorted
+          val prior = manifest.filter { case (p, _) => touched.contains(p) }
+          val all =
+            if (prior.isEmpty) b
+            else readBuckets(s, table, buckets, prior).unionByName(b)
           val version = s"v${batchId}_${System.currentTimeMillis()}"
-          // task-per-bucket write (r17, guide §6): latestWithTombstones
-          // leaves the frame hash-partitioned by KEY, so a bare
-          // partitionBy("__b") fans every task across every touched
-          // bucket dir — tasks × buckets small files per batch, and the
-          // NEXT batch's prior read (plus compact's snapshot read) pays
-          // the listing + per-file open bill. One extra exchange of the
-          // final (key-latest) rows clusters each bucket into one file.
-          // sortWithinPartitions keeps within-file order deterministic
-          // (the staging convention — r16 ADVICE).
-          latestWithTombstones(all)
-            .repartition(col("__b"))
-            .sortWithinPartitions(col("key"), col("seq"))
+          // the batch's only exchange: clustering on the bucket puts each
+          // bucket in one task (one file per bucket, so the next prior
+          // read opens few files), the window on (bucket, key) reuses it,
+          // and the (bucket, key, seq) sort meets the writer's ordering
+          latestWithTombstones(all.repartition(col("__b")), col("__b"), col("key"))
+            .sortWithinPartitions(col("__b"), col("key"), col("seq"))
             .write.partitionBy("__b")
             .mode("overwrite").parquet(s"$table/$version")
           writeManifest(s, table, s"m${batchId}_${System.currentTimeMillis()}",
@@ -177,33 +184,28 @@ object PartitionedTable {
       horizon: Long): String = {
     val snap = readSnapshot(s, table, buckets)
       .getOrElse(throw new IllegalStateException(s"no snapshot at $table"))
-    val kept = snap.filter(!(col("op") === "d" && col("seq") <= horizon))
     val version = s"vc_${System.currentTimeMillis()}"
-    if (kept.isEmpty) {
-      // every surviving row was a GC-able tombstone: partitionBy writes
-      // no data files for an empty frame (read-back would fail schema
-      // inference) and an empty manifest reads as "no snapshot". Publish
-      // one schema-bearing empty bucket instead, so readLatest returns a
-      // legitimately empty table.
-      kept.drop("__b").repartition(1)
-        .write.mode("overwrite").parquet(s"$table/$version/__b=0")
-      writeManifest(s, table, s"mc_${System.currentTimeMillis()}",
-        Map(0 -> version), buckets)
-    } else {
-      kept.repartition(buckets, col("__b")).write.partitionBy("__b")
-        .mode("overwrite").parquet(s"$table/$version")
-      // manifest lists only buckets that still hold rows (a bucket whose
-      // every row was a dropped tombstone writes no dir). The written
-      // partition DIRS name those buckets exactly — a filesystem listing
-      // replaces the r16 form's full parquet re-read of the new version
-      // (one table-sized read job per compact saved; guide §1.2).
-      val present = fs(s, table)
-        .listStatus(new Path(s"$table/$version")).toSeq
-        .filter(st => st.isDirectory && st.getPath.getName.startsWith("__b="))
-        .map(_.getPath.getName.stripPrefix("__b=").toInt)
-      writeManifest(s, table, s"mc_${System.currentTimeMillis()}",
-        present.map(_ -> version).toMap, buckets)
-    }
+    snap.filter(!(col("op") === "d" && col("seq") <= horizon))
+      .repartition(buckets, col("__b")).write.partitionBy("__b")
+      .mode("overwrite").parquet(s"$table/$version")
+    // the written partition dirs name exactly the buckets that still
+    // hold rows (a bucket whose every row was a dropped tombstone
+    // writes no dir)
+    val present = fs(s, table)
+      .listStatus(new Path(s"$table/$version")).toSeq
+      .filter(st => st.isDirectory && st.getPath.getName.startsWith("__b="))
+      .map(_.getPath.getName.stripPrefix("__b=").toInt)
+    val manifest =
+      if (present.nonEmpty) present.map(_ -> version).toMap
+      else {
+        // every row was a GC-able tombstone: an empty manifest reads as
+        // "no snapshot", so publish one schema-bearing empty bucket and
+        // readLatest returns a legitimately empty table
+        s.emptyDataset(Encoders.product[ChangeRecord]).write
+          .mode("overwrite").parquet(s"$table/$version/__b=0")
+        Map(0 -> version)
+      }
+    writeManifest(s, table, s"mc_${System.currentTimeMillis()}", manifest, buckets)
     version
   }
 

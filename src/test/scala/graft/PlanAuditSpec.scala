@@ -117,6 +117,31 @@ class PlanAuditSpec extends AnyFunSuite {
     assert(shuffles.size <= 2, s"got ${shuffles.size} exchanges:\n$plan")
   }
 
+  test("bucketed upsert write is a single data shuffle") {
+    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+    import spark.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    def rec(k: Long, seq: Long) = cdc.ChangeRecord(k, seq, "u", "t", Some(1.0), seq)
+    val table = Scratch.dir("audit_upsert_tbl").toString
+    val ckpt = Scratch.dir("audit_upsert_ck").toString
+    val mem = MemoryStream[cdc.ChangeRecord]
+    val plans = SparkEvents.writePlans(spark) {
+      val q = sinks.PartitionedTable.upsertSink(mem.toDS(), table, ckpt, 8)
+      try {
+        mem.addData((0L until 100L).map(rec(_, 1L))); q.processAllAvailable()
+        // the second batch unions prior bucket files with the batch
+        mem.addData((0L until 10L).map(rec(_, 2L))); q.processAllAvailable()
+      } finally q.stop()
+    }
+    assert(plans.size === 2, s"expected one write per batch, got ${plans.size}")
+    // one hash exchange on the bucket serves the latest-row window and
+    // the partitioned writer alike
+    plans.foreach { plan =>
+      val shuffles = SparkEvents.collect(plan) { case e: ShuffleExchangeExec => e }
+      assert(shuffles.size === 1, s"got ${shuffles.size} exchanges:\n$plan")
+    }
+  }
+
   test("Zipf head/tail splits resolve the hot-word join as a broadcast") {
     // C29 (and C24's round-6 port): the top-1k head must join map-side —
     // a plan with zero BroadcastHashJoins would mean the whole Zipf

@@ -81,4 +81,60 @@ class CdcStreamSpec extends AnyFunSuite {
         s"sentinel row mismatch for $tsType")
     }
   }
+
+  test("the sentinel reaches the live stream dir by one rename, never half-written") {
+    import java.nio.file.{FileSystems, StandardWatchEventKinds => K}
+    import scala.jdk.CollectionConverters._
+    val dir = graft.Scratch.dir("sentinel_publish")
+    val ws = FileSystems.getDefault.newWatchService()
+    try {
+      dir.register(ws, K.ENTRY_CREATE, K.ENTRY_MODIFY)
+      CdcStream.publishSentinel(dir, org.apache.spark.sql.types.TimestampType)
+      val events = Iterator.continually(Option(ws.poll(500, java.util.concurrent.TimeUnit.MILLISECONDS)))
+        .takeWhile(_.isDefined).flatMap { k =>
+          val es = k.get.pollEvents().asScala.toList; k.get.reset(); es
+        }.toList
+      val (finalName, others) =
+        events.partition(_.context.toString == "01_sentinel.parquet")
+      // a direct write would show the final name created, then modified
+      assert(finalName.map(_.kind) === List(K.ENTRY_CREATE),
+        s"final name saw ${finalName.map(_.kind)}")
+      assert(others.forall(_.context.toString.startsWith(".")),
+        s"visible temp name: ${others.map(_.context)}")
+    } finally ws.close()
+    val visible = java.nio.file.Files.list(dir).iterator().asScala
+      .map(_.getFileName.toString).filterNot(_.startsWith(".")).toList
+    assert(visible === List("01_sentinel.parquet"))
+  }
+
+  test("footer guard decodes a TIMESTAMP(MILLIS) feed by its unit") {
+    import spark.implicits._
+    val key = "spark.sql.parquet.outputTimestampType"
+    def millisFeed(tag: String, at: String): String = {
+      val path = graft.Scratch.dir(s"guard_millis_$tag").resolve("feed").toString
+      val prior = spark.conf.getOption(key)
+      spark.conf.set(key, "TIMESTAMP_MILLIS")
+      try Seq(java.time.Instant.parse(at)).toDF("ts").coalesce(1).write.parquet(path)
+      finally prior.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+      path
+    }
+    val ok = millisFeed("ok", "2020-06-01T12:00:00Z")
+    CdcStream.assertEventTimeSane(spark, ok, spark.read.parquet(ok).schema)
+    val bad = millisFeed("bad", "1990-06-01T12:00:00Z")
+    val e = intercept[IllegalArgumentException] {
+      CdcStream.assertEventTimeSane(spark, bad, spark.read.parquet(bad).schema)
+    }
+    assert(e.getMessage.contains("1990-06-01T12:00:00Z"), e.getMessage)
+  }
+
+  test("footer guard scans a nested feed instead of reading it as empty") {
+    import spark.implicits._
+    val path = graft.Scratch.dir("guard_nested").resolve("feed").toString
+    Seq((java.time.Instant.parse("1970-01-02T00:00:00Z"), "a"))
+      .toDF("ts", "part").write.partitionBy("part").parquet(path)
+    val e = intercept[IllegalArgumentException] {
+      CdcStream.assertEventTimeSane(spark, path, spark.read.parquet(path).schema)
+    }
+    assert(e.getMessage.contains("pre-2000"), e.getMessage)
+  }
 }
