@@ -42,7 +42,7 @@ object Bench {
     // documented between-run drift (same-code totals swung ±25–75%
     // across a morning) now has to hit BOTH of a query's
     // time-separated blocks to inflate its best — the driver headline
-    // inherits the sf1 TimeAll pairwise-min protocol's robustness
+    // inherits the sf1 Probe pairwise-min protocol's robustness
     // instead of hoping one 5-run block lands in a quiet window.
     // pairwise_min_total below makes the basis machine-readable.
     val Runs = sys.env.getOrElse("SPARK_GRAFT_RUNS", "5").toInt

@@ -25,10 +25,6 @@ object Scratch {
     p
   }
 
-  /** First `.parquet` under `d`, with the directory stream CLOSED
-    * (bare `Files.list(...).iterator()` leaks the OS handle until GC —
-    * r9 ADVICE; the bench loop lists thousands of scratch dirs per
-    * run, so the leak is real, not stylistic). */
   /** Write `df` as ONE parquet file at `out/name.parquet` and return
     * its row count. The replica generators (dirty/skew/unicode/
     * long-doc/empty) all need single-FILE tables — the DuckDB oracle
@@ -50,6 +46,10 @@ object Scratch {
     df.sparkSession.read.parquet(dst.toString).count()
   }
 
+  /** First `.parquet` under `d`, with the directory stream CLOSED
+    * (bare `Files.list(...).iterator()` leaks the OS handle until GC —
+    * r9 ADVICE; the bench loop lists thousands of scratch dirs per
+    * run, so the leak is real, not stylistic). */
   def firstParquet(d: Path): Path = {
     val s = Files.list(d)
     try {

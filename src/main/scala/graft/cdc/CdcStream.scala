@@ -60,7 +60,7 @@ object CdcStream {
     * exactly the tuning a real deployment makes. An EXPLICITLY-set
     * session provider always wins: the conf is only defaulted when
     * absent, so StreamingStateStoreSpec still pins both providers to
-    * identical results, and TimeQuery's `k=v` overrides keep
+    * identical results, and `Probe`'s `k=v` overrides keep
     * working. */
   val RocksProvider: String =
     "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
@@ -83,7 +83,7 @@ object CdcStream {
   private val ChangelogConf =
     "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled"
 
-  private[cdc] def withStatePartitions[T](s: SparkSession,
+  private[graft] def withStatePartitions[T](s: SparkSession,
       defaultProvider: String = RocksProvider)(f: => T): T =
     // serialized under SessionConfLock: two runners racing the
     // set/restore on one shared session would otherwise restore stale
@@ -283,13 +283,6 @@ object CdcStream {
         })
   }
 
-  /** Guard against the silent unit-scale failure class: a feed whose
-    * declared schema misreads the on-disk int64 (nanos vs micros)
-    * yields event-times around 1970, and every window/join collapses
-    * while row counts stay plausible (round-8 postmortem). Re-read the
-    * feed in BATCH with the SAME declared schema + normalization and
-    * require its min event-time to be post-2000 — cheap (one small
-    * agg) and it turns silent garbage into a named failure. */
   /** Min `ts` in MICROS from the parquet FOOTER statistics of every
     * data file under `path` — column-chunk min/max answer the guard's
     * question from metadata on the driver, without a min-aggregation
@@ -363,6 +356,14 @@ object CdcStream {
   /** 2000-01-01T00:00:00Z in epoch micros — the sanity floor. */
   private val Year2000Micros = 946684800000000L
 
+  /** Guard against the silent unit-scale failure class: a feed whose
+    * declared schema misreads the on-disk int64 (nanos vs micros)
+    * yields event-times around 1970, and every window/join collapses
+    * while row counts stay plausible (round-8 postmortem). Read the
+    * feed's min event-time under the SAME declared schema +
+    * normalization — from the parquet footers when they can answer,
+    * else one small batch agg — and require it to be post-2000: silent
+    * garbage becomes a named failure. */
   private[cdc] def assertEventTimeSane(spark: SparkSession, path: String,
       schema: StructType): Unit = {
     val tsType = schema("ts").dataType

@@ -40,8 +40,8 @@ object Dedup {
     * DIFFERENT texts under one doc_id. Downstream, dedup_containment's
     * per-doc prefix window then ordered TIED (df, shingle) rows whose
     * `n` differed, and tie resolution followed shuffle arrival order —
-    * the reproduced 1-in-10 AQE-dependent 106-row swing
-    * (ContainmentHunt/ContainmentBisect, r10 "unreproduced anomaly").
+    * the reproduced 1-in-10 AQE-dependent 106-row swing (r10
+    * "unreproduced anomaly"; SCALING.md round 11).
     * The feeds now use disjoint trillion ranges — natural [0, 1e12),
     * exact copies [1e12, 2e12), fragments [2e12, 3e12), planted
     * near-vectors [1e12, 2e12) — and the shifted branches RAISE by
@@ -387,7 +387,7 @@ object Dedup {
     // shuffle_hash on the VERIFY joins only (r13, 2 GB-gate dig
     // part 3): the static planner elected this corpus-proportional
     // shingle frame as a broadcast build for both verify sides
-    // (2 × 130 MiB actual at sf1, PlanProbe executed inventory) —
+    // (2 × 130 MiB actual at sf1, executed-plan inventory) —
     // doc_id is unique per row, so the shuffled form has uniform
     // per-partition builds. The prefix ⋈ inverted-index join above
     // deliberately KEEPS its estimate-driven broadcast: its key is
@@ -472,7 +472,7 @@ object Dedup {
     // shuffle_hash on BOTH the keep join and the self-join (r13,
     // 2 GB-gate dig part 3): the static planner elected the 1.8M-row
     // EXPLODED gram frame as a broadcast build (288 MiB actual at sf1,
-    // PlanProbe executed inventory — the estimate is linear but ~30×
+    // executed-plan inventory — the estimate is linear but ~30×
     // under actual, so the flip survives SF doublings while the build
     // grows toward GB), and `keep` is NOT a broadcastable fallback:
     // distinct kept grams grow linearly with the corpus too (40 MiB
@@ -626,7 +626,7 @@ object Dedup {
     // BUILD side for both confirm joins — its static sizeInBytes is
     // ~30-60× under the real row bytes (shingle arrays behind a
     // column-pruned scan estimate), so the 10 MB threshold admits a
-    // 130 MiB ACTUAL driver build at sf1 (measured, PlanProbe executed
+    // 130 MiB ACTUAL driver build at sf1 (measured, executed-plan
     // inventory; ×2, one per join side) and the mis-election survives
     // to sf3-sf10 before the linear estimate crosses the threshold —
     // by then the build is 0.4-1.3 GB, a real-cluster driver kill, not

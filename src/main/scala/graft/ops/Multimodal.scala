@@ -355,7 +355,8 @@ object Multimodal {
       .select($"a.phash".as("h1"), $"b.phash".as("h2"))
   }
 
-  /** Dev-probe alias for the C38 pair set (ContractProbe). */
+  /** The C38 pair set before the contract's projection (SkewInputSpec,
+    * PlanAuditSpec). */
   private[graft] def phashPairsProbe(s: SparkSession, dir: String): DataFrame =
     pairsFromHashed(phashHashed(s, dir))
 

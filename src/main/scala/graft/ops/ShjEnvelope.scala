@@ -22,7 +22,7 @@ import org.apache.spark.sql.catalyst.plans.logical.{Filter, Join, LogicalPlan, P
   * per-task build exceeds [[BudgetBytes]]. The default is warn, not
   * fail: Catalyst's estimate for these scan-derived frames is linear
   * in the corpus but was measured ~30× UNDER the in-memory build at
-  * sf1 (PlanProbe executed inventory), so an estimate BREACH means the
+  * sf1 (executed-plan inventory), so an estimate BREACH means the
   * actual build is far past the envelope — while a hard fail on an
   * estimate would let planner quirks kill legitimate queries. The
   * enforce flag is for deployments that prefer dying at plan time to

@@ -346,7 +346,7 @@ object TextOps {
       .filter($"df" > 100).select($"h")
     // shuffle_hash (r13, 2 GB-gate dig part 3): the static planner
     // elected this 1.07M-row fingerprint frame as a broadcast build
-    // (96 MiB actual at sf1, PlanProbe executed inventory; linear
+    // (96 MiB actual at sf1, executed-plan inventory; linear
     // estimate ~20× under actual, so the flip survives SF doublings).
     // The df>100 anti-filter above bounds per-key rows, so the
     // shuffled self-join's per-partition builds are uniform.

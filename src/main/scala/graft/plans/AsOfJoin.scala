@@ -26,7 +26,7 @@ import org.apache.spark.sql.execution.{BinaryExecNode, SparkPlan}
   * numbers — the CDC domain); the reference's analog is replaying a
   * table against a position in the WAL.
   *
-  * Row-path audit (round 8, `tools/AsOfProbe` at sf1 — 201k left vs
+  * Row-path audit (round 8, at sf1 — 201k left vs
   * 799k right rows, identical output verified): under full
   * materialization (noop sink) this interpreted merge runs
   * 0.79–0.91 s vs 1.01–1.25 s for the best built-in equivalent

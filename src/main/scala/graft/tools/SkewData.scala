@@ -31,7 +31,7 @@ import org.apache.spark.sql.functions._
   * SAME skewed parquet — Spark and DuckDB must agree under skew, and
   * any cap/bound that silently DROPS data under a heavy hitter
   * diverges from the oracle's unconstrained SQL. Wall-time per query
-  * (tools/TimeAll) is the quadratic-blowup check: an all-pairs path
+  * (tools/Probe) is the quadratic-blowup check: an all-pairs path
   * hidden behind a usually-small group explodes in time, not just in
   * rows. Slices key on id % 23 (prime — no alignment with mod-2^k
   * bucketing), disjoint from nothing: this replica is skew-only, the

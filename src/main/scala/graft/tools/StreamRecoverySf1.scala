@@ -1,17 +1,20 @@
-package graft.cdc
+package graft.tools
 
 import java.nio.file.{Files, Path}
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
-/** r16 gate tool (r15 verdict task 7): kill/restart exactly-once for
-  * the stateful latest-state stream AT SWEEP SCALE — the sf1 events
-  * feed, under the low-memory gate environment
-  * (`SPARK_DRIVER_MEM=2g SPARK_MASTER=local[8] sbt "runMain
-  * graft.cdc.StreamRecoverySf1 /tmp/sf1"`). StreamRecoverySpec proves
-  * the recovery contract at spec scale (3-row fixtures); this runs the
+import graft.cdc.{ApplyChanges, CdcStream, ChangeFeed, ChangeRecord}
+
+/** Gate: kill/restart exactly-once for the stateful latest-state
+  * stream AT SWEEP SCALE — the sf1 events feed, under the low-memory
+  * gate environment (`SPARK_DRIVER_MEM=2g SPARK_GRAFT_CPUS=8 sbt
+  * "runMain graft.tools.StreamRecoverySf1 /tmp/sf1"`; the session is
+  * `GraftSession.local` on `SPARK_GRAFT_CPUS` cores, default all).
+  * StreamRecoverySpec proves the recovery contract at spec scale
+  * (3-row fixtures); this runs the
   * same phase/kill/restart protocol where RocksDB state actually holds
   * the sweep's key population and the heap is tight enough that a
   * recovery-path regression shows up as spilled/corrupt state or an
@@ -54,12 +57,7 @@ object StreamRecoverySf1 {
 
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/tmp/sf1")
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[8]"))
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.GraftSession.local(Probe.cpus)
     spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
 

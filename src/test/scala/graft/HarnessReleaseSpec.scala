@@ -3,7 +3,7 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Pin for [[GraftSession.release]] — the between-queries cleanup every
-  * sequential harness runner (Bench/Verify/TimeQuery/TimeAll) calls.
+  * sequential harness runner (Bench/Verify/tools.Probe) calls.
   *
   * Root cause it guards (r11 low-memory sweep): every bounded streaming
   * runner materializes into a uniquely-named `graft_*` memory-sink temp

@@ -1,6 +1,6 @@
 package graft
 
-import java.util.concurrent.{ConcurrentLinkedQueue, CountDownLatch, TimeUnit}
+import java.util.concurrent.ConcurrentLinkedQueue
 import java.util.concurrent.atomic.AtomicInteger
 
 import scala.jdk.CollectionConverters._
@@ -12,33 +12,16 @@ import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.command.DataWritingCommandExec
 import org.apache.spark.sql.util.QueryExecutionListener
 
+import graft.tools.Probe
+
 /** Exact job counts and write plans from the listener bus. Listener
   * events arrive asynchronously; [[drain]] runs a marker job and waits
   * until it is delivered, and the bus delivers events in order, so every
-  * event posted before it has been seen. */
+  * event posted before it has been seen (marker jobs are not counted). */
 object SparkEvents extends AdaptiveSparkPlanHelper {
 
-  private val MarkerKey = "graft.test.marker"
-
-  private def isMarker(e: SparkListenerJobStart): Boolean =
-    e.properties != null && e.properties.getProperty(MarkerKey) != null
-
   /** Block until every listener event posted so far is delivered. */
-  def drain(spark: SparkSession): Unit = {
-    val sc = spark.sparkContext
-    val marker = java.util.UUID.randomUUID().toString
-    val seen = new CountDownLatch(1)
-    val l = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (isMarker(e) && e.properties.getProperty(MarkerKey) == marker) seen.countDown()
-    }
-    sc.addSparkListener(l)
-    try {
-      sc.setLocalProperty(MarkerKey, marker)
-      try sc.parallelize(Seq(0), 1).count() finally sc.setLocalProperty(MarkerKey, null)
-      assert(seen.await(60, TimeUnit.SECONDS), "listener bus did not drain")
-    } finally sc.removeSparkListener(l)
-  }
+  def drain(spark: SparkSession): Unit = Probe.drainListenerBus(spark)
 
   /** Spark jobs `body` runs, on any thread (streams included). */
   def jobCount(spark: SparkSession)(body: => Unit): Int = {
@@ -47,7 +30,7 @@ object SparkEvents extends AdaptiveSparkPlanHelper {
     val n = new AtomicInteger
     val l = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (!isMarker(e)) n.incrementAndGet()
+        if (!Probe.isMarker(e)) n.incrementAndGet()
     }
     sc.addSparkListener(l)
     try { body; drain(spark); n.get } finally sc.removeSparkListener(l)

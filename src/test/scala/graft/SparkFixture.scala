@@ -2,14 +2,13 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** One shared local session for all suites (forked test JVM). */
+/** One shared local session for all suites (forked test JVM), built
+  * the way the engine ships it: [[GraftSession.builder]], so the graft
+  * extensions plan every query the specs run. */
 object SparkFixture {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
+  lazy val spark: SparkSession = GraftSession.builder("local[4]", 4)
     .appName("graft-test")
-    .config("spark.sql.shuffle.partitions", "4")
     .config("spark.ui.enabled", "false")
-    .config("spark.sql.session.timeZone", "UTC")
     .getOrCreate()
 
   val sf0001 = "/root/testdata/sf0.001"

@@ -1,5 +1,7 @@
 package graft.plans
 
+import org.apache.spark.sql.GraftSqlBridge
+import org.apache.spark.sql.execution.FileSourceScanExec
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.scalatest.funsuite.AnyFunSuite
@@ -51,10 +53,11 @@ class AsOfJoinSpec extends AnyFunSuite {
   }
 
   test("merge exec matches the union+last(ignoreNulls) window formulation on a random feed") {
-    // the AsOfProbe equivalence, pinned: both formulations must agree
-    // row-for-row on a seeded feed dense in the adversarial shapes —
-    // (key, ts) duplicates on both sides, left-only and right-only
-    // keys, and exact ts ties across sides (inclusive at-or-before)
+    // the round-8 row-path audit's equivalence, pinned: both
+    // formulations must agree row-for-row on a seeded feed dense in
+    // the adversarial shapes — (key, ts) duplicates on both sides,
+    // left-only and right-only keys, and exact ts ties across sides
+    // (inclusive at-or-before)
     import spark.implicits._
     import org.apache.spark.sql.expressions.Window
     import org.apache.spark.sql.functions._
@@ -119,6 +122,45 @@ class AsOfJoinSpec extends AnyFunSuite {
     // ...while the merge's own key/ts/tie and the consumed value stay
     assert(ln.contains("p_user") && ln.contains("p_ts") && ln.contains("p_id"))
     assert(Seq("s_user", "s_ts", "s_id", "s_value").forall(rn.contains), rn)
+  }
+
+  test("GraftExtensions alone plans the as-of join, pruned to the scans' ReadSchema") {
+    // the fixture is the shipped session: with the AsOf.register
+    // fallback's strategy and rule removed, the extension's own must
+    // plan the operator, and the columns nothing consumes must leave
+    // the file scans even behind the state side's Union
+    import spark.implicits._
+    val ev = graft.Tables.events(spark, sf0001)
+    val l = ev.filter($"event_type" === "purchase")
+      .select($"event_id".as("p_id"), $"user_id".as("p_user"),
+        org.apache.spark.sql.functions.expr("unix_micros(ts)").as("p_ts"),
+        $"props".as("p_props"))
+    val feed = ev.filter($"event_type" =!= "purchase")
+      .select($"event_id".as("s_id"), $"user_id".as("s_user"),
+        org.apache.spark.sql.functions.expr("unix_micros(ts)").as("s_ts"),
+        $"value".as("s_value"), $"props".as("s_props"))
+    val r = feed.filter($"s_id" % 2 === 0).union(feed.filter($"s_id" % 2 === 1))
+    def attr(df: org.apache.spark.sql.DataFrame, n: String) =
+      df.queryExecution.analyzed.output.find(_.name == n).get
+    val exp = spark.experimental
+    val saved = (exp.extraStrategies, exp.extraOptimizations)
+    exp.extraStrategies = Nil
+    exp.extraOptimizations = Nil
+    try {
+      val joined = GraftSqlBridge.ofRows(spark, AsOfJoinPlan(
+          l.queryExecution.analyzed, r.queryExecution.analyzed,
+          attr(l, "p_user"), attr(l, "p_ts"), attr(l, "p_id"),
+          attr(r, "s_user"), attr(r, "s_ts"), attr(r, "s_id")))
+        .select($"p_id", $"s_id", $"s_value")
+      val plan = joined.queryExecution.sparkPlan
+      assert(plan.collect { case e: AsOfJoinExec => e }.size === 1, plan)
+      val reads = plan.collect { case s: FileSourceScanExec => s.requiredSchema.fieldNames.toSeq }
+      assert(reads.size === 3, plan)
+      reads.foreach(cols => assert(!cols.contains("props"), s"scan reads $cols"))
+    } finally {
+      exp.extraStrategies = saved._1
+      exp.extraOptimizations = saved._2
+    }
   }
 
   test("physical plan is the custom merge-scan exec with co-partitioned sides") {
