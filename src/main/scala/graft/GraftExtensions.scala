@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.SparkSessionExtensions
 
-import graft.plans.{AsOfColumnPruning, AsOfStrategy}
+import graft.plans.AsOfStrategy
 
 /** `SparkSessionExtensions` entry point — the supported way to add the
   * engine's planner surface to ANY session, including ones the library
@@ -16,11 +16,6 @@ import graft.plans.{AsOfColumnPruning, AsOfStrategy}
   * remains as the idempotent fallback for externally-built sessions
   * that didn't load the extension. */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(ext: SparkSessionExtensions): Unit = {
+  override def apply(ext: SparkSessionExtensions): Unit =
     ext.injectPlannerStrategy(_ => AsOfStrategy)
-    // runs inside the operator-optimization fixed point, so the
-    // Projects it inserts under AsOfJoinPlan are pushed on to the
-    // scans by Catalyst's own ColumnPruning in the same batch
-    ext.injectOptimizerRule(_ => AsOfColumnPruning)
-  }
 }

@@ -2,6 +2,7 @@ package graft.cdc
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.OutputMode
 import org.apache.spark.sql.types._
 import scala.jdk.CollectionConverters._
 
@@ -171,27 +172,21 @@ object CdcQueries {
     raw.withColumn("ts", graft.Tables.eventTs(schema("ts").dataType))
   }
 
-  private def changeStream(s: SparkSession, dir: String): Dataset[ChangeRecord] = {
-    import s.implicits._
-    // same well-formedness predicate as the batch synthesis — the
-    // framing fields are mandatory on the wire (ChangeFeed contract)
-    rawEventStream(s, dir)
-      .filter(ChangeFeed.wellFormedSql)
-      .select($"user_id".as("key"), $"event_id".as("seq"),
-        when($"event_type" === "signup", "i").when($"event_type" === "error", "d")
-          .otherwise("u").as("op"),
-        $"event_type", $"value", unix_micros($"ts").as("tsMicros"))
-      .as[ChangeRecord]
-  }
+  /** The latest-state table of a materialized change feed, in the
+    * shape every latest-state query reports. */
+  private def lastState(table: DataFrame): DataFrame =
+    table.select(col("key").as("user_id"), col("event_type").as("last_event_type"),
+        col("value").as("last_value"), col("seq").as("last_seq"),
+        date_format(timestamp_micros(col("tsMicros")), tsFmt).as("last_ts"))
+      .orderBy(col("user_id"))
 
-  def streamUpserts(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    CdcStream.runLatestStateBounded(s, changeStream(s, dir))
-      .select($"key".as("user_id"), $"event_type".as("last_event_type"),
-        $"value".as("last_value"), $"seq".as("last_seq"),
-        date_format(timestamp_micros($"tsMicros"), tsFmt).as("last_ts"))
-      .orderBy($"user_id")
-  }
+  /** The change feed as a stream — the batch feed's mapping, contract
+    * and all, over [[rawEventStream]]. */
+  private def changeStream(s: SparkSession, dir: String): Dataset[ChangeRecord] =
+    ChangeFeed.records(ChangeFeed.changes(rawEventStream(s, dir)))
+
+  def streamUpserts(s: SparkSession, dir: String): DataFrame =
+    lastState(CdcStream.runLatestStateBounded(s, changeStream(s, dir)))
 
   // ---------------------------------------------------------------- A8
   def streamWindowed(s: SparkSession, dir: String): DataFrame = {
@@ -398,16 +393,13 @@ object CdcQueries {
     * up without restarting the stream. */
   def streamEnrich(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val name = "graft_enrich_" + java.util.UUID.randomUUID().toString.replace("-", "")
     val cust = graft.Tables.table(s, dir, "customer")
       .select($"c_custkey", $"c_name", $"c_mktsegment")
     val enriched = rawEventStream(s, dir)
       .select($"event_id", $"user_id", $"event_type", $"value")
       .join(broadcast(cust), $"user_id" === $"c_custkey")
-    val q = enriched.writeStream
-      .outputMode("append").format("memory").queryName(name).start()
-    try q.processAllAvailable() finally q.stop()
-    s.table(name)
+    CdcStream.runToMemorySink(s, enriched, OutputMode.Append, "graft_enrich_",
+        provider = None)
       .select($"event_id", $"user_id", $"c_name", $"c_mktsegment", $"value")
       .orderBy($"event_id")
   }
@@ -989,7 +981,7 @@ object CdcQueries {
     segDir
   }
 
-  /** A22 stage 2, factored (r13): decode a stream of binary pgoutput
+  /** A22 stage 2: decode a stream of binary pgoutput
     * messages (column `msg`) and materialize latest-state — shared
     * verbatim by the file transport (A22's registered query) and the
     * loopback-TCP transport (PgWireTcpSpec), which is the point: the
@@ -1013,11 +1005,7 @@ object CdcQueries {
         element_at($"d.cells", 3).cast("double").as("value"),
         coalesce(element_at($"d.cells", 4).cast("long"), lit(0L)).as("tsMicros"))
       .as[ChangeRecord]
-    CdcStream.runLatestStateBounded(s, decoded)
-      .select($"key".as("user_id"), $"event_type".as("last_event_type"),
-        $"value".as("last_value"), $"seq".as("last_seq"),
-        date_format(timestamp_micros($"tsMicros"), tsFmt).as("last_ts"))
-      .orderBy($"user_id")
+    lastState(CdcStream.runLatestStateBounded(s, decoded))
   }
 
   // --------------------------------------------------------------- A23
@@ -1069,11 +1057,7 @@ object CdcQueries {
         coalesce(ChangeEventFiles.typedCell($"after", "ts_us", "bigint"),
           lit(0L)).as("tsMicros"))
       .as[ChangeRecord]
-    CdcStream.runLatestStateBounded(s, decoded)
-      .select($"key".as("user_id"), $"event_type".as("last_event_type"),
-        $"value".as("last_value"), $"seq".as("last_seq"),
-        date_format(timestamp_micros($"tsMicros"), tsFmt).as("last_ts"))
-      .orderBy($"user_id")
+    lastState(CdcStream.runLatestStateBounded(s, decoded))
   }
 
   // --------------------------------------------------------------- A24
@@ -1148,11 +1132,7 @@ object CdcQueries {
         $"after.value".as("value"),
         coalesce($"after.ts_us", lit(0L)).as("tsMicros"))
       .as[ChangeRecord]
-    CdcStream.runLatestStateBounded(s, decoded)
-      .select($"key".as("user_id"), $"event_type".as("last_event_type"),
-        $"value".as("last_value"), $"seq".as("last_seq"),
-        date_format(timestamp_micros($"tsMicros"), tsFmt).as("last_ts"))
-      .orderBy($"user_id")
+    lastState(CdcStream.runLatestStateBounded(s, decoded))
   }
 
   // --------------------------------------------------------------- A34
@@ -1220,7 +1200,7 @@ object CdcQueries {
         flush()
         Iterator.single(written)
       }.collect().sum // not .reduce: an EMPTY feed has zero partitions and
-      // Dataset.reduce throws "empty collection" (r11 empty-input sweep)
+      // Dataset.reduce throws "empty collection"
     val vSchema = StructType(Seq(
       StructField("key", LongType), StructField("seq", LongType),
       StructField("op", StringType), StructField("event_type", StringType),
@@ -1231,14 +1211,34 @@ object CdcQueries {
         $"r.event_type".as("event_type"), $"r.value".as("value"),
         $"r.ts_us".as("tsMicros"))
       .as[ChangeRecord]
-    CdcStream.runLatestStateBounded(s, decoded)
-      .select($"key".as("user_id"), $"event_type".as("last_event_type"),
-        $"value".as("last_value"), $"seq".as("last_seq"),
-        date_format(timestamp_micros($"tsMicros"), tsFmt).as("last_ts"))
-      .orderBy($"user_id")
+    lastState(CdcStream.runLatestStateBounded(s, decoded))
   }
 
   // --------------------------------------------------------------- A26
+  /** Split the batch change feed into two seq-halves written as two
+    * parquet files under one scratch dir — a deterministic 2-micro-batch
+    * stream when read with maxFilesPerTrigger=1 (shared by A26/A27). */
+  private def twoBatchChangeStream(s: SparkSession, dir: String,
+      tag: String): Dataset[ChangeRecord] = {
+    import s.implicits._
+    val changes = ChangeFeed.records(ChangeFeed.fromEvents(s, dir))
+    // Option decode: max() on an EMPTY feed is NULL; cut 0 -> two empty
+    // halves -> two empty batches -> empty table, the defined semantics
+    val cut = changes.agg(floor(max($"seq") / 2).cast("long"))
+      .as[Option[Long]].head().getOrElse(0L)
+    // null-seq rows are dropped by name (a tag's otherwise() would
+    // route them into the last batch; well-formed feeds carry none, seq
+    // is framing-mandatory). Sorting each file by seq keeps row order
+    // deterministic for latestWithTombstones' seq-only tie-break; batch
+    // ORDER is the point of the stream (v0 = first half).
+    val inDir = CdcStream.stageBatches(changes.filter($"seq".isNotNull).toDF(),
+      when($"seq" <= cut, "00").otherwise("01"), Seq("00", "01"),
+      s"graft_$tag", $"seq")
+    s.readStream.schema(changes.schema)
+      .option("maxFilesPerTrigger", "1").parquet(inDir.toString)
+      .as[ChangeRecord]
+  }
+
   /** Time travel over the MVCC upsert sink: the feed streams through
     * [[graft.sinks.MaterializedTable.upsertSink]] in two micro-batches
     * (split at the median LSN), producing immutable snapshots v0 and
@@ -1248,84 +1248,15 @@ object CdcQueries {
     * as-of-v0 row (null if the key didn't exist yet). This is the
     * reader's side of snapshot isolation: a v0 reader is undisturbed
     * by the v1 write. The feed-split scalar is bounded-harness prep;
-    * the operator itself (snapshot write/read/join) is driver-free,
+    * the operator itself (snapshot write/read/join) runs on executors,
     * one key shuffle per side. */
-  /** Split the batch change feed into two seq-halves written as two
-    * parquet files under one scratch dir — a deterministic 2-micro-batch
-    * stream when read with maxFilesPerTrigger=1 (shared by A26/A27). */
-  private def twoBatchChangeStream(s: SparkSession, dir: String,
-      tag: String): Dataset[ChangeRecord] = {
-    import s.implicits._
-    val changes = ChangeFeed.fromEvents(s, dir)
-      .select($"key", $"seq", $"op", $"event_type", $"value",
-        expr("unix_micros(ts)").as("tsMicros"))
-    // Option decode: max() on an EMPTY feed is NULL and the bare Long
-    // decode crashed (r11 empty-input sweep); cut 0 -> two empty halves
-    // -> two empty batches -> empty table, the defined semantics
-    val cut = changes.agg(floor(max($"seq") / 2).cast("long"))
-      .as[Option[Long]].head().getOrElse(0L)
-    val inDir = graft.Scratch.dir(s"graft_${tag}_in")
-    // ONE write job for both halves (r16 — the r14 neardup staging
-    // shave ported): repartition by the half tag, partitionBy lands
-    // each half in its own dir, moves rename into arrival order. An
-    // empty half (empty feed) writes no partition dir — stage an
-    // empty single-file parquet so the stream still sees two files.
-    locally {
-      val tmp = graft.Scratch.dir(s"graft_${tag}_stage")
-      // null-seq rows are dropped EXPLICITLY (r16 ADVICE): the pre-r16
-      // per-half range filters (seq <= cut / seq > cut) silently dropped
-      // them from both halves, while the when-chain's otherwise() would
-      // route them into the last batch — a silent semantic change on a
-      // feed that ever carries null seqs (well-formed feeds never do:
-      // seq is framing-mandatory per the ChangeRecord contract).
-      // sortWithinPartitions($"b", $"seq") keeps within-file row order
-      // deterministic (file order would otherwise be shuffle-fetch
-      // order; latestWithTombstones breaks ties by seq only, so a
-      // duplicate (key, seq) in a feed would resolve
-      // nondeterministically). Leading with the partition column meets
-      // the writer's required ordering, so it adds no sort of its own.
-      changes.filter($"seq".isNotNull)
-        .withColumn("b", when($"seq" <= cut, "00").otherwise("01"))
-        .repartition($"b")
-        .sortWithinPartitions($"b", $"seq")
-        .write.mode("overwrite").partitionBy("b").parquet(tmp.toString)
-      Seq("00", "01").zipWithIndex.foreach { case (name, i) =>
-        val dst = inDir.resolve(s"$name.parquet")
-        val srcDir = tmp.resolve(s"b=$name")
-        if (java.nio.file.Files.isDirectory(srcDir))
-          java.nio.file.Files.move(graft.Scratch.onlyParquet(srcDir), dst)
-        else {
-          val e = graft.Scratch.dir(s"graft_${tag}_empty_$name")
-          changes.limit(0).coalesce(1).write.mode("overwrite")
-            .parquet(e.toString)
-          java.nio.file.Files.move(graft.Scratch.firstParquet(e), dst)
-        }
-        // both halves leave ONE write job with tied mtimes, and batch
-        // ORDER is the whole point of the 2-batch stream (v0 = first
-        // half) — pin strictly increasing mtimes (the ingest/neardup
-        // convention) so FileStreamSource can't tie-reorder
-        java.nio.file.Files.setLastModifiedTime(dst,
-          java.nio.file.attribute.FileTime.fromMillis(1000000L + i * 60000L))
-      }
-    }
-    val schema = StructType(Seq(
-      StructField("key", LongType), StructField("seq", LongType),
-      StructField("op", StringType), StructField("event_type", StringType),
-      StructField("value", DoubleType), StructField("tsMicros", LongType)))
-    s.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1").parquet(inDir.toString)
-      .as[ChangeRecord]
-  }
-
   def timeTravel(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val stream = twoBatchChangeStream(s, dir, "tt")
     val table = graft.Scratch.dir("graft_tt_tbl").toString
     val ckpt = graft.Scratch.dir("graft_tt_ck").toString
-    CdcStream.withStatePartitions(s) {
-      val q = graft.sinks.MaterializedTable.upsertSink(stream, table, ckpt)
-      try q.processAllAvailable() finally q.stop()
-    }
+    CdcStream.drain(CdcStream.startWithStateConf(s)(
+      graft.sinks.MaterializedTable.upsertSink(stream, table, ckpt)))
     val vs = graft.sinks.MaterializedTable.versions(s, table)
     val v0 = graft.sinks.MaterializedTable.readVersion(s, table, vs.head)
       .filter($"op" =!= "d")
@@ -1458,18 +1389,12 @@ object CdcQueries {
     val stream = twoBatchChangeStream(s, dir, "cpt")
     val table = graft.Scratch.dir("graft_cpt_tbl").toString
     val ckpt = graft.Scratch.dir("graft_cpt_ck").toString
-    CdcStream.withStatePartitions(s) {
-      val q = graft.sinks.PartitionedTable.upsertSink(stream, table, ckpt, Buckets)
-      try q.processAllAvailable() finally q.stop()
-    }
+    CdcStream.drain(CdcStream.startWithStateConf(s)(
+      graft.sinks.PartitionedTable.upsertSink(stream, table, ckpt, Buckets)))
     val horizon = ChangeFeed.fromEvents(s, dir)
       .agg(max($"seq")).as[Option[Long]].head().getOrElse(0L)
     graft.sinks.PartitionedTable.compact(s, table, Buckets, horizon)
-    graft.sinks.PartitionedTable.readLatest(s, table, Buckets)
-      .select($"key".as("user_id"), $"event_type".as("last_event_type"),
-        $"value".as("last_value"), $"seq".as("last_seq"),
-        date_format(timestamp_micros($"tsMicros"), tsFmt).as("last_ts"))
-      .orderBy($"user_id")
+    lastState(graft.sinks.PartitionedTable.readLatest(s, table, Buckets))
   }
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(

@@ -2,9 +2,9 @@ package graft.cdc
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery}
 import org.apache.spark.sql.types.{LongType, StructType, TimestampNTZType}
 
 /** One change-feed record in flight (micros instead of Timestamp keeps
@@ -29,67 +29,54 @@ object CdcStream {
 
   /** Stateful-stream partition count. `spark.sql.shuffle.partitions`
     * at stream START fixes the state-store count for the life of the
-    * checkpoint, and each store pays per-batch commit overhead — so
-    * size it to STATE volume, not to the batch shuffle default
+    * checkpoint, and each store pays per-batch commit overhead — so it
+    * is sized to STATE volume, not to the batch shuffle default
     * (measured at sf0.1: stream-stream join 8.5 s @ 32 stores → 4.2 s
-    * @ 8; a cluster with large state raises it instead). Bounded
-    * runners scope the setting to the streaming query and restore.
-    * Env-overridable so deployments (and the SCALING.md sf1
-    * measurement) can size it to state volume without a rebuild;
-    * validated here so a malformed value fails by NAME, not as an
-    * ExceptionInInitializerError at the first streaming query. */
-  val StatePartitions: Int = {
-    val raw = sys.env.getOrElse("GRAFT_STATE_PARTITIONS", "8")
-    val n = raw.toIntOption.getOrElse(throw new IllegalArgumentException(
-      s"GRAFT_STATE_PARTITIONS must be a positive int, got '$raw'"))
-    require(n > 0, s"GRAFT_STATE_PARTITIONS must be positive, got $n")
-    n
-  }
+    * @ 8; a cluster with large state raises it instead). */
+  val StatePartitions = 8
 
-  /** Production state-store provider, the scaffold DEFAULT for the
-    * KEYED-STATE runners since r11 (r10 verdict task 6: SCALING.md
-    * measured RocksDB ~25% faster at 1M-event flatMapGroupsWithState
-    * state, and SURVEY §3 names it the production choice). The
-    * STREAM-STREAM JOIN runner keeps the HDFS-backed provider: the
-    * same r11 measurement pass found the join 2.8× SLOWER under
-    * RocksDB at sf1 (5.7 s vs 15.8 s warm) — a symmetric join
-    * maintains four stores per side with several gets/puts per input
-    * row, and the per-op JNI overhead dominates at this state shape
-    * where the keyed runners' one-get-one-put profile does not. Both
-    * measurements in SCALING.md round-11; per-runner choice is
-    * exactly the tuning a real deployment makes. An EXPLICITLY-set
-    * session provider always wins: the conf is only defaulted when
-    * absent, so StreamingStateStoreSpec still pins both providers to
-    * identical results, and `Probe`'s `k=v` overrides keep
-    * working. */
+  /** Production state-store provider, the default for the KEYED-STATE
+    * runners: SCALING.md measured RocksDB ~25% faster at 1M-event
+    * flatMapGroupsWithState state, and SURVEY §3 names it the
+    * production choice. The STREAM-STREAM JOIN runner keeps the
+    * HDFS-backed provider: the same measurement pass found the join
+    * 2.8× SLOWER under RocksDB at sf1 (5.7 s vs 15.8 s warm) — a
+    * symmetric join maintains four stores per side with several
+    * gets/puts per input row, and the per-op JNI overhead dominates at
+    * that state shape where the keyed runners' one-get-one-put profile
+    * does not. An EXPLICITLY-set session provider always wins: the
+    * conf is only defaulted when absent, so StreamingStateStoreSpec
+    * still pins both providers to identical results, and `Probe`'s
+    * `k=v` overrides keep working. */
   val RocksProvider: String =
     "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
   val HdfsProvider: String =
     "org.apache.spark.sql.execution.streaming.state.HDFSBackedStateStoreProvider"
   private val ProviderConf = "spark.sql.streaming.stateStore.providerClass"
-  /** RocksDB changelog checkpointing, scaffold-defaulted ON (r16
-    * optimization pass): the default full-snapshot mode uploads every
-    * store's SST set synchronously inside EVERY micro-batch commit —
-    * measured at sf0.1 as ~1/3 of the whole stateful-runner floor
-    * (5-runner A/B: 20.6 s full-snapshot vs 13.8 s changelog, same
-    * window; sf1 warm-run parity 24.8 vs 24.6 s, so the win is pure
-    * per-commit fixed cost, not a small-state artifact). Changelog
+  /** RocksDB changelog checkpointing, defaulted ON: the full-snapshot
+    * mode uploads every store's SST set synchronously inside EVERY
+    * micro-batch commit — measured at sf0.1 as ~1/3 of the whole
+    * stateful-runner floor (5-runner A/B: 20.6 s full-snapshot vs
+    * 13.8 s changelog; sf1 warm-run parity 24.8 vs 24.6 s, so the win
+    * is per-commit fixed cost, not a small-state artifact). Changelog
     * mode commits the per-batch delta and defers SST snapshots to the
-    * background maintenance thread — the documented production
-    * trade (faster commits, recovery replays changelog since the last
-    * snapshot). Explicit session conf always wins, same contract as
-    * the provider default above; recovery-across-restart is re-proven
-    * under the flag by StreamRecoverySpec/StreamRecoverySf1. */
+    * background maintenance thread (faster commits; recovery replays
+    * the changelog since the last snapshot — re-proven by
+    * StreamRecoverySpec/StreamRecoverySf1). Explicit session conf
+    * always wins, same contract as the provider default. */
   private val ChangelogConf =
     "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled"
 
-  private[graft] def withStatePartitions[T](s: SparkSession,
-      defaultProvider: String = RocksProvider)(f: => T): T =
-    // serialized under SessionConfLock: two runners racing the
-    // set/restore on one shared session would otherwise restore stale
-    // widths or run under each other's state-partition count (r11
-    // concurrency audit; ConcurrencySpec races two runners and pins
-    // both results + the restored conf)
+  /** Start a stateful query under the state conf: [[StatePartitions]]
+    * shuffle partitions, `provider` and changelog checkpointing unless
+    * the session sets them explicitly. A streaming query clones its
+    * session when it is constructed inside `start()`, so the conf has
+    * to hold only across `start` — it is set and restored there, under
+    * [[graft.SessionConfLock]] so two runners starting on one session
+    * cannot restore each other's values, and the drain runs unlocked
+    * on the session's own conf. */
+  private[graft] def startWithStateConf(s: SparkSession,
+      provider: String = RocksProvider)(start: => StreamingQuery): StreamingQuery =
     graft.SessionConfLock.synchronized {
       val prev = s.conf.get("spark.sql.shuffle.partitions")
       // conf.get(key, fallback) returns the fallback iff the key is not
@@ -97,29 +84,74 @@ object CdcStream {
       val explicitProvider = s.conf.get(ProviderConf, "")
       val explicitChangelog = s.conf.get(ChangelogConf, "")
       s.conf.set("spark.sql.shuffle.partitions", StatePartitions.toString)
-      if (explicitProvider.isEmpty) s.conf.set(ProviderConf, defaultProvider)
+      if (explicitProvider.isEmpty) s.conf.set(ProviderConf, provider)
       if (explicitChangelog.isEmpty) s.conf.set(ChangelogConf, "true")
-      try f finally {
+      try start finally {
         s.conf.set("spark.sql.shuffle.partitions", prev)
         if (explicitProvider.isEmpty) s.conf.unset(ProviderConf)
         if (explicitChangelog.isEmpty) s.conf.unset(ChangelogConf)
       }
     }
 
-  /** Shared bounded-run scaffold: start `df` into a uniquely-named
-    * memory sink under [[StatePartitions]], drain, stop, and return
-    * the sink table — the sequence every bounded runner repeats
-    * (factored in r10; a drain-behavior fix now lands in one place). */
-  private def runToMemorySink(spark: SparkSession, df: DataFrame,
+  /** Run a bounded query to completion and stop it. `punctuate`, when
+    * given, runs once the available data has drained, and whatever it
+    * publishes into the source is drained in turn. */
+  private[graft] def drain(q: StreamingQuery,
+      punctuate: Option[() => Unit] = None): Unit =
+    try {
+      q.processAllAvailable()
+      punctuate.foreach { p => p(); q.processAllAvailable() }
+    } finally q.stop()
+
+  /** Drain `df` into a uniquely-named memory sink (the `graft_*` views
+    * [[graft.GraftSession.release]] drops) and return the sink table.
+    * `provider` None starts the query on the session conf as it is;
+    * Some starts it under [[startWithStateConf]]. */
+  private[graft] def runToMemorySink(spark: SparkSession, df: DataFrame,
       mode: OutputMode, prefix: String,
-      provider: String = RocksProvider): DataFrame = {
+      provider: Option[String] = Some(RocksProvider),
+      punctuate: Option[() => Unit] = None): DataFrame = {
     val name = prefix + java.util.UUID.randomUUID().toString.replace("-", "")
-    withStatePartitions(spark, provider) {
-      val q = df.writeStream
-        .outputMode(mode).format("memory").queryName(name).start()
-      try q.processAllAvailable() finally q.stop()
-    }
+    def start(): StreamingQuery =
+      df.writeStream.outputMode(mode).format("memory").queryName(name).start()
+    drain(provider.fold(start())(startWithStateConf(spark, _)(start())),
+      punctuate)
     spark.table(name)
+  }
+
+  /** Stage `df` as ordered input files for a bounded stream read with
+    * `maxFilesPerTrigger`: row r lands in file `names(i).parquet` where
+    * `tag` evaluates to `names(i)`, each file sorted by `order` when
+    * given. One write job (a `repartition(tag)` + `partitionBy`) lands
+    * every batch in its own dir; each single part file then moves into
+    * the returned input dir. A batch with no rows gets an empty
+    * placeholder file so every batch still arrives, and the files get
+    * strictly increasing mtimes — the file source orders by mtime, and
+    * files from one job would otherwise tie. `prefix` names the
+    * scratch dirs. Rows whose tag is null are the caller's to drop. */
+  private[graft] def stageBatches(df: DataFrame, tag: Column,
+      names: Seq[String], prefix: String, order: Column*): java.nio.file.Path = {
+    val inDir = graft.Scratch.dir(s"${prefix}_in")
+    val tmp = graft.Scratch.dir(s"${prefix}_stage")
+    val tagged = df.withColumn("b", tag).repartition(col("b"))
+    // leading with the partition column meets the writer's required
+    // ordering, so the within-file sort adds no sort of its own
+    (if (order.isEmpty) tagged else tagged.sortWithinPartitions(col("b") +: order: _*))
+      .write.mode("overwrite").partitionBy("b").parquet(tmp.toString)
+    names.zipWithIndex.foreach { case (name, i) =>
+      val dst = inDir.resolve(s"$name.parquet")
+      val srcDir = tmp.resolve(s"b=$name")
+      if (java.nio.file.Files.isDirectory(srcDir))
+        java.nio.file.Files.move(graft.Scratch.onlyParquet(srcDir), dst)
+      else {
+        val e = graft.Scratch.dir(s"${prefix}_empty_$name")
+        df.limit(0).coalesce(1).write.mode("overwrite").parquet(e.toString)
+        java.nio.file.Files.move(graft.Scratch.firstParquet(e), dst)
+      }
+      java.nio.file.Files.setLastModifiedTime(dst,
+        java.nio.file.attribute.FileTime.fromMillis(1000000L + i * 60000L))
+    }
+    inDir
   }
 
   /** Latest-state upserts via flatMapGroupsWithState (Update mode).
@@ -216,7 +248,7 @@ object CdcStream {
     // HDFS-backed store for the SYMMETRIC join state — measured 2.8×
     // faster than RocksDB at sf1 for this runner (see RocksProvider doc)
     runToMemorySink(spark, joined, OutputMode.Append, "graft_sjoin_",
-      HdfsProvider)
+      Some(HdfsProvider))
   }
 
   /** Streaming exact dedup on event_id with watermark-bounded state:
@@ -463,26 +495,21 @@ object CdcStream {
     val tsType = schema("ts").dataType
     val inDir = graft.Scratch.dir("graft_punct_in")
     // events.parquet may be one file (driver test data) or a directory
-    // of part files (ScaleUp replicas) — stage every data file first.
-    // Staged via HARDLINK where the filesystem allows (a bench JVM
-    // calls this per punctuated query per run — full copies of an sf1
-    // feed accumulated gigabytes in scratch before the exit hook;
-    // r10 review finding), falling back to copy across filesystems.
+    // of part files (ScaleUp replicas) — stage every data file first,
+    // via HARDLINK where the filesystem allows (a bench JVM calls this
+    // per punctuated query per run, and full copies of an sf1 feed
+    // pile up in scratch until the exit hook), else by copy.
     //
     // ALL data files must land in ONE micro-batch (no
     // maxFilesPerTrigger): part files are not time-ordered (ScaleUp
     // replicas are round-robin repartitioned, every part spans the
-    // full event-time range), so a file-per-batch read advances the
-    // watermark to max−delay after the FIRST part and every later
-    // part's rows are silently dropped as late by the watermarked
-    // aggregation — measured at sf1: the A24 as-of emitted 12,874 of
-    // ~19,810 expected rows under file-per-batch staging, while the
-    // single-file gates (sf0.001–0.1) never exercised the path (the
-    // r8 silent-garbage class again; caught by the r10 review, pinned
-    // by CdcStreamSpec's out-of-order two-part feed). The sentinel
-    // still arrives in its OWN later batch — it is moved in only
-    // after the first processAllAvailable() has drained the data —
-    // so watermark punctuation and APPEND finalization are unchanged.
+    // full event-time range), so a file-per-batch read would advance
+    // the watermark to max−delay after the FIRST part and silently drop
+    // every later part's rows as late — at sf1 the as-of emitted 12,874
+    // of ~19,810 rows that way (pinned by CdcStreamSpec's out-of-order
+    // two-part feed). The sentinel still arrives in its OWN later
+    // batch — the drain publishes it only after the data has drained —
+    // so watermark punctuation and APPEND finalization hold.
     val src = java.nio.file.Paths.get(dir, "events.parquet")
     def stage(p: java.nio.file.Path, to: String): Unit = {
       val dst = inDir.resolve(to)
@@ -503,25 +530,15 @@ object CdcStream {
       stage(src, "000000_events.parquet")
     }
     assertEventTimeSane(spark, inDir.toString, schema)
-    val name = "graft_punct_" + java.util.UUID.randomUUID().toString.replace("-", "")
     val agg = build(spark.readStream.schema(schema)
       .parquet(inDir.toString)
       .withColumn("ts", graft.Tables.eventTs(tsType)))
-    withStatePartitions(spark) {
-      val q = agg.writeStream
-        .outputMode(OutputMode.Append).format("memory").queryName(name).start()
-      try {
-        q.processAllAvailable()
-        // sentinel ts must carry the FILE's representation (2100-01-01).
-        // Written with parquet-java directly: a Spark write JOB (plan +
-        // schedule + commit protocol) buys nothing for a constant row,
-        // and the declared read schema is per-column name/type-matched,
-        // so the stream decodes it like a Spark-written file.
-        publishSentinel(inDir, tsType)
-        q.processAllAvailable()
-      } finally q.stop()
-    }
-    spark.table(name)
+    // the sentinel is written with parquet-java: a Spark write job buys
+    // nothing for a constant row, and the declared read schema is
+    // name/type-matched per column, so the stream decodes it like a
+    // Spark-written file
+    runToMemorySink(spark, agg, OutputMode.Append, "graft_punct_",
+      punctuate = Some(() => publishSentinel(inDir, tsType)))
   }
 
   /** Streaming tumbling-window aggregate (1h) per event_type:

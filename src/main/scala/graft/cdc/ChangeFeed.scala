@@ -1,6 +1,6 @@
 package graft.cdc
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Canonical change feed (SURVEY.md §4).
@@ -46,14 +46,26 @@ object ChangeFeed {
       |    event_type, value, props
       |  FROM events WHERE $wellFormedSql)""".stripMargin
 
-  /** Spark twin of [[changesSql]]. */
-  def fromEvents(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    wellFormed(graft.Tables.events(s, dir)).select(
-      $"event_id".as("seq"), $"ts", $"user_id".as("key"),
-      when($"event_type" === "signup", "i")
-        .when($"event_type" === "error", "d")
-        .otherwise("u").as("op"),
-      $"event_type", $"value", $"props")
+  /** Spark twin of [[changesSql]]'s op CASE. */
+  private val op: Column = when(col("event_type") === "signup", "i")
+    .when(col("event_type") === "error", "d").otherwise("u")
+
+  /** Spark twin of [[changesSql]] over a raw events frame, batch or
+    * stream. */
+  def changes(events: DataFrame): DataFrame =
+    wellFormed(events).select(col("event_id").as("seq"), col("ts"),
+      col("user_id").as("key"), op.as("op"), col("event_type"),
+      col("value"), col("props"))
+
+  /** [[changes]] over the `events` table. */
+  def fromEvents(s: SparkSession, dir: String): DataFrame =
+    changes(graft.Tables.events(s, dir))
+
+  /** A change feed (batch or stream) as [[ChangeRecord]]s, commit time
+    * as epoch micros. */
+  def records(changes: DataFrame): Dataset[ChangeRecord] = {
+    import changes.sparkSession.implicits._
+    changes.select(col("key"), col("seq"), col("op"), col("event_type"),
+      col("value"), unix_micros(col("ts")).as("tsMicros")).as[ChangeRecord]
   }
 }

@@ -1,9 +1,6 @@
 package graft.examples
 
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
-
-import graft.cdc.ChangeRecord
+import graft.cdc.{CdcStream, ChangeFeed}
 import graft.sinks.MaterializedTable
 
 /** End-to-end example: consume the events table as a bounded change
@@ -22,18 +19,12 @@ object MaterializeEvents {
     // declared schema resolved from the parquet footer; ts normalized
     // to micros whatever the on-disk representation (Tables.eventTs)
     val schema = graft.Tables.eventsSchema(spark, sfDir)
-    val changes = spark.readStream.schema(schema)
+    val changes = ChangeFeed.records(ChangeFeed.changes(spark.readStream.schema(schema)
       .option("pathGlobFilter", "events.parquet")
       .parquet(sfDir)
-      .withColumn("ts", graft.Tables.eventTs(schema("ts").dataType))
-      .select($"user_id".as("key"), $"event_id".as("seq"),
-        when($"event_type" === "signup", "i")
-          .when($"event_type" === "error", "d").otherwise("u").as("op"),
-        $"event_type", $"value", unix_micros($"ts").as("tsMicros"))
-      .as[ChangeRecord]
+      .withColumn("ts", graft.Tables.eventTs(schema("ts").dataType))))
 
-    val q = MaterializedTable.upsertSink(changes, tableDir, ckptDir)
-    try q.processAllAvailable() finally q.stop()
+    CdcStream.drain(MaterializedTable.upsertSink(changes, tableDir, ckptDir))
 
     val state = MaterializedTable.readLatest(spark, tableDir)
     println(s"MATERIALIZED rows=${state.count()} " +

@@ -1,6 +1,7 @@
 package graft.ops
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.cdc.CdcStream
 
 /** C-series registry: training-data pipeline operators (SURVEY.md §2.C)
   * with their DuckDB oracles. C3 shares C2's oracle (the LSH path must
@@ -431,6 +432,45 @@ object PipelineQueries {
       |  TRUE AS p10_ok, TRUE AS p90_ok
       |FROM base GROUP BY source ORDER BY source""".stripMargin
 
+  /** True once `tableDir` holds a committed `<column>=` partition dir. */
+  private def hasParts(tableDir: String, column: String): Boolean = {
+    val files = new java.io.File(tableDir).listFiles()
+    files != null && files.exists(_.getName.startsWith(column + "="))
+  }
+
+  /** Declared schema of the staged (doc_id, text) feeds C39 and C67
+    * stream. */
+  private val docTextSchema = org.apache.spark.sql.types.StructType(Seq(
+    org.apache.spark.sql.types.StructField("doc_id",
+      org.apache.spark.sql.types.LongType),
+    org.apache.spark.sql.types.StructField("text",
+      org.apache.spark.sql.types.StringType)))
+
+  /** Declared schema for the ingest table — pfx is a hex digit, so a
+    * history containing only 0-9 partitions would otherwise make Spark
+    * INFER the partition column as integer and route the isin filter +
+    * anti-join key through implicit casts; declaring pfx STRING keeps
+    * the keys string-vs-string regardless of which partitions exist. */
+  private val ingestSchema = org.apache.spark.sql.types.StructType(Seq(
+    org.apache.spark.sql.types.StructField("doc_id",
+      org.apache.spark.sql.types.LongType),
+    org.apache.spark.sql.types.StructField("text_md5",
+      org.apache.spark.sql.types.StringType),
+    org.apache.spark.sql.types.StructField("n_chars",
+      org.apache.spark.sql.types.LongType),
+    org.apache.spark.sql.types.StructField("pfx",
+      org.apache.spark.sql.types.StringType)))
+
+  /** History read pruned to the digest prefixes a batch touches — the
+    * C39 anti-join's right side, factored out so PlanAuditSpec can
+    * assert the prefix predicate lands in the scan's PartitionFilters
+    * (i.e. the per-batch anti-join reads a slice of history, not all
+    * of it). */
+  def prunedHistory(sp: SparkSession, tableDir: String,
+      pfxs: Seq[String]): DataFrame =
+    sp.read.schema(ingestSchema).parquet(tableDir)
+      .filter(col("pfx").isin(pfxs: _*))
+
   // --------------------------------------------------------------- C39
   /** Streaming corpus ingestion end-to-end — the pipeline as it runs
     * in production: documents arrive in micro-batches (file source,
@@ -464,95 +504,27 @@ object PipelineQueries {
     * anti-join reads O(batch-share of history), not O(history); the
     * text column never shuffles. State is the table itself — no
     * separate state store to size. */
-  /** True once the ingest table has at least one committed partition. */
-  private def hasHistory(tableDir: String): Boolean = {
-    val files = new java.io.File(tableDir).listFiles()
-    files != null && files.exists(_.getName.startsWith("pfx="))
-  }
-
-  /** History read pruned to the digest prefixes a batch touches — the
-    * C39 anti-join's right side, factored out so PlanAuditSpec can
-    * assert the prefix predicate lands in the scan's PartitionFilters
-    * (i.e. the per-batch anti-join reads a slice of history, not all
-    * of it). */
-  /** Declared schema for the ingest table — pfx is a hex digit, so a
-    * history containing only 0-9 partitions would otherwise make Spark
-    * INFER the partition column as integer and route the isin filter +
-    * anti-join key through implicit casts; declaring pfx STRING keeps
-    * the keys string-vs-string regardless of which partitions exist. */
-  private val ingestSchema = org.apache.spark.sql.types.StructType(Seq(
-    org.apache.spark.sql.types.StructField("doc_id",
-      org.apache.spark.sql.types.LongType),
-    org.apache.spark.sql.types.StructField("text_md5",
-      org.apache.spark.sql.types.StringType),
-    org.apache.spark.sql.types.StructField("n_chars",
-      org.apache.spark.sql.types.LongType),
-    org.apache.spark.sql.types.StructField("pfx",
-      org.apache.spark.sql.types.StringType)))
-
-  def prunedHistory(sp: SparkSession, tableDir: String,
-      pfxs: Seq[String]): DataFrame =
-    sp.read.schema(ingestSchema).parquet(tableDir)
-      .filter(col("pfx").isin(pfxs: _*))
-
   def pipelineStreamIngest(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     import org.apache.spark.sql.expressions.Window
     val feed = Dedup.dupFeed(s, dir)
-    val inDir = graft.Scratch.dir("graft_ingest_in")
-    // Option decode: max() on an EMPTY feed is NULL, and the bare
-    // .as[Long] decode crashed with NOT_NULL_ASSERT_VIOLATION (r11
-    // empty-input sweep). 0 cuts make every batch empty → the stream
-    // runs 4 empty batches → empty result, the defined semantics.
+    // Option decode: max() on an EMPTY feed is NULL — 0 cuts make every
+    // batch empty, so the stream runs 4 empty batches → empty result,
+    // the defined semantics
     val maxBase = feed.filter($"doc_id" < Dedup.DupShift)
       .agg(max($"doc_id")).as[Option[Long]].head().getOrElse(0L)
     val (cut1, cut2) = (maxBase / 3, 2 * maxBase / 3)
-    // stage all four batch files in ONE write job (r16 — the r14
-    // neardup floor shave ported: four serialized coalesce(1) jobs
-    // were ~0.8 s of this runner's sf0.1 floor): repartition by the
-    // batch tag gives one writer task per tag, partitionBy lands each
-    // tag in its own dir, and the moves rename them into arrival order
-    locally {
-      val tmp = graft.Scratch.dir("graft_ingest_stage")
-      // null-doc_id rows dropped EXPLICITLY (r16 ADVICE): the pre-r16
-      // per-batch range filters silently dropped them from every batch,
-      // while the when-chain's otherwise() would route them into the
-      // last batch — preserve the range-filter semantics by name.
-      feed.filter($"doc_id".isNotNull)
-        .withColumn("b",
-          when($"doc_id" <= cut1, "00")
-            .when($"doc_id" > cut1 && $"doc_id" <= cut2, "01")
-            .when($"doc_id" > cut2 && $"doc_id" < Dedup.DupShift, "02")
-            .otherwise("03"))
-        .repartition($"b")
-        .write.mode("overwrite").partitionBy("b").parquet(tmp.toString)
-      Seq("00", "01", "02", "03").zipWithIndex.foreach { case (name, i) =>
-        val dst = inDir.resolve(s"$name.parquet")
-        val srcDir = tmp.resolve(s"b=$name")
-        if (java.nio.file.Files.isDirectory(srcDir))
-          java.nio.file.Files.move(graft.Scratch.onlyParquet(srcDir), dst)
-        else {
-          // an empty slice writes no partition dir (empty corpus /
-          // degenerate cuts — r11 empty-input sweep): stage an empty
-          // single-file parquet so the stream still sees four files
-          val e = graft.Scratch.dir(s"graft_ingest_empty_$name")
-          feed.limit(0).coalesce(1).write.mode("overwrite").parquet(e.toString)
-          java.nio.file.Files.move(graft.Scratch.firstParquet(e), dst)
-        }
-        // batch order is load-bearing (first-seen == min doc_id) and
-        // FileStreamSource orders by mtime — pin a strictly increasing
-        // mtime so coarse-granularity filesystems can't tie/reorder
-        java.nio.file.Files.setLastModifiedTime(dst,
-          java.nio.file.attribute.FileTime.fromMillis(1000000L + i * 60000L))
-      }
-    }
+    // batch order is load-bearing (first-seen == min doc_id); null
+    // doc_ids are dropped by name, since otherwise() would route them
+    // into the last batch
+    val inDir = CdcStream.stageBatches(feed.filter($"doc_id".isNotNull),
+      when($"doc_id" <= cut1, "00")
+        .when($"doc_id" > cut1 && $"doc_id" <= cut2, "01")
+        .when($"doc_id" > cut2 && $"doc_id" < Dedup.DupShift, "02")
+        .otherwise("03"),
+      Seq("00", "01", "02", "03"), "graft_ingest")
     val tableDir = graft.Scratch.dir("graft_ingest_tbl").toString
-    val schema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("doc_id",
-        org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("text",
-        org.apache.spark.sql.types.StringType)))
-    val q = s.readStream.schema(schema)
+    val q = s.readStream.schema(docTextSchema)
       .option("maxFilesPerTrigger", "1").parquet(inDir.toString)
       .writeStream.foreachBatch { (batch: DataFrame, _: Long) =>
         val sp = batch.sparkSession
@@ -565,7 +537,7 @@ object PipelineQueries {
           .withColumn("__rn", row_number().over(w))
           .filter(col("__rn") === 1).drop("__rn")
         val fresh =
-          if (!hasHistory(tableDir)) batchKept
+          if (!hasParts(tableDir, "pfx")) batchKept
           else {
             // bounded metadata: the set of digest prefixes this batch
             // touches (≤16 one-char values) prunes the history scan to
@@ -582,7 +554,7 @@ object PipelineQueries {
           .write.mode("append").partitionBy("pfx").parquet(tableDir)
         ()
       }.start()
-    try q.processAllAvailable() finally q.stop()
+    CdcStream.drain(q)
     s.read.schema(ingestSchema).parquet(tableDir)
       .select($"doc_id", $"text_md5", $"n_chars")
       .orderBy($"doc_id")
@@ -601,13 +573,12 @@ object PipelineQueries {
       org.apache.spark.sql.types.LongType),
     org.apache.spark.sql.types.StructField("n_sh",
       org.apache.spark.sql.types.LongType)))
-  /** C67's ONE history table (r13, folding the r12 band + shingle
-    * tables): band rows carry null `sh`, shingle rows null `band`/`bh`
-    * — parquet stores the null columns for free, the rows land in
-    * DISJOINT partitions (`p` = "b"+bh%16 for bands, "s"+doc_id%8 for
-    * shingles) so either read path scans only its own files, and the
-    * per-trigger history append is ONE write job instead of two (the
-    * r12 verdict measured the per-batch fixed cost as this query's
+  /** C67's ONE history table of band and shingle rows: band rows
+    * carry null `sh`, shingle rows null `band`/`bh` — parquet stores
+    * the null columns for free, the rows land in DISJOINT partitions
+    * (`p` = "b"+bh%16 for bands, "s"+doc_id%8 for shingles) so either
+    * read path scans only its own files, and the per-trigger history
+    * append is ONE write job (per-batch fixed cost is this query's
     * whole story at harness scale). */
   private val neardupHistSchema = org.apache.spark.sql.types.StructType(Seq(
     org.apache.spark.sql.types.StructField("doc_id",
@@ -621,17 +592,12 @@ object PipelineQueries {
     org.apache.spark.sql.types.StructField("p",
       org.apache.spark.sql.types.StringType)))
 
-  private def hasParts(tableDir: String, prefix: String): Boolean = {
-    val files = new java.io.File(tableDir).listFiles()
-    files != null && files.exists(_.getName.startsWith(prefix))
-  }
-
   /** C67's band-history read pruned to the prefixes a batch's bands
     * hash into — factored like [[prunedHistory]] so PlanAuditSpec can
     * assert the isin predicate lands in the scan's PartitionFilters
     * (the per-batch band join reads a slice of history, not all of
     * it). Schemas declared so digit-valued partition values can't be
-    * inferred as integers (the r7 advisor's C39 finding). */
+    * inferred as integers. */
   private[graft] def prunedBands(sp: SparkSession, tableDir: String,
       pfxs: Seq[String]): DataFrame =
     sp.read.schema(neardupHistSchema).parquet(tableDir)
@@ -668,16 +634,12 @@ object PipelineQueries {
     * corpus — proven by C3 hash-matching C2's exact pair set at every
     * SF — so the oracle can re-derive drops from the exact pair set. */
   def pipelineStreamNeardup(s: SparkSession, dir: String): DataFrame =
-    // The REGISTERED query ingests the whole feed in ONE trigger (r12
-    // verdict task 2): the SEEN policy makes the result batch-cut-
-    // invariant by construction and StreamNeardupSpec pins fpt=1 ==
-    // fpt=3 == the batch answer, so the harness is licensed to stop
-    // paying 3x the per-micro-batch fixed cost (r12 measured 9.7 s vs
-    // 24.8 s at sf1). Production deployments pick their own trigger
-    // size; the decomposition harness calls the fpt variant EXPLICITLY
-    // -- the r12 GRAFT_NEARDUP_FPT env override is gone (r12 ADVICE:
-    // ambient environment silently changed what a registered query
-    // measured, with no trace in the emitted JSON).
+    // The REGISTERED query ingests the whole feed in ONE trigger: the
+    // SEEN policy makes the result batch-cut-invariant by construction
+    // and StreamNeardupSpec pins fpt=1 == fpt=3 == the batch answer, so
+    // the harness does not pay 3x the per-micro-batch fixed cost (9.7 s
+    // vs 24.8 s at sf1). Production deployments pick their own trigger
+    // size; the decomposition harness calls the fpt variant explicitly.
     pipelineStreamNeardupFpt(s, dir, 3)
 
   private[graft] def pipelineStreamNeardupFpt(
@@ -686,56 +648,20 @@ object PipelineQueries {
     graft.functions.GraftExpressions.register(s)
     val docs = graft.Tables.table(s, dir, "documents")
       .select($"doc_id", $"text")
-    val inDir = graft.Scratch.dir("graft_neardup_in")
     // Option decode — empty corpus ⇒ 0 cuts ⇒ three empty batches ⇒
-    // empty result (see pipelineStreamIngest; r11 empty-input sweep)
+    // empty result (see pipelineStreamIngest)
     val maxId = docs.agg(max($"doc_id")).as[Option[Long]].head().getOrElse(0L)
     val (cut1, cut2) = (maxId / 3, 2 * maxId / 3)
-    // stage all three batch files in ONE write job (r14 floor shave:
-    // three serialized coalesce(1) jobs were ~1/4 of the registered
-    // query's wall) — repartition by the batch tag gives one writer
-    // task per tag, partitionBy lands each tag in its own dir, and the
-    // moves rename them into arrival order
-    locally {
-      val tmp = graft.Scratch.dir("graft_neardup_stage")
-      // null-doc_id rows dropped explicitly; strict one-file move —
-      // same r16-ADVICE hardening as pipelineStreamIngest's staging
-      docs.filter($"doc_id".isNotNull)
-        .withColumn("b",
-          when($"doc_id" <= cut1, "00")
-            .when($"doc_id" <= cut2, "01").otherwise("02"))
-        .repartition($"b")
-        .write.mode("overwrite").partitionBy("b").parquet(tmp.toString)
-      Seq("00", "01", "02").zipWithIndex.foreach { case (name, i) =>
-        val dst = inDir.resolve(s"$name.parquet")
-        val srcDir = tmp.resolve(s"b=$name")
-        if (java.nio.file.Files.isDirectory(srcDir))
-          java.nio.file.Files.move(graft.Scratch.onlyParquet(srcDir), dst)
-        else {
-          // an empty slice writes no partition dir (empty corpus /
-          // degenerate cuts — r11 empty-input sweep): stage an empty
-          // single-file parquet so the stream still sees three files
-          val e = graft.Scratch.dir(s"graft_neardup_empty_$name")
-          docs.limit(0).coalesce(1).write.mode("overwrite").parquet(e.toString)
-          java.nio.file.Files.move(graft.Scratch.firstParquet(e), dst)
-        }
-        java.nio.file.Files.setLastModifiedTime(dst,
-          java.nio.file.attribute.FileTime.fromMillis(1000000L + i * 60000L))
-      }
-    }
+    val inDir = CdcStream.stageBatches(docs.filter($"doc_id".isNotNull),
+      when($"doc_id" <= cut1, "00").when($"doc_id" <= cut2, "01").otherwise("02"),
+      Seq("00", "01", "02"), "graft_neardup")
     val histDir = graft.Scratch.dir("graft_neardup_hist").toString
     val keptDir = graft.Scratch.dir("graft_neardup_kept").toString
-    val inSchema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("doc_id",
-        org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("text",
-        org.apache.spark.sql.types.StringType)))
-    // files-per-trigger is an explicit parameter (r13): the result is
-    // batch-cut-invariant BY DESIGN (SEEN policy above), so running
-    // the same feed at 1 vs 3 files/trigger isolates per-micro-batch
-    // fixed cost from data work without touching semantics --
-    // StreamNeardupSpec asserts both land on the batch answer
-    val q = s.readStream.schema(inSchema)
+    // the result is batch-cut-invariant BY DESIGN (SEEN policy above),
+    // so running the same feed at 1 vs 3 files/trigger isolates
+    // per-micro-batch fixed cost from data work without touching
+    // semantics -- StreamNeardupSpec asserts both land on the batch answer
+    val q = s.readStream.schema(docTextSchema)
       .option("maxFilesPerTrigger", fpt.toString)
       .parquet(inDir.toString)
       .writeStream.foreachBatch { (batch: DataFrame, _: Long) =>
@@ -750,12 +676,9 @@ object PipelineQueries {
           .withColumn("pfx", pmod($"bh", lit(16)).cast("string"))
           .persist()
         // within-batch candidates: C3's WHOLE hardened engine over the
-        // already-signed batch (r13 — was a hand-rolled min_k capped
-        // block, which silently kept every PAST-CAP member of a >64-doc
-        // within-batch cohort: capped buckets alone never candidate-pair
-        // past the cap; C3's canonical-bucket star pass exists for
-        // exactly that, and the skew sweep caught the hole the moment
-        // the whole viral cohort landed in one trigger). The drop rule
+        // already-signed batch — capped buckets alone never
+        // candidate-pair past the cap, and C3's canonical-bucket star
+        // pass covers a >64-doc within-batch cohort. The drop rule
         // is reduction-invariant: every non-minimum member of an
         // identical cohort still pairs with a lower id through the
         // capped set or its residue-class star rep, so the kept set —
@@ -770,7 +693,7 @@ object PipelineQueries {
         // pruned to their id buckets
         var cand: DataFrame = null
         val histDrop =
-          if (!hasParts(histDir, "p=")) wbDrop.limit(0)
+          if (!hasParts(histDir, "p")) wbDrop.limit(0)
           else {
             val pfxs = bands.select($"pfx").distinct()
               .collect().map(_.getString(0)).toSeq
@@ -797,10 +720,10 @@ object PipelineQueries {
         // batch taxes the read-back listing) — repartition(1), NOT
         // coalesce(1): coalesce would collapse the whole anti-join
         // stage into a single task, while the exchange here carries
-        // only the final (doc_id, n_sh) longs (r14 floor shave)
+        // only the final (doc_id, n_sh) longs
         kept.repartition(1).write.mode("append").parquet(keptDir)
         // SEEN policy: every batch doc enters history, kept or not.
-        // ONE append job for both row kinds (r13 — was two): band rows
+        // ONE append job for both row kinds: band rows
         // and shingle rows union into the single history table under
         // disjoint "b*"/"s*" partitions. Task-per-partition writes (the
         // B31 convention): shingling runs at full parallelism, so an
@@ -821,7 +744,7 @@ object PipelineQueries {
         if (cand != null) cand.unpersist()
         ()
       }.start()
-    try q.processAllAvailable() finally q.stop()
+    CdcStream.drain(q)
     s.read.schema(neardupKeptSchema).parquet(keptDir)
       .orderBy($"doc_id")
   }

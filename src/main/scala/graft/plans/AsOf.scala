@@ -6,20 +6,19 @@ import org.apache.spark.sql.catalyst.expressions.Attribute
 /** Public API for the as-of join operator. */
 object AsOf {
 
-  /** Register the planner strategy + pruning rule once per session
-    * (idempotent) — the fallback for sessions built without
-    * [[graft.GraftExtensions]]. `extraOptimizations` runs AFTER the
-    * main optimizer batches, so here the child Projects the rule
-    * inserts stay as explicit projections above the scans rather than
-    * merging into ReadSchema — pruning still removes the columns from
-    * the exchange + sort, which is the cost that matters. */
+  /** Register the planner strategy once per session (idempotent) — the
+    * fallback for sessions built without [[graft.GraftExtensions]]. A
+    * session that names the extension in `spark.sql.extensions`
+    * already plans the operator, and is left untouched. Column pruning
+    * needs no rule of its own: Catalyst's ColumnPruning trims each
+    * child of the as-of join down to the scans. */
   def register(spark: SparkSession): Unit = {
+    val extensions = spark.conf.getOption("spark.sql.extensions").toSeq
+      .flatMap(_.split(",")).map(_.trim)
     val strategies = spark.experimental.extraStrategies
-    if (!strategies.contains(AsOfStrategy))
+    if (!extensions.contains(classOf[graft.GraftExtensions].getName) &&
+        !strategies.contains(AsOfStrategy))
       spark.experimental.extraStrategies = strategies :+ AsOfStrategy
-    val opts = spark.experimental.extraOptimizations
-    if (!opts.contains(AsOfColumnPruning))
-      spark.experimental.extraOptimizations = opts :+ AsOfColumnPruning
   }
 
   /** LEFT AS-OF join: every `left` row + the latest `right` row with

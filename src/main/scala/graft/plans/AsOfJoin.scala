@@ -34,13 +34,11 @@ import org.apache.spark.sql.execution.{BinaryExecNode, SparkPlan}
   * narrow sorted streams beat the union's padded schema through one
   * fat exchange + sort + WindowExec frame buffering, so `doProduce`
   * codegen is deliberately NOT implemented (SMJ-style codegen
-  * complexity for a path that already wins). Column pruning through
-  * this fixed-output operator — Catalyst's one blind spot on custom
-  * nodes, measured at 0.92 vs 0.22 s on a bare `count()` probe in r8 —
-  * is supplied by [[AsOfColumnPruning]] (registered with the strategy
-  * in both [[AsOf.register]] and [[graft.GraftExtensions]]): each
-  * child is trimmed to (parent references ∪ key/ts/tie) before the
-  * exchange, so wide state tables shuffle only what the query reads.
+  * complexity for a path that already wins). Column pruning needs no
+  * rule of its own: the output is the children's outputs concatenated,
+  * so Catalyst's ColumnPruning trims each child to (parent references ∪
+  * key/ts/tie) down to the scans, and wide state tables shuffle only
+  * what the query reads (plan-audited in AsOfJoinSpec).
   */
 case class AsOfJoinPlan(left: LogicalPlan, right: LogicalPlan,
     leftKey: Attribute, leftTs: Attribute, leftTie: Attribute,

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.Tables.table
+
 /** B-series: relational analytics over the materialized tables
   * (SURVEY.md §2.B). Each query has a DuckDB oracle in [[oracles]].
   *
@@ -19,9 +21,6 @@ import org.apache.spark.sql.functions._
   * query collects to the driver.
   */
 object Relational {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    s.read.parquet(s"$dir/$name.parquet")
 
   /** Deterministic 2-dp rounding: identical IEEE ops in Spark + DuckDB. */
   private def money(c: Column): Column = floor(c * 100 + 0.5) / 100
@@ -47,7 +46,7 @@ object Relational {
     * pushed to the scan. */
   def q1PricingSummary(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    t(s, dir, "lineitem")
+    table(s, dir, "lineitem")
       .filter($"l_shipdate" <= lit("1998-09-02").cast("timestamp"))
       .groupBy($"l_returnflag", $"l_linestatus")
       .agg(
@@ -70,9 +69,9 @@ object Relational {
     * TakeOrderedAndProject (no global sort materialization). */
   def q3TopUnshipped(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val cust = t(s, dir, "customer").filter($"c_mktsegment" === "BUILDING")
-    val ord = t(s, dir, "orders").filter($"o_orderdate" < lit("1998-03-15").cast("timestamp"))
-    val li = t(s, dir, "lineitem").filter($"l_shipdate" > lit("1998-03-15").cast("timestamp"))
+    val cust = table(s, dir, "customer").filter($"c_mktsegment" === "BUILDING")
+    val ord = table(s, dir, "orders").filter($"o_orderdate" < lit("1998-03-15").cast("timestamp"))
+    val li = table(s, dir, "lineitem").filter($"l_shipdate" > lit("1998-03-15").cast("timestamp"))
     li.join(ord, $"l_orderkey" === $"o_orderkey")
       .join(cust, $"o_custkey" === $"c_custkey")
       .groupBy($"l_orderkey", $"o_orderdate")
@@ -92,14 +91,14 @@ object Relational {
     * must shuffle (on orderkey). */
   def q5RegionRevenue(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val region = t(s, dir, "region").filter($"r_name" === "ASIA")
-    val nation = t(s, dir, "nation")
-    val supplier = t(s, dir, "supplier")
-    val customer = t(s, dir, "customer")
-    val orders = t(s, dir, "orders")
+    val region = table(s, dir, "region").filter($"r_name" === "ASIA")
+    val nation = table(s, dir, "nation")
+    val supplier = table(s, dir, "supplier")
+    val customer = table(s, dir, "customer")
+    val orders = table(s, dir, "orders")
       .filter($"o_orderdate" >= lit("1996-01-01").cast("timestamp") &&
         $"o_orderdate" < lit("1997-01-01").cast("timestamp"))
-    val li = t(s, dir, "lineitem")
+    val li = table(s, dir, "lineitem")
     li.join(orders, $"l_orderkey" === $"o_orderkey")
       .join(customer, $"o_custkey" === $"c_custkey")
       .join(supplier,
@@ -117,8 +116,8 @@ object Relational {
     * under the threshold, shuffle join above it). */
   def qTopCustomers(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    t(s, dir, "orders")
-      .join(t(s, dir, "customer"), $"o_custkey" === $"c_custkey")
+    table(s, dir, "orders")
+      .join(table(s, dir, "customer"), $"o_custkey" === $"c_custkey")
       .groupBy($"c_custkey", $"c_name")
       .agg(money(sum($"o_totalprice")).as("total_spent"), count(lit(1)).as("n_orders"))
       .filter($"n_orders" >= 5)
@@ -132,10 +131,10 @@ object Relational {
     * only the join keys + condition column. */
   def qExistsSemi(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val ord = t(s, dir, "orders")
+    val ord = table(s, dir, "orders")
       .filter($"o_orderdate" >= lit("1996-01-01").cast("timestamp") &&
         $"o_orderdate" < lit("1997-01-01").cast("timestamp"))
-    val li = t(s, dir, "lineitem").select($"l_orderkey", $"l_shipdate")
+    val li = table(s, dir, "lineitem").select($"l_orderkey", $"l_shipdate")
     ord.join(li, $"o_orderkey" === $"l_orderkey" && $"l_shipdate" > $"o_orderdate", "left_semi")
       .groupBy($"o_orderpriority")
       .agg(count(lit(1)).as("order_count"))
@@ -146,9 +145,9 @@ object Relational {
   /** NOT EXISTS via left-anti join: customers with no high-value order. */
   def qNotExistsAnti(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val bigOrders = t(s, dir, "orders")
+    val bigOrders = table(s, dir, "orders")
       .filter($"o_totalprice" > 300000.0).select($"o_custkey")
-    t(s, dir, "customer")
+    table(s, dir, "customer")
       .join(bigOrders, $"c_custkey" === $"o_custkey", "left_anti")
       .select($"c_custkey", $"c_name", $"c_mktsegment")
       .orderBy($"c_custkey")
@@ -161,7 +160,7 @@ object Relational {
   def qWindowRank(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val w = Window.partitionBy($"o_custkey").orderBy($"o_totalprice".desc, $"o_orderkey")
-    t(s, dir, "orders")
+    table(s, dir, "orders")
       .select($"o_custkey", $"o_orderkey", $"o_totalprice", row_number().over(w).as("rn"))
       .filter($"rn" <= 3)
       .orderBy($"o_custkey", $"rn")
@@ -173,7 +172,7 @@ object Relational {
     * the unpartitioned frame is safe at any SF (days, not rows). */
   def qRunningTotal(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val daily = t(s, dir, "orders")
+    val daily = table(s, dir, "orders")
       .groupBy($"o_orderdate".cast("date").as("d"))
       .agg(money(sum($"o_totalprice")).as("rev"))
     val w = Window.orderBy($"d").rowsBetween(Window.unboundedPreceding, Window.currentRow)
@@ -225,10 +224,10 @@ object Relational {
     * its join strategy is left to AQE. */
   def qRollupRevenue(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    t(s, dir, "orders")
-      .join(t(s, dir, "customer"), $"o_custkey" === $"c_custkey")
-      .join(broadcast(t(s, dir, "nation")), $"c_nationkey" === $"n_nationkey")
-      .join(broadcast(t(s, dir, "region")), $"n_regionkey" === $"r_regionkey")
+    table(s, dir, "orders")
+      .join(table(s, dir, "customer"), $"o_custkey" === $"c_custkey")
+      .join(broadcast(table(s, dir, "nation")), $"c_nationkey" === $"n_nationkey")
+      .join(broadcast(table(s, dir, "region")), $"n_regionkey" === $"r_regionkey")
       .rollup($"r_name", $"n_name")
       .agg(money(sum($"o_totalprice")).as("revenue"), count(lit(1)).as("n_orders"))
       .select(coalesce($"r_name", lit("ALL")).as("region_name"),
@@ -260,11 +259,11 @@ object Relational {
   def qCorrelatedScalar(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val perPart = Window.partitionBy($"l_partkey")
-    t(s, dir, "lineitem")
+    table(s, dir, "lineitem")
       .select($"l_partkey", $"l_quantity", $"l_extendedprice")
       .withColumn("avg_qty", avg($"l_quantity").over(perPart))
       .filter($"l_quantity" < $"avg_qty" * 0.5)
-      .join(t(s, dir, "part"), $"l_partkey" === $"p_partkey")
+      .join(table(s, dir, "part"), $"l_partkey" === $"p_partkey")
       .groupBy($"p_brand")
       .agg(money(sum($"l_extendedprice")).as("total_below"), count(lit(1)).as("n_lines"))
       .orderBy($"p_brand")
@@ -298,8 +297,8 @@ object Relational {
     * (it scales with SF). */
   def qCubeSegment(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    t(s, dir, "orders")
-      .join(t(s, dir, "customer"), $"o_custkey" === $"c_custkey")
+    table(s, dir, "orders")
+      .join(table(s, dir, "customer"), $"o_custkey" === $"c_custkey")
       .cube($"c_mktsegment", $"o_orderpriority")
       .agg(money(sum($"o_totalprice")).as("revenue"), count(lit(1)).as("n_orders"))
       .select(coalesce($"c_mktsegment", lit("ALL")).as("segment"),
@@ -317,7 +316,7 @@ object Relational {
   def qTopkPerGroup(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     graft.functions.TopKAgg.register(s)
-    t(s, dir, "orders")
+    table(s, dir, "orders")
       .groupBy($"o_custkey")
       .agg(expr("topk_agg(struct(o_totalprice, o_orderkey), 3)").as("top"))
       .select($"o_custkey", posexplode($"top"))
@@ -341,7 +340,7 @@ object Relational {
     * the dimension. */
   def qFuzzyMatch(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val cust = t(s, dir, "customer").select($"c_custkey", $"c_name")
+    val cust = table(s, dir, "customer").select($"c_custkey", $"c_name")
     val probes = cust.filter($"c_custkey" < 20)
       .select($"c_custkey".as("probe_key"), $"c_name".as("probe_name"))
     cust.crossJoin(broadcast(probes))
@@ -361,7 +360,7 @@ object Relational {
     * the continuous-interpolation definition. */
   def qPercentiles(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    t(s, dir, "orders")
+    table(s, dir, "orders")
       .groupBy($"o_orderpriority")
       .agg(
         money(expr("percentile(o_totalprice, 0.5)")).as("p50"),
@@ -429,7 +428,7 @@ object Relational {
     * proven by B18); the booleans pin the contract. */
   def qSketchQuantiles(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    t(s, dir, "orders")
+    table(s, dir, "orders")
       .groupBy($"o_orderpriority")
       .agg(
         money(expr("percentile(o_totalprice, 0.5)")).as("p50_exact"),
@@ -525,7 +524,7 @@ object Relational {
           .as("merchant_id"),
         floor($"value" * 100 + 0.5).cast("long").as("cents"))
       .withColumn("salt", pmod(hash($"event_id"), lit(Salt)))
-    val dim = t(s, dir, "customer").filter($"c_custkey" < 150)
+    val dim = table(s, dir, "customer").filter($"c_custkey" < 150)
       .select($"c_custkey".as("merchant_id"), $"c_mktsegment".as("segment"))
       .withColumn("salt", explode(array((0 until Salt).map(lit): _*)))
     ev.join(dim, Seq("merchant_id", "salt"))
@@ -562,8 +561,8 @@ object Relational {
     * the max order count. */
   def q13Custdist(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val c = t(s, dir, "customer").select($"c_custkey")
-    val o = t(s, dir, "orders")
+    val c = table(s, dir, "customer").select($"c_custkey")
+    val o = table(s, dir, "orders")
       .filter($"o_orderpriority" =!= "1-URGENT")
       .select($"o_custkey", $"o_orderkey")
     c.join(o, $"c_custkey" === $"o_custkey", "left")
@@ -589,16 +588,16 @@ object Relational {
     * side); rollup is a 25-group agg. */
   def q22GlobalScalarAnti(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val cust = t(s, dir, "customer")
+    val cust = table(s, dir, "customer")
     val avgBal = cust.filter($"c_acctbal" > 0)
       .agg(avg($"c_acctbal").as("avg_bal"))
-    val urgent = t(s, dir, "orders")
+    val urgent = table(s, dir, "orders")
       .filter($"o_orderpriority" === "1-URGENT")
       .select($"o_custkey").distinct()
     cust.crossJoin(broadcast(avgBal))
       .filter($"c_acctbal" > $"avg_bal")
       .join(urgent, $"c_custkey" === $"o_custkey", "left_anti")
-      .join(broadcast(t(s, dir, "nation")),
+      .join(broadcast(table(s, dir, "nation")),
         $"c_nationkey" === $"n_nationkey")
       .groupBy($"n_name")
       .agg(count(lit(1)).as("numcust"),
@@ -620,12 +619,12 @@ object Relational {
     * cut is bit-identical in both engines. */
   def q18LargeOrders(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val big = t(s, dir, "lineitem")
+    val big = table(s, dir, "lineitem")
       .groupBy($"l_orderkey")
       .agg(sum($"l_quantity").as("sum_qty"))
       .filter($"sum_qty" > 250)
-    t(s, dir, "orders").join(big, $"o_orderkey" === $"l_orderkey")
-      .join(t(s, dir, "customer"), $"o_custkey" === $"c_custkey")
+    table(s, dir, "orders").join(big, $"o_orderkey" === $"l_orderkey")
+      .join(table(s, dir, "customer"), $"o_custkey" === $"c_custkey")
       .select($"c_name", $"c_custkey", $"o_orderkey", $"o_orderdate",
         $"o_totalprice", $"sum_qty")
       .orderBy($"o_totalprice".desc, $"o_orderkey")
@@ -646,16 +645,16 @@ object Relational {
     * 2×|years| groups, map-side combined. */
   def q7VolumeShipping(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val li = t(s, dir, "lineitem").select($"l_orderkey", $"l_suppkey",
+    val li = table(s, dir, "lineitem").select($"l_orderkey", $"l_suppkey",
       year($"l_shipdate").cast("long").as("l_year"),
       ($"l_extendedprice" * (lit(1.0) - $"l_discount")).as("volume"))
-    val n1 = t(s, dir, "nation")
+    val n1 = table(s, dir, "nation")
       .select($"n_nationkey".as("s_nk"), $"n_name".as("supp_nation"))
-    val n2 = t(s, dir, "nation")
+    val n2 = table(s, dir, "nation")
       .select($"n_nationkey".as("c_nk"), $"n_name".as("cust_nation"))
-    li.join(t(s, dir, "supplier"), $"l_suppkey" === $"s_suppkey")
-      .join(t(s, dir, "orders"), $"l_orderkey" === $"o_orderkey")
-      .join(t(s, dir, "customer"), $"o_custkey" === $"c_custkey")
+    li.join(table(s, dir, "supplier"), $"l_suppkey" === $"s_suppkey")
+      .join(table(s, dir, "orders"), $"l_orderkey" === $"o_orderkey")
+      .join(table(s, dir, "customer"), $"o_custkey" === $"c_custkey")
       .join(broadcast(n1), $"s_nationkey" === $"s_nk")
       .join(broadcast(n2), $"c_nationkey" === $"c_nk")
       .filter(($"supp_nation" === "NATION_1" && $"cust_nation" === "NATION_2") ||
@@ -726,14 +725,14 @@ object Relational {
     // write-time sortBy needs) produced by 8 PARALLEL tasks, not one.
     // At 100 TB the same form scales: repartition(numBuckets, key)
     // with the bucket count sized to the cluster
-    t(s, dir, "lineitem")
+    table(s, dir, "lineitem")
       .select($"l_orderkey", $"l_extendedprice", $"l_discount")
       .repartition(8, $"l_orderkey")
       .write.mode("overwrite").format("parquet")
       .option("path", s"$base/lineitem_b")
       .bucketBy(8, "l_orderkey").sortBy("l_orderkey")
       .saveAsTable("graft_buckets.lineitem_b")
-    t(s, dir, "orders").select($"o_orderkey", $"o_orderpriority")
+    table(s, dir, "orders").select($"o_orderkey", $"o_orderpriority")
       .repartition(8, $"o_orderkey")
       .write.mode("overwrite").format("parquet")
       .option("path", s"$base/orders_b")
@@ -1065,14 +1064,14 @@ object Relational {
     * before min/equality so the join-back never compares floats. */
   def q2MinCostSupp(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val euro = t(s, dir, "nation")
-      .join(broadcast(t(s, dir, "region").filter($"r_name" === "EUROPE")),
+    val euro = table(s, dir, "nation")
+      .join(broadcast(table(s, dir, "region").filter($"r_name" === "EUROPE")),
         $"n_regionkey" === $"r_regionkey")
       .select($"n_nationkey", $"n_name")
-    val supp = t(s, dir, "supplier")
+    val supp = table(s, dir, "supplier")
       .join(broadcast(euro), $"s_nationkey" === $"n_nationkey")
       .select($"s_suppkey", $"s_name", $"s_acctbal", $"n_name")
-    val parts = t(s, dir, "part")
+    val parts = table(s, dir, "part")
       .filter($"p_size" <= 10 && $"p_type" === "STANDARD")
       .select($"p_partkey", $"p_brand")
     // prune the fact BEFORE the rollup: the filtered part dim keeps ~3%
@@ -1080,7 +1079,7 @@ object Relational {
     // aggregate shrinks both the shuffle and the rollup state ~30× —
     // cost_fp per surviving key is unchanged (the filter is on the
     // part dim only, independent of the per-pair min)
-    val cost = t(s, dir, "lineitem")
+    val cost = table(s, dir, "lineitem")
       .join(broadcast(parts.select($"p_partkey")),
         $"l_partkey" === $"p_partkey", "left_semi")
       .groupBy($"l_partkey", $"l_suppkey")
@@ -1134,9 +1133,9 @@ object Relational {
     * lineitem per part — this plan scans it once. */
   def q17SmallQtyRevenue(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val promo = t(s, dir, "part").filter($"p_type" === "PROMO")
+    val promo = table(s, dir, "part").filter($"p_type" === "PROMO")
       .select($"p_partkey")
-    t(s, dir, "lineitem")
+    table(s, dir, "lineitem")
       .join(promo, $"l_partkey" === $"p_partkey")
       .withColumn("avg_qty",
         avg($"l_quantity").over(Window.partitionBy($"l_partkey")))
@@ -1170,8 +1169,8 @@ object Relational {
     * the residual OR evaluates post-join in codegen. */
   def q19DisjunctiveBrackets(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    t(s, dir, "lineitem")
-      .join(t(s, dir, "part"), $"l_partkey" === $"p_partkey")
+    table(s, dir, "lineitem")
+      .join(table(s, dir, "part"), $"l_partkey" === $"p_partkey")
       .filter(
         ($"p_brand" === "Brand#1" && $"p_size".between(1, 5) &&
           $"l_quantity".between(1, 11)) ||
@@ -1214,15 +1213,15 @@ object Relational {
   def q21WaitingSupplier(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val lateLine = $"l_shipdate" > $"o_orderdate" + expr("INTERVAL 1400 DAYS")
-    val base = t(s, dir, "lineitem")
-      .join(t(s, dir, "orders").filter($"o_orderstatus" === "F"),
+    val base = table(s, dir, "lineitem")
+      .join(table(s, dir, "orders").filter($"o_orderstatus" === "F"),
         $"l_orderkey" === $"o_orderkey")
       .select($"l_orderkey", $"l_suppkey", lateLine.as("late"))
     val perOrder = base.groupBy($"l_orderkey")
       .agg(countDistinct($"l_suppkey").as("n_supp"),
         countDistinct(when($"late", $"l_suppkey")).as("n_late_supp"))
-    val n3supp = t(s, dir, "supplier")
-      .join(broadcast(t(s, dir, "nation").filter($"n_name" === "NATION_3")),
+    val n3supp = table(s, dir, "supplier")
+      .join(broadcast(table(s, dir, "nation").filter($"n_name" === "NATION_3")),
         $"s_nationkey" === $"n_nationkey")
       .select($"s_suppkey", $"s_name")
     base.filter($"late")
@@ -1264,19 +1263,19 @@ object Relational {
     * TakeOrderedAndProject, never a global sort. */
   def q10ReturnedRevenue(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val ord = t(s, dir, "orders")
+    val ord = table(s, dir, "orders")
       .filter($"o_orderdate" >= lit("1996-01-01").cast("timestamp") &&
         $"o_orderdate" < lit("1996-04-01").cast("timestamp"))
       .select($"o_orderkey", $"o_custkey")
-    val ret = t(s, dir, "lineitem").filter($"l_returnflag" === "R")
+    val ret = table(s, dir, "lineitem").filter($"l_returnflag" === "R")
       .select($"l_orderkey", $"l_extendedprice", $"l_discount")
     val perCust = ret.join(ord, $"l_orderkey" === $"o_orderkey")
       .groupBy($"o_custkey")
       .agg(money(sum($"l_extendedprice" * (lit(1.0) - $"l_discount")))
         .as("revenue"))
     perCust
-      .join(t(s, dir, "customer"), $"o_custkey" === $"c_custkey")
-      .join(broadcast(t(s, dir, "nation")), $"c_nationkey" === $"n_nationkey")
+      .join(table(s, dir, "customer"), $"o_custkey" === $"c_custkey")
+      .join(broadcast(table(s, dir, "nation")), $"c_nationkey" === $"n_nationkey")
       .select($"c_custkey", $"c_name", $"revenue", $"c_acctbal", $"n_name")
       .orderBy($"revenue".desc, $"c_custkey")
       .limit(20)
@@ -1310,10 +1309,10 @@ object Relational {
     import s.implicits._
     val cents = floor($"l_extendedprice" * (lit(1.0) - $"l_discount") * 100 + 0.5)
       .cast("long")
-    t(s, dir, "lineitem")
+    table(s, dir, "lineitem")
       .filter($"l_shipdate" >= lit("1996-06-01").cast("timestamp") &&
         $"l_shipdate" < lit("1996-07-01").cast("timestamp"))
-      .join(t(s, dir, "part"), $"l_partkey" === $"p_partkey")
+      .join(table(s, dir, "part"), $"l_partkey" === $"p_partkey")
       .agg(
         sum(when($"p_type" === "PROMO", cents).otherwise(lit(0L)))
           .as("promo_cents"),
@@ -1358,7 +1357,7 @@ object Relational {
     * never tests floats. */
   def q15TopSupplier(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val rev = t(s, dir, "lineitem")
+    val rev = table(s, dir, "lineitem")
       .filter($"l_shipdate" >= lit("1996-01-01").cast("timestamp") &&
         $"l_shipdate" < lit("1996-04-01").cast("timestamp"))
       .groupBy($"l_suppkey")
@@ -1366,7 +1365,7 @@ object Relational {
         .cast("long")).as("rev_cents"))
     rev.withColumn("best", max($"rev_cents").over(Window.partitionBy()))
       .filter($"rev_cents" === $"best")
-      .join(t(s, dir, "supplier"), $"l_suppkey" === $"s_suppkey")
+      .join(table(s, dir, "supplier"), $"l_suppkey" === $"s_suppkey")
       .select($"s_suppkey", $"s_name", ($"rev_cents" / 100.0).as("total_revenue"))
       .orderBy($"s_suppkey")
   }
@@ -1397,11 +1396,11 @@ object Relational {
     * broadcast join to the pruned part dim. */
   def q16SupplierCnt(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val ps = t(s, dir, "lineitem")
+    val ps = table(s, dir, "lineitem")
       .select($"l_partkey", $"l_suppkey").distinct()
-    val deny = t(s, dir, "supplier").filter($"s_acctbal" < 2000)
+    val deny = table(s, dir, "supplier").filter($"s_acctbal" < 2000)
       .select($"s_suppkey")
-    val parts = t(s, dir, "part")
+    val parts = table(s, dir, "part")
       .filter($"p_brand" =!= "Brand#5" && $"p_type" =!= "PROMO" &&
         $"p_size".between(1, 10))
       .select($"p_partkey", $"p_brand", $"p_type", $"p_size")
@@ -1436,21 +1435,21 @@ object Relational {
     * cents fixed-pointed before the order-free sum, ppm integer. */
   def q8MarketShare(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val asiaCust = t(s, dir, "customer")
-      .join(broadcast(t(s, dir, "nation")
-        .join(broadcast(t(s, dir, "region").filter($"r_name" === "ASIA")),
+    val asiaCust = table(s, dir, "customer")
+      .join(broadcast(table(s, dir, "nation")
+        .join(broadcast(table(s, dir, "region").filter($"r_name" === "ASIA")),
           $"n_regionkey" === $"r_regionkey")),
         $"c_nationkey" === $"n_nationkey")
       .select($"c_custkey")
-    val supp = t(s, dir, "supplier")
-      .join(broadcast(t(s, dir, "nation")
+    val supp = table(s, dir, "supplier")
+      .join(broadcast(table(s, dir, "nation")
         .select($"n_nationkey".as("sn_key"), $"n_name".as("supp_nation"))),
         $"s_nationkey" === $"sn_key")
       .select($"s_suppkey", $"supp_nation")
     val cents = floor($"l_extendedprice" * (lit(1.0) - $"l_discount") * 100 + 0.5)
       .cast("long")
-    t(s, dir, "lineitem")
-      .join(t(s, dir, "orders"), $"l_orderkey" === $"o_orderkey")
+    table(s, dir, "lineitem")
+      .join(table(s, dir, "orders"), $"l_orderkey" === $"o_orderkey")
       .join(asiaCust, $"o_custkey" === $"c_custkey")
       .join(broadcast(supp), $"l_suppkey" === $"s_suppkey")
       .groupBy(year($"o_orderdate").as("o_year"))
@@ -1500,8 +1499,8 @@ object Relational {
     * are fixed-pointed at 1e4 before the order-free BIGINT sum. */
   def q9ProductProfit(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val li = t(s, dir, "lineitem")
-    val largeParts = t(s, dir, "part").filter($"p_type" === "LARGE")
+    val li = table(s, dir, "lineitem")
+    val largeParts = table(s, dir, "part").filter($"p_type" === "LARGE")
       .select($"p_partkey")
     // prune the rollup input to LARGE partkeys up front (B38's r10
     // lesson): the filter is partkey-only, so every surviving
@@ -1512,13 +1511,13 @@ object Relational {
       .groupBy($"l_partkey".as("cp"), $"l_suppkey".as("cs"))
       .agg(min(floor($"l_extendedprice" / $"l_quantity" * 10000 + 0.5)
         .cast("long")).as("cost_fp"))
-    val supp = t(s, dir, "supplier")
-      .join(broadcast(t(s, dir, "nation")
+    val supp = table(s, dir, "supplier")
+      .join(broadcast(table(s, dir, "nation")
         .select($"n_nationkey".as("sn_key"), $"n_name".as("supp_nation"))),
         $"s_nationkey" === $"sn_key")
       .select($"s_suppkey", $"supp_nation")
     li.join(largeParts, $"l_partkey" === $"p_partkey")
-      .join(t(s, dir, "orders"), $"l_orderkey" === $"o_orderkey")
+      .join(table(s, dir, "orders"), $"l_orderkey" === $"o_orderkey")
       .join(cost, $"l_partkey" === $"cp" && $"l_suppkey" === $"cs")
       .join(broadcast(supp), $"l_suppkey" === $"s_suppkey")
       .select($"supp_nation", year($"o_orderdate").as("o_year"),
@@ -1561,8 +1560,8 @@ object Relational {
     import s.implicits._
     val lagDays = datediff($"l_shipdate".cast("date"), $"o_orderdate".cast("date"))
     val crit = $"o_orderpriority".isin("1-URGENT", "2-HIGH")
-    t(s, dir, "lineitem")
-      .join(t(s, dir, "orders"), $"l_orderkey" === $"o_orderkey")
+    table(s, dir, "lineitem")
+      .join(table(s, dir, "orders"), $"l_orderkey" === $"o_orderkey")
       .groupBy(when(lagDays <= 730, "fast").otherwise("slow").as("lag_class"))
       .agg(sum(when(crit, 1L).otherwise(0L)).as("high_line_count"),
         // same CASE shape as `high`, NOT `when(!crit, ...)`: a NULL
@@ -1597,11 +1596,11 @@ object Relational {
     * also prunes order partitions outright. */
   def q4OrderPriority(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val orders = t(s, dir, "orders")
+    val orders = table(s, dir, "orders")
       .filter($"o_orderdate" >= lit("1996-07-01").cast("timestamp") &&
         $"o_orderdate" < lit("1996-10-01").cast("timestamp"))
       .select($"o_orderkey", $"o_orderdate", $"o_orderpriority")
-    val lines = t(s, dir, "lineitem").select($"l_orderkey", $"l_shipdate")
+    val lines = table(s, dir, "lineitem").select($"l_orderkey", $"l_shipdate")
     orders.join(lines,
         $"o_orderkey" === $"l_orderkey" &&
           $"l_shipdate" > $"o_orderdate" + expr("INTERVAL 30 DAYS"),
@@ -1631,7 +1630,7 @@ object Relational {
     * the order-free BIGINT sum. */
   def q6ForecastRevenue(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    t(s, dir, "lineitem")
+    table(s, dir, "lineitem")
       .filter($"l_shipdate" >= lit("1997-01-01").cast("timestamp") &&
         $"l_shipdate" < lit("1998-01-01").cast("timestamp") &&
         $"l_discount".between(0.02, 0.04) && $"l_quantity" < 24)
@@ -1668,7 +1667,7 @@ object Relational {
     * MB across the cluster vs a second 100 TB scan. */
   def q11ValueConcentration(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val v = t(s, dir, "lineitem")
+    val v = table(s, dir, "lineitem")
       .groupBy($"l_partkey")
       .agg(sum(floor($"l_extendedprice" * (lit(1) - $"l_discount") * 100
         + 0.5).cast("long")).as("value_fp"))
@@ -1709,9 +1708,9 @@ object Relational {
     * once, pre-filtered by the broadcast SMALL-part dim. */
   def q20DominantSupplier(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val small = t(s, dir, "part").filter($"p_type" === "SMALL")
+    val small = table(s, dir, "part").filter($"p_type" === "SMALL")
       .select($"p_partkey")
-    val ps = t(s, dir, "lineitem")
+    val ps = table(s, dir, "lineitem")
       .join(broadcast(small), $"l_partkey" === $"p_partkey")
       .groupBy($"l_partkey", $"l_suppkey")
       .agg(sum(floor($"l_quantity").cast("long")).as("qty"))
@@ -1721,11 +1720,11 @@ object Relational {
       .withColumn("ns", count(lit(1)).over(w))
       .filter($"qty" * $"ns" * 10 > $"part_qty" * 30)
       .select($"l_suppkey").distinct()
-    val asia = t(s, dir, "nation")
-      .join(broadcast(t(s, dir, "region").filter($"r_name" === "ASIA")),
+    val asia = table(s, dir, "nation")
+      .join(broadcast(table(s, dir, "region").filter($"r_name" === "ASIA")),
         $"n_regionkey" === $"r_regionkey")
       .select($"n_nationkey")
-    t(s, dir, "supplier")
+    table(s, dir, "supplier")
       .join(broadcast(asia), $"s_nationkey" === $"n_nationkey")
       .join(dom, $"s_suppkey" === $"l_suppkey", "left_semi")
       .select($"s_suppkey", $"s_name", $"s_acctbal")

@@ -65,9 +65,7 @@ object StreamRecoverySf1 {
     def sec = f"${(System.nanoTime() - t0) / 1e9}%.1f s"
 
     // ---- stage: 8 round-robin slices of the sf1 change feed --------
-    val changes = ChangeFeed.fromEvents(spark, sfDir)
-      .select($"key", $"seq", $"op", $"event_type", $"value",
-        expr("unix_micros(ts)").as("tsMicros"))
+    val changes = ChangeFeed.records(ChangeFeed.fromEvents(spark, sfDir)).toDF()
     val stage = graft.Scratch.dir("graft_recovsf1_stage")
     changes.withColumn("sl", pmod($"seq", lit(8L)).cast("int"))
       .repartition($"sl")
@@ -111,15 +109,12 @@ object StreamRecoverySf1 {
             Iterator.single(best)
           })
         .toDF()
-      CdcStream.withStatePartitions(spark) {
-        val q = out.writeStream
-          .outputMode(OutputMode.Append)
-          .format("parquet")
-          .option("path", sink.toString)
-          .option("checkpointLocation", ckpt.toString)
-          .start()
-        try q.processAllAvailable() finally q.stop()
-      }
+      CdcStream.drain(CdcStream.startWithStateConf(spark)(out.writeStream
+        .outputMode(OutputMode.Append)
+        .format("parquet")
+        .option("path", sink.toString)
+        .option("checkpointLocation", ckpt.toString)
+        .start()))
       listParts(sink)
     }
 

@@ -21,12 +21,14 @@ import graft.SparkFixture.spark
   *
   * The pinned set deliberately mixes shapes: persist-heavy LSH dedup,
   * expression-registering ANN/hash ops, window-heavy relational, and
-  * scratch-writing shard manifest. Streaming runners and the C22
-  * contraction serialize their session-conf scope through
-  * [[graft.SessionConfLock]] instead (their own spec/test below) —
-  * Spark session conf is session-scoped by design, so UNRELATED
-  * queries sharing a session while a conf-scoped operator runs see
-  * its partition override; deployments wanting full isolation run
+  * scratch-writing shard manifest. Stateful streaming runners start
+  * under a scoped state conf instead (their own test below): the conf
+  * is set and restored around `start()` alone, under
+  * [[graft.SessionConfLock]], since the started query runs on its own
+  * clone of the session — so their starts serialize and their drains
+  * overlap. Spark session conf is session-scoped by design, so an
+  * UNRELATED query planning during a runner's `start()` sees its
+  * partition override; deployments wanting full isolation run
   * concurrent tracks on `spark.newSession()` (standard Spark
   * practice), which shares the context, cache, and catalog. */
 class ConcurrencySpec extends AnyFunSuite {
@@ -65,9 +67,9 @@ class ConcurrencySpec extends AnyFunSuite {
 
   test("conf-scoped streaming runners serialize and restore the session conf") {
     // two bounded streaming runners racing on one session: the
-    // SessionConfLock serializes their shuffle-partition scope, so
-    // both must produce their sequential results and the session conf
-    // must come back to its original value
+    // SessionConfLock serializes their start-scoped shuffle-partition
+    // override, so both must produce their sequential results and the
+    // session conf must come back to its original value
     val before = spark.conf.get("spark.sql.shuffle.partitions")
     val streamingNames = Seq("cdc_stream_upserts", "cdc_stream_dedup")
     val sequential = streamingNames.map(n => n -> run(n)).toMap

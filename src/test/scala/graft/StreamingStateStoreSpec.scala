@@ -4,16 +4,19 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SparkFixture.{spark, sf0001}
 
-/** SURVEY §3 claims "state store (RocksDB in prod)", and since r11 the
+/** SURVEY §3 claims "state store (RocksDB in prod)", and the
   * bounded-runner scaffold DEFAULTS to `RocksDBStateStoreProvider`
-  * (CdcStream.withStatePartitions) — this suite pins the identity BOTH
+  * (CdcStream.startWithStateConf) — this suite pins the identity BOTH
   * ways: every stateful streaming operator (flatMapGroupsWithState
   * latest-state/SCD2/as-of, dropDuplicatesWithinWatermark, session
   * windows, and the C39 ingest loop) must produce the IDENTICAL result
   * under the scaffold default (RocksDB) as under an EXPLICITLY-set
   * HDFS-backed provider (which the scaffold must respect, not
-  * override). The provider conf is read at stream start, so each op
-  * runs once per provider inside the one shared session. Tests are
+  * override). The provider conf is fixed when the query starts (the
+  * query runs on a clone of the session taken inside `start()`), so
+  * each op runs once per provider inside the one shared session; which
+  * provider and width a started query actually got is pinned by
+  * StreamScaffoldSpec from its progress metrics. Tests are
   * unrolled (not a loop) so CoverageSpec's `test(` count stays the
   * runtime count. */
 class StreamingStateStoreSpec extends AnyFunSuite {

@@ -55,15 +55,12 @@ class StreamRecoverySpec extends AnyFunSuite {
       ckpt: Path)(build: DataFrame => DataFrame): Set[String] = {
     val src = spark.readStream.schema(template.schema)
       .parquet(srcDir.toString)
-    CdcStream.withStatePartitions(spark) {
-      val q = build(src).writeStream
-        .outputMode(OutputMode.Append)
-        .format("parquet")
-        .option("path", sink.toString)
-        .option("checkpointLocation", ckpt.toString)
-        .start()
-      try q.processAllAvailable() finally q.stop()
-    }
+    CdcStream.drain(CdcStream.startWithStateConf(spark)(build(src).writeStream
+      .outputMode(OutputMode.Append)
+      .format("parquet")
+      .option("path", sink.toString)
+      .option("checkpointLocation", ckpt.toString)
+      .start()))
     listParts(sink)
   }
 

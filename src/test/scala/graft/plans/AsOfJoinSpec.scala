@@ -91,9 +91,9 @@ class AsOfJoinSpec extends AnyFunSuite {
   }
 
   test("column pruning reaches through the merge: dropped columns leave both sides") {
-    // r9 verdict item 4: AsOfColumnPruning must trim each child to
-    // (consumed ∪ key/ts/tie) so a wide state table doesn't carry
-    // unused columns through the co-partitioning exchange + sort
+    // Catalyst's ColumnPruning must trim each child to (consumed ∪
+    // key/ts/tie) so a wide state table doesn't carry unused columns
+    // through the co-partitioning exchange + sort
     import spark.implicits._
     val ev = graft.Tables.events(spark, sf0001)
     val l = ev.filter($"event_type" === "purchase")
@@ -161,6 +161,18 @@ class AsOfJoinSpec extends AnyFunSuite {
       exp.extraStrategies = saved._1
       exp.extraOptimizations = saved._2
     }
+  }
+
+  test("AsOf.join leaves a session built with GraftExtensions untouched") {
+    // the fixture names graft.GraftExtensions in spark.sql.extensions,
+    // so the extension already plans the operator and the register
+    // fallback must not append a second strategy to the session
+    import spark.implicits._
+    val l = Seq((1L, 10L, 1L)).toDF("k", "t", "lid")
+    val r = Seq((1L, 5L, 2L)).toDF("rk", "rt", "rid")
+    assert(AsOf.join(l, r, "k", "t", "lid", "rk", "rt", "rid").count() === 1)
+    assert(!spark.experimental.extraStrategies.contains(AsOfStrategy),
+      spark.experimental.extraStrategies)
   }
 
   test("physical plan is the custom merge-scan exec with co-partitioned sides") {
