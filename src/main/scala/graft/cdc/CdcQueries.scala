@@ -31,7 +31,6 @@ object CdcQueries {
   // ---------------------------------------------------------------- A1
   def pgoutputDecode(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    PgOutputExpressions.register(s)
     val changes = ChangeFeed.fromEvents(s, dir)
     val wire = changes.select(struct(
       when($"op" === "i", "I").when($"op" === "d", "D").otherwise("U").as("op"),
@@ -211,7 +210,6 @@ object CdcQueries {
     * in-memory RelationSet registry (main.go:380-430). */
   def schemaEvolution(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    PgOutputExpressions.register(s)
     val changes = ChangeFeed.fromEvents(s, dir)
 
     def colsFor(v: Int): Seq[String] = v match {
@@ -411,7 +409,6 @@ object CdcQueries {
     * the stage — the operational posture at 100 TB. */
   def decodeQuarantine(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    PgOutputExpressions.register(s)
     val changes = ChangeFeed.fromEvents(s, dir)
     val wire = changes.select($"seq", struct(
         when($"op" === "i", "I").when($"op" === "d", "D").otherwise("U").as("op"),
@@ -857,7 +854,6 @@ object CdcQueries {
   def typedDecode(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     import graft.sources.ChangeEventFiles.pgTyped
-    PgOutputExpressions.register(s)
     val base = graft.Tables.events(s, dir)
       .withColumn("cents", floor($"value" * 100 + 0.5).cast("long"))
     val cells = base.select($"event_id", struct(
@@ -946,7 +942,6 @@ object CdcQueries {
     * the executors and returns the segment dir. */
   private[graft] def writeWireSegments(s: SparkSession, dir: String): String = {
     import s.implicits._
-    PgOutputExpressions.register(s)
     val changes = ChangeFeed.fromEvents(s, dir)
     val wire = changes.select($"seq", struct(
         when($"op" === "i", "I").when($"op" === "d", "D").otherwise("U").as("op"),
@@ -988,7 +983,6 @@ object CdcQueries {
     * decode path and state machine cannot diverge between transports. */
   private[graft] def latestStateFromWire(s: SparkSession, msgs: DataFrame): DataFrame = {
     import s.implicits._
-    PgOutputExpressions.register(s)
     val decoded = msgs
       .select(expr("pg_decode(msg)").as("d"))
       .select(
@@ -1284,7 +1278,6 @@ object CdcQueries {
     * would just partitionBy the routing column. */
   def tableRouting(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    PgOutputExpressions.register(s)
     val changes = ChangeFeed.fromEvents(s, dir)
     val wire = changes.select(struct(
         when($"op" === "i", "I").when($"op" === "d", "D").otherwise("U").as("op"),

@@ -221,15 +221,7 @@ object PgOutputExpressions {
       copy(child = c)
   }
 
-  /** Register as SQL functions once per session; returns helper names. */
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    reg.createOrReplaceTempFunction("pg_decode", es => PgDecode(es.head), "scala_udf")
-    reg.createOrReplaceTempFunction("pg_decode_permissive",
-      es => PgDecodePermissive(es.head), "scala_udf")
-    reg.createOrReplaceTempFunction("pg_encode", es => PgEncode(es.head), "scala_udf")
-    reg.createOrReplaceTempFunction("pg_array", es => PgArrayParse(es.head), "scala_udf")
-    reg.createOrReplaceTempFunction("pg_split_frames",
-      es => PgSplitFrames(es.head), "scala_udf")
-  }
+  /** Forwards to [[graft.Graft.register]], the one install path for a
+    * session built without [[graft.GraftExtensions]]. */
+  def register(spark: SparkSession): Unit = graft.Graft.register(spark)
 }

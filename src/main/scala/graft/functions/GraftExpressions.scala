@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.types._
@@ -144,26 +143,5 @@ object GraftExpressions {
     override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
       defineCodeGen(ctx, ev, c => s"$H.hyperplaneCode($c, $numPlanes, ${seed}L)")
     override protected def withNewChildInternal(c: Expression): HyperplaneLsh = copy(child = c)
-  }
-
-  /** Register as SQL functions (idempotent, per session). */
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    reg.createOrReplaceTempFunction("minhash_sig",
-      es => MinHashSig(es.head, es(1).eval().asInstanceOf[Int]), "scala_udf")
-    reg.createOrReplaceTempFunction("simhash64", es => SimHash64(es.head), "scala_udf")
-    reg.createOrReplaceTempFunction("byte_sum", es => ByteSum(es.head), "scala_udf")
-    reg.createOrReplaceTempFunction("phash32", es => Phash32(es.head), "scala_udf")
-    reg.createOrReplaceTempFunction("phash64", es => Phash64(es.head), "scala_udf")
-    reg.createOrReplaceTempFunction("fingerprint64", es => Fingerprint64(es.head), "scala_udf")
-    reg.createOrReplaceTempFunction("cosine_sim", es => CosineSim(es.head, es(1)), "scala_udf")
-    reg.createOrReplaceTempFunction("vec_valid", es => VecValid(es.head), "scala_udf")
-    reg.createOrReplaceTempFunction("lsh_bucket",
-      es => HyperplaneLsh(es.head, es(1).eval().asInstanceOf[Int],
-        es(2).eval().asInstanceOf[Number].longValue()), "scala_udf")
-    reg.createOrReplaceTempFunction("pq_codes",
-      es => PqOps.PqCodes(es.head, es(1)), "scala_udf")
-    reg.createOrReplaceTempFunction("pq_adc_lut",
-      es => PqOps.PqAdcLut(es.head, es(1)), "scala_udf")
   }
 }

@@ -2,7 +2,6 @@ package graft.functions
 
 import java.nio.ByteBuffer
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
@@ -88,18 +87,6 @@ case class MinKAgg(child: Expression, k: Int,
     copy(inputAggBufferOffset = o)
   override protected def withNewChildrenInternal(cs: IndexedSeq[Expression]): MinKAgg =
     copy(child = cs.head)
-}
-
-object MinKAgg {
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    reg.createOrReplaceTempFunction("min_k",
-      es => MinKAgg(es.head, es(1).eval().asInstanceOf[Number].intValue()),
-      "scala_udf")
-    reg.createOrReplaceTempFunction("min_k_by",
-      es => MinKPairAgg(es.head, es(1).eval().asInstanceOf[Number].intValue()),
-      "scala_udf")
-  }
 }
 
 /** Bounded buffer for the k lexicographically-smallest (key, value)

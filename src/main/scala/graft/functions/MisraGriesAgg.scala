@@ -2,7 +2,6 @@ package graft.functions
 
 import java.nio.ByteBuffer
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
@@ -137,11 +136,4 @@ case class MisraGriesAgg(child: Expression, m: Int,
   override protected def withNewChildrenInternal(
       cs: IndexedSeq[Expression]): MisraGriesAgg =
     copy(child = cs.head)
-}
-
-object MisraGriesAgg {
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction("mg_agg",
-      es => MisraGriesAgg(es.head, es(1).eval().asInstanceOf[Number].intValue()),
-      "scala_udf")
 }

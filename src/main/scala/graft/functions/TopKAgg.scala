@@ -2,7 +2,6 @@ package graft.functions
 
 import java.nio.ByteBuffer
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
@@ -99,11 +98,4 @@ case class TopKAgg(child: Expression, k: Int,
     copy(inputAggBufferOffset = o)
   override protected def withNewChildrenInternal(cs: IndexedSeq[Expression]): TopKAgg =
     copy(child = cs.head)
-}
-
-object TopKAgg {
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction("topk_agg",
-      es => TopKAgg(es.head, es(1).eval().asInstanceOf[Number].intValue()),
-      "scala_udf")
 }

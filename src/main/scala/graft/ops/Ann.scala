@@ -5,7 +5,6 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.Tables.table
-import graft.functions.GraftExpressions
 
 /** C6–C7: similarity search over the `embeddings` table.
   *
@@ -59,9 +58,8 @@ object Ann {
     * row at every embeddings scan and cost the family 1.5–3× (r10
     * verdict finding #1); this is the codegen replacement. NULL
     * input → NULL here vs false before — identical under every call
-    * site, which are all Filters. Requires
-    * [[graft.functions.GraftExpressions.register]] on the session
-    * (every caller registers). */
+    * site, which are all Filters. Resolves through the session's
+    * function registry ([[graft.GraftExtensions]]). */
   def validVec(v: Column): Column = call_function("vec_valid", v)
 
   /** DuckDB twin of [[validVec]], interpolated VERBATIM into every
@@ -93,7 +91,6 @@ object Ann {
 
   private def corpus(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    GraftExpressions.register(s)
     table(s, dir, "embeddings")
       .select($"vec_id", $"embedding".cast("array<double>").as("v"))
       .filter(validVec($"v"))
@@ -106,7 +103,6 @@ object Ann {
     * order is reproducible across engines. */
   def annBruteforce(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    GraftExpressions.register(s)
     val c = corpus(s, dir)
     val q = c.filter($"vec_id" < QueryIds)
       .select($"vec_id".as("query_id"), $"v".as("qv"))
@@ -154,7 +150,6 @@ object Ann {
     * nprobe/K of the data; K scales with corpus size (√N rule). */
   def annIvf(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    GraftExpressions.register(s)
     val NProbe = 4
     val (assigned, probesAll) = ivfModel(s, dir)
     val probes = probesAll.filter($"pr" <= NProbe)
@@ -180,7 +175,6 @@ object Ann {
     * trajectory C7b's recall contract is calibrated on. */
   private def ivfModel(s: SparkSession, dir: String): (DataFrame, DataFrame) = {
     import s.implicits._
-    GraftExpressions.register(s)
     val K = 16; val Iters = 2
     val c = graft.Tables.spread(s, corpus(s, dir))
 
@@ -299,7 +293,6 @@ object Ann {
     * ~BaseProbe/K of the corpus post-filter. */
   def annFiltered(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    GraftExpressions.register(s)
     val BaseProbe = 2
     val keep = table(s, dir, "documents").filter($"lang" === "en")
       .select($"doc_id".as("vec_id"))
@@ -447,7 +440,6 @@ object Ann {
     * natural partition key for downstream per-cluster processing. */
   def embClusterAssign(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    GraftExpressions.register(s)
     val c = corpus(s, dir)
     val cent = c.filter($"vec_id" < QueryIds)
       .select($"vec_id".as("cluster"), $"v".as("cv"))
@@ -495,7 +487,6 @@ object Ann {
     * exact where an LPT greedy loop would not be SQL-expressible. */
   def embIndexShards(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    GraftExpressions.register(s)
     val cells = 32
     val shards = 8
     val c = corpus(s, dir)
@@ -564,7 +555,6 @@ object Ann {
     * Recall vs [[annBruteforce]] is measured in AnnSpec. */
   def annLsh(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    GraftExpressions.register(s)
     val Bits = 6
     val coded = corpus(s, dir)
       .withColumn("code", expr(s"lsh_bucket(v, $Bits, 42)"))
@@ -673,7 +663,6 @@ object Ann {
     * width's ranking is the same candidate-pruned path C36 provides. */
   def embMatryoshka(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    GraftExpressions.register(s)
     val widths = Seq(8, 16, 32, 64)
     val c = corpus(s, dir)
     val q = c.filter($"vec_id" < QueryIds)
@@ -765,7 +754,6 @@ object Ann {
     * cells×dims-sized. */
   def embCentroidDrift(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    GraftExpressions.register(s)
     val v1 = corpus(s, dir)
     val v2 = v1.filter($"vec_id" % 3 =!= 0)
       .withColumn("v", when($"vec_id" % 5 === 0,
@@ -1311,7 +1299,6 @@ object Ann {
   val KnnProbes = 4
   private[ops] def embKnnGraph(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    GraftExpressions.register(s)
     val c = graft.Tables.spread(s, corpus(s, dir))
     val n = c.count()
     val k = math.max(8L, (n + 255) / 256).toInt
@@ -1377,7 +1364,6 @@ object Ann {
     * real regression. Edge-level shape is spec-pinned in AnnSpec. */
   def embKnnGraphAudit(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    GraftExpressions.register(s)
     val edges = embKnnGraph(s, dir)
     val c = corpus(s, dir)
     val sample = c.filter($"vec_id" % 37 === 0)
@@ -1540,7 +1526,6 @@ object Ann {
       init: IndexedSeq[IndexedSeq[IndexedSeq[Double]]],
       iters: Int): IndexedSeq[IndexedSeq[IndexedSeq[Double]]] = {
     import s.implicits._
-    graft.functions.GraftExpressions.register(s)
     var cbs = init
     for (_ <- 1 to iters) {
       val cbLit = typedLit(cbs.map(_.map(_.toSeq).toSeq).toSeq)
@@ -1605,7 +1590,6 @@ object Ann {
     // floor at 0.75, nprobe unchanged)
     val cbs = lloydRefine(s, c, cbs0, PqIters)
     val cbLit = typedLit(cbs.map(_.map(_.toSeq).toSeq).toSeq)
-    graft.functions.GraftExpressions.register(s)
 
     // per-cell affinity via the FUSED codegen cosine kernel
     // (functions/HashOps.cosine): dot + both norms in one array pass,

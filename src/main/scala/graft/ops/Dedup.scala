@@ -5,7 +5,6 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.Tables.table
-import graft.functions.GraftExpressions
 
 /** C1–C5: deduplication operators over `documents` / `embeddings`
   * (SURVEY.md §2.C). The reference materializes clean tables from
@@ -573,7 +572,6 @@ object Dedup {
 
   private[ops] def minhashPairs(s: SparkSession, shingledDf: DataFrame): DataFrame = {
     import s.implicits._
-    GraftExpressions.register(s)
     minhashPairsSigned(s,
       shingledDf.withColumn("sig", expr("minhash_sig(sh, 128)")).persist())
       .orderBy($"d1", $"d2")
@@ -591,8 +589,6 @@ object Dedup {
     * branches consume it); output pairs are unsorted. */
   private[ops] def minhashPairsSigned(s: SparkSession, sh: DataFrame): DataFrame = {
     import s.implicits._
-    GraftExpressions.register(s)
-    graft.functions.MinKAgg.register(s)
     // band shuffle carries (doc_id, band, hash) only — never the
     // shingle arrays (16× duplication of the corpus otherwise)
     val bands = sh.select($"doc_id",
@@ -652,7 +648,7 @@ object Dedup {
     // "SHJ pin envelope") for the arithmetic at 100 TB. Since r15 the
     // requirement is SELF-ENFORCING at plan time: ShjEnvelope.check
     // computes est_bytes/partitions for every pinned build and warns
-    // (or fails under spark.graft.shj.enforce) past the 128 MiB/task
+    // past the 128 MiB/task
     // budget — the envelope stopped being prose.
     // Confirm frame digested to 64-bit shingle hashes (r16, the C28
     // move): |∩| and the sizes are collision-transparently identical,
@@ -897,7 +893,6 @@ object Dedup {
     * members pair via the within-class equi-join. */
   def simhashPairs(s: SparkSession, feed: DataFrame): DataFrame = {
     import s.implicits._
-    GraftExpressions.register(s)
     // null text has no fingerprint: such rows would die at the null-cv
     // blocking join anyway — the explicit filter states the contract
     // (and the audit oracle's closed form carries the same predicate)
@@ -1264,7 +1259,6 @@ object Dedup {
     * in Spark and DuckDB; cos(v, v′) ≈ 0.997 on the unit-norm corpus. */
   def nearFeed(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    GraftExpressions.register(s)
     // valid-vector contract (see ops/Ann.scala): cosine-confirm and
     // centroid training are undefined on NULL / zero-norm vectors
     val e = table(s, dir, "embeddings")
@@ -1374,7 +1368,6 @@ object Dedup {
       k: Int, iters: Int): DataFrame = {
     import s.implicits._
     import org.apache.spark.sql.expressions.Window
-    GraftExpressions.register(s)
     var cents = feed.orderBy($"vec_id").limit(k)
       .select(row_number().over(Window.orderBy($"vec_id"))
           .cast("long").as("cluster"),
@@ -1445,7 +1438,6 @@ object Dedup {
       targetCellRows: Int, cellCap: Int): DataFrame = {
     import s.implicits._
     import org.apache.spark.sql.expressions.Window
-    GraftExpressions.register(s)
     val n = feed.count()
     val k = math.max(8L, (n + targetCellRows - 1) / targetCellRows).toInt
     val cents = trainedCentroids(s, feed, k, SemIters)
@@ -1570,7 +1562,6 @@ object Dedup {
 
   def dedupEmbedding(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    GraftExpressions.register(s)
     val Tables = 16; val Bits = 16
     val feed = nearFeed(s, dir)
     val codes = feed.select($"vec_id", explode(array((0 until Tables).map(t =>
@@ -1586,7 +1577,6 @@ object Dedup {
     // 128 hash-smallest ids as the old sliced collect_list, but its
     // partial buffers are 128-bounded — a degenerate bucket can't
     // OOM a task (same r10 hardening as C3's min_k)
-    graft.functions.MinKAgg.register(s)
     val buckets = codes.groupBy($"tbl", $"code")
       .agg(expr("min_k_by(struct(xxhash64(vec_id), vec_id), 128)").as("ids"))
       .filter(size($"ids") > 1)

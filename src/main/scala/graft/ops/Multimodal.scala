@@ -91,7 +91,6 @@ object Multimodal {
     * no shuffle before the presentation sort. */
   def mmFrames(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    graft.functions.GraftExpressions.register(s)
     val FrameLen = 64
     manifest(s, dir).toDF()
       // empty payload -> ZERO frames: without the guard, Spark's
@@ -246,7 +245,6 @@ object Multimodal {
     * once per query, not twice. */
   private def phashHashed(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    graft.functions.GraftExpressions.register(s)
     phashFeed(s, dir)
       .select($"doc_id", expr("phash64(encode(text, 'UTF-8'))").as("phash"))
   }
@@ -283,7 +281,6 @@ object Multimodal {
   private def pairsFromHashed(hashed: DataFrame): DataFrame = {
     val s = hashed.sparkSession
     import s.implicits._
-    graft.functions.MinKAgg.register(s)
     val cap = Dedup.BucketCap
     // one row per distinct hash: cnt + the cap smallest member ids
     // (min_k's partial buffers are cap-bounded — a viral cohort never
@@ -666,7 +663,6 @@ object Multimodal {
     * no second exchange (plan-audited in Round9OpsSpec). */
   def mmSceneSegments(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    graft.functions.GraftExpressions.register(s)
     val FrameLen = 64
     val w = Window.partitionBy($"doc_id").orderBy($"f")
     val frames = manifest(s, dir).toDF()

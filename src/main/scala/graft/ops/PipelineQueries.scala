@@ -113,7 +113,6 @@ object PipelineQueries {
     * rounding on both engines. */
   def embQuantize(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    graft.functions.GraftExpressions.register(s)
     val r6 = (c: org.apache.spark.sql.Column) => floor(c * 1000000 + 0.5) / 1000000
     graft.Tables.table(s, dir, "embeddings")
       .select($"vec_id", $"embedding".cast("array<double>").as("v"))
@@ -645,7 +644,6 @@ object PipelineQueries {
   private[graft] def pipelineStreamNeardupFpt(
       s: SparkSession, dir: String, fpt: Int): DataFrame = {
     import s.implicits._
-    graft.functions.GraftExpressions.register(s)
     val docs = graft.Tables.table(s, dir, "documents")
       .select($"doc_id", $"text")
     // Option decode — empty corpus ⇒ 0 cuts ⇒ three empty batches ⇒

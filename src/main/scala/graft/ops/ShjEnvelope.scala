@@ -17,16 +17,13 @@ import org.apache.spark.sql.catalyst.plans.logical.{Filter, Join, LogicalPlan, P
   * premium.
   *
   * [[check]] evaluates that arithmetic AT PLAN TIME from Catalyst's
-  * own size estimate for the build frame and warns loudly — or fails
-  * the query when `spark.graft.shj.enforce=true` — when the estimated
-  * per-task build exceeds [[BudgetBytes]]. The default is warn, not
-  * fail: Catalyst's estimate for these scan-derived frames is linear
+  * own size estimate for the build frame and warns loudly when the
+  * estimated per-task build exceeds [[BudgetBytes]]. It warns, never
+  * fails: Catalyst's estimate for these scan-derived frames is linear
   * in the corpus but was measured ~30× UNDER the in-memory build at
   * sf1 (executed-plan inventory), so an estimate BREACH means the
   * actual build is far past the envelope — while a hard fail on an
-  * estimate would let planner quirks kill legitimate queries. The
-  * enforce flag is for deployments that prefer dying at plan time to
-  * dying mid-shuffle.
+  * estimate would let planner quirks kill legitimate queries.
   *
   * Two estimate corrections (r15 ADVICE):
   *
@@ -107,8 +104,6 @@ object ShjEnvelope {
         s"frame_bytes/100MiB (≈ ${est / (100L * 1024 * 1024) + 1}), keep " +
         "spark.sql.adaptive.advisoryPartitionSizeInBytes under the budget, or " +
         "flip this pin to shuffle_merge (spillable, ~6.8× sort premium)."
-      if (spark.conf.get("spark.graft.shj.enforce", "false").toBoolean)
-        throw new IllegalStateException(msg)
       Console.err.println(s"GRAFT WARN $msg")
     }
     df

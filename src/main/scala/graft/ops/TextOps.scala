@@ -4,7 +4,6 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables.table
-import graft.functions.GraftExpressions
 
 /** C8–C11: per-document text analysis. All narrow (no shuffle except
   * the final presentation sort): at 100 TB these run at scan
@@ -240,7 +239,6 @@ object TextOps {
     * the shuffle carries (doc_id, fp) only. */
   def textFingerprint(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    GraftExpressions.register(s)
     val fp = Dedup.dupFeed(s, dir)
       .select($"doc_id", expr("fingerprint64(text)").as("fp"))
     fp.as("a").join(fp.as("b"),

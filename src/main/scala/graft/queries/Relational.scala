@@ -315,7 +315,6 @@ object Relational {
     * which is what survives a group with 10^9 rows. */
   def qTopkPerGroup(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    graft.functions.TopKAgg.register(s)
     table(s, dir, "orders")
       .groupBy($"o_custkey")
       .agg(expr("topk_agg(struct(o_totalprice, o_orderkey), 3)").as("top"))
@@ -801,7 +800,6 @@ object Relational {
     * here exists for the audit, not the sketch path. */
   def qHeavyHitters(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    graft.functions.MisraGriesAgg.register(s)
     val keyExpr = "CASE WHEN user_id % 5 < 2 THEN CAST(user_id % 20 AS BIGINT) " +
       "ELSE CAST(event_id % 5000 + 100 AS BIGINT) END"
     val ev = graft.Tables.events(s, dir).select(expr(keyExpr).as("k"))

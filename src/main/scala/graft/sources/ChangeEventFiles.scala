@@ -67,7 +67,7 @@ object ChangeEventFiles {
     pgTyped(m(name), pgType)
 
   def pgTyped(raw: Column, pgType: String): Column = normalize(pgType) match {
-    // array path needs PgOutputExpressions.register(spark) first
+    // array path calls pg_array, installed by graft.GraftExtensions
     case ArrayName(elem) =>
       transform(call_function("pg_array", raw), e => pgTyped(e, elem))
     case "boolean" | "bool" => raw.cast("boolean")

@@ -94,10 +94,12 @@ object PgWire {
     b.array()
   }
 
-  def standbyStatus(flushedLsn: Long): Array[Byte] = {
+  /** StandbyStatusUpdate 'r'. flushed = applied: the bounded reader
+    * applies at commit. `writtenLsn` is how far the standby has planned
+    * and then waited for more (the stream's `starvedLsn`). */
+  def standbyStatus(writtenLsn: Long, flushedLsn: Long): Array[Byte] = {
     val b = java.nio.ByteBuffer.allocate(1 + 8 + 8 + 8 + 8 + 1)
-    // written = flushed = applied: the bounded reader applies at commit
-    b.put('r'.toByte).putLong(flushedLsn).putLong(flushedLsn)
+    b.put('r'.toByte).putLong(writtenLsn).putLong(flushedLsn)
       .putLong(flushedLsn).putLong(SendTime).put(0.toByte)
     b.array()
   }
@@ -241,14 +243,16 @@ object PgWire {
   * pulse additionally waits until the un-acked span (sent LSN −
   * maxAckedLsn) shrinks under the window, making peak retention a
   * deterministic function of the window instead of the consumer's
-  * batch-cycle latency. The window must cover ≥ 2 pulse chunks: Spark
-  * commits batch N (→ the ack) only while CONSTRUCTING batch N+1,
-  * and construction needs new data — a 1-chunk window would gate the
-  * producer on an ack that needs the producer's next chunk (the
-  * commit-lag livelock this file documents); with ≥ 2 chunks in
-  * flight the next chunk is always already buffered. A 30 s deadline
-  * per wait degrades to un-paced replay rather than hanging the
-  * suite; the spec's retention assert then fails loudly. */
+  * batch-cycle latency. Spark commits batch N (→ the ack) only while
+  * CONSTRUCTING batch N+1, and construction needs new data: when one
+  * micro-batch planned every chunk in flight, the ack waits on the
+  * chunk the window holds back, whatever the window's size. So while
+  * it waits the replayer sends reply-requested keepalives, as a
+  * walsender does, and stops waiting once the standby's `written`
+  * reaches the sent LSN — the standby has planned all of it and needs
+  * more to commit. A 30 s deadline per wait degrades to un-paced
+  * replay rather than hanging the suite; the spec's retention assert
+  * then fails loudly. */
 class PgWireReplayServer(segDir: String, keepaliveEvery: Int = 64,
     pulseEvery: Int = 0, pulseMs: Long = 0L, ackWindowBytes: Long = 0L) {
   private val server = new ServerSocket(0, 1, InetAddress.getLoopbackAddress)
@@ -425,6 +429,7 @@ class PgWireReplayServer(segDir: String, keepaliveEvery: Int = 64,
     val in = new DataInputStream(new BufferedInputStream(sock.getInputStream, 65536))
     val requested = sessionBootstrap(in, out)
     @volatile var connAlive = true
+    @volatile var writtenLsn = -1L
     // ack drain on its own thread — the reference's standby loop is
     // full-duplex too (main.go:64–100 acks while :101–135 reads)
     val acks = new Thread(() => {
@@ -433,7 +438,7 @@ class PgWireReplayServer(segDir: String, keepaliveEvery: Int = 64,
         while (m.isDefined) {
           val buf = java.nio.ByteBuffer.wrap(m.get)
           if (buf.get() == 'r') {
-            buf.getLong() // written
+            writtenLsn = math.max(writtenLsn, buf.getLong())
             val flushed = buf.getLong()
             if (flushed > maxAckedLsn) maxAckedLsn = flushed
           }
@@ -468,9 +473,16 @@ class PgWireReplayServer(segDir: String, keepaliveEvery: Int = 64,
           out.flush()
           if (ackWindowBytes > 0) {
             val d = System.nanoTime() + 30L * 1000 * 1000 * 1000
-            while (lsn - maxAckedLsn > ackWindowBytes && connAlive &&
-                System.nanoTime() < d)
+            var polls = 0
+            while (lsn - maxAckedLsn > ackWindowBytes && writtenLsn < lsn &&
+                connAlive && System.nanoTime() < d) {
+              if (polls % 10 == 0) {
+                PgWire.writeCopyData(out, PgWire.keepalive(lsn, replyRequested = true))
+                out.flush()
+              }
+              polls += 1
               Thread.sleep(5)
+            }
           }
           if (pulseMs > 0) Thread.sleep(pulseMs)
         }
@@ -551,7 +563,8 @@ class PgWireTcpTable(host: String, port: Int, maxPerTrigger: Int,
 /** Driver-connected micro-batch stream (the Spark socket-source
   * pattern): a reader thread drains CopyData packets — XLogData
   * payloads buffer as (endLsn, msg) rows, reply-requested keepalives
-  * are answered immediately with the last COMMITTED lsn — and
+  * are answered immediately with the last COMMITTED lsn as `flushed`
+  * and `starvedLsn` as `written` — and
   * latestOffset blocks until end-of-WAL or new data, so
   * processAllAvailable() sees every replayed message exactly once.
   *
@@ -598,6 +611,10 @@ class PgWireTcpStream(host: String, port: Int, maxPerTrigger: Int = 0,
   @volatile private var ended = false
   @volatile private var stopped = false
   @volatile private var lastCommittedLsn = 0L
+  /** highest LSN at which latestOffset waited with every received
+    * message planned: the standby can commit (and ack) nothing more
+    * until the primary sends past it. Reported as `written`. */
+  @volatile private var starvedLsn = 0L
   /** peak uncommitted-row retention — the bounded-retention observable */
   @volatile private[graft] var maxRetained = 0
   /** non-empty micro-batches planned — the many-batches observable */
@@ -702,7 +719,7 @@ class PgWireTcpStream(host: String, port: Int, maxPerTrigger: Int = 0,
   private def sendStatus(lsn: Long): Unit = {
     val out = io._2
     out.synchronized {
-      PgWire.writeCopyData(out, PgWire.standbyStatus(lsn))
+      PgWire.writeCopyData(out, PgWire.standbyStatus(math.max(starvedLsn, lsn), lsn))
       out.flush()
     }
   }
@@ -769,8 +786,10 @@ class PgWireTcpStream(host: String, port: Int, maxPerTrigger: Int = 0,
     val s = start.asInstanceOf[LsnOffset].lsn
     val deadline = System.nanoTime() + 60L * 1000 * 1000 * 1000
     lock.synchronized {
-      while (!ended && maxLsn <= s && System.nanoTime() < deadline)
+      while (!ended && maxLsn <= s && System.nanoTime() < deadline) {
+        starvedLsn = math.max(starvedLsn, s)
         lock.wait(100)
+      }
       val cap = limit match {
         case r: ReadMaxRows => r.maxRows()
         case _ => Long.MaxValue

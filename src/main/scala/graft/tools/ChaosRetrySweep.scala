@@ -11,7 +11,6 @@ import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.catalyst.trees.TreeNodeTag
 import org.apache.spark.sql.execution.datasources.LogicalRelation
 import org.apache.spark.sql.execution.datasources.v2.{DataSourceV2Relation, DataSourceV2ScanRelation}
-import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{BooleanType, DataType}
 
 /** Injected first-attempt task failure: evaluates to `true` on every
@@ -99,12 +98,7 @@ object ChaosRetrySweep {
       if (chaos) spark.experimental.extraOptimizations ++= Seq(ChaosInjectRule)
       val out = graft.SparkEntry.queries.keys.toSeq.sorted.map { name =>
         val r = try {
-          val df = graft.SparkEntry.queries(name)(spark, sfDir)
-          val row = df
-            .select(xxhash64(df.columns.map(c => col(c).cast("string")): _*).as("h"))
-            .agg(count(lit(1)), sum((col("h") % 1000000007L).cast("long")))
-            .collect()(0)
-          Right((row.getLong(0), if (row.isNullAt(1)) 0L else row.getLong(1)))
+          Right(DeterminismSweep.contentHash(graft.SparkEntry.queries(name)(spark, sfDir)))
         } catch {
           case e: Exception =>
             Left(s"${e.getClass.getSimpleName}: ${String.valueOf(e.getMessage).take(140)}")

@@ -1,5 +1,6 @@
 package graft.tools
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Partition-count determinism audit (r11, generalizing the
@@ -37,6 +38,18 @@ import org.apache.spark.sql.functions._
   *   runMain graft.tools.DeterminismSweep <sfDir> [shuffle|splits|codegen]
   */
 object DeterminismSweep {
+  /** Order-insensitive content hash of a result, shared with
+    * [[ChaosRetrySweep]]: (row count, sum over rows of xxhash64 of the
+    * string-cast columns). Each row hash is reduced mod 1e9+7 first,
+    * so the BIGINT sum cannot overflow (an ANSI abort). */
+  def contentHash(df: DataFrame): (Long, Long) = {
+    val row = df
+      .select(xxhash64(df.columns.toSeq.map(c => col(c).cast("string")): _*).as("h"))
+      .agg(count(lit(1)), sum((col("h") % 1000000007L).cast("long")))
+      .collect()(0)
+    (row.getLong(0), if (row.isNullAt(1)) 0L else row.getLong(1))
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
     val axis = if (args.length > 1) args(1) else "shuffle"
@@ -46,20 +59,11 @@ object DeterminismSweep {
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
 
-    def contentHash(name: String): (Long, Long) = {
-      val df = graft.SparkEntry.queries(name)(spark, sfDir)
-      val row = df
-        .select(xxhash64(df.columns.map(c => col(c).cast("string")): _*).as("h"))
-        .agg(count(lit(1)), sum($bigint("h")))
-        .collect()(0)
-      val r = (row.getLong(0), if (row.isNullAt(1)) 0L else row.getLong(1))
+    def queryHash(name: String): (Long, Long) = {
+      val r = contentHash(graft.SparkEntry.queries(name)(spark, sfDir))
       graft.GraftSession.release(spark)
       r
     }
-    // sum(xxhash64) needs no overflow guard semantics — wraparound via
-    // the BIGINT sum would ANSI-abort; sum into DECIMAL then mod back
-    def $bigint(c: String) =
-      (col(c) % 1000000007L).cast("long")
 
     def setShape(variant: Int): Unit = axis match {
       case "splits" =>
@@ -87,9 +91,9 @@ object DeterminismSweep {
     graft.SparkEntry.queries.keys.toSeq.sorted.foreach { name =>
       try {
         setShape(0)
-        val a = contentHash(name)
+        val a = queryHash(name)
         setShape(1)
-        val b = contentHash(name)
+        val b = queryHash(name)
         if (a == b) println(s"DET ok   $name $a")
         else { bad += 1; println(s"DET DIFF $name ${tag(0)}=$a ${tag(1)}=$b") }
       } catch {

@@ -8,7 +8,6 @@ class CdcQueriesSpec extends AnyFunSuite {
 
   test("pg_decode_permissive nulls corrupt records instead of failing") {
     import spark.implicits._
-    PgOutputExpressions.register(spark)
     val good = PgOutput.encode(PgOutput.Insert(1, Seq(Some("42"), None)))
     val df = Seq(good, Array[Byte](0x7f, 0x00), Array[Byte]()).toDF("raw")
     // strict mode fails the job on the corrupt record

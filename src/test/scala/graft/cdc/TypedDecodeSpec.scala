@@ -13,7 +13,6 @@ class TypedDecodeSpec extends AnyFunSuite {
 
   private def one(cell: String, pgType: String): Any = {
     import spark.implicits._
-    PgOutputExpressions.register(spark)
     Seq(cell).toDF("raw").select(pgTyped($"raw", pgType)).collect().head.get(0)
   }
 

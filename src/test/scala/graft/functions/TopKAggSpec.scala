@@ -9,7 +9,6 @@ class TopKAggSpec extends AnyFunSuite {
 
   test("topk_agg edge cases: k > group size, ties, negatives, nulls") {
     import spark.implicits._
-    TopKAgg.register(spark)
     val df = Seq(
       // group 1: 2 rows with k=3 (k > size), tie on score -> lower id first
       (1L, 5.0, 10L), (1L, 5.0, 9L),
@@ -28,7 +27,6 @@ class TopKAggSpec extends AnyFunSuite {
 
   test("topk_agg survives repartitioned partial merges") {
     import spark.implicits._
-    TopKAgg.register(spark)
     // 1000 rows over 8 partitions: merge path must produce the global top
     val out = spark.range(1000)
       .select(lit(1L).as("g"), ($"id" % 7).cast("double").as("score"), $"id")

@@ -10,7 +10,6 @@ class DedupSpec extends AnyFunSuite {
 
   test("dedup_simhash equals brute-force hamming<=3 over all pairs") {
     import spark.implicits._
-    graft.functions.GraftExpressions.register(spark)
     // chunk blocking is exact by pigeonhole: 4 chunks, <=3 differing
     // bits -> at least one chunk identical. Verify against all-pairs.
     val fps = graft.Tables.table(spark, sf0001, "documents")

@@ -40,7 +40,6 @@ class Round11OpsSpec extends AnyFunSuite {
     // precondition: the shared-core band really does put all 69 docs in
     // one bucket (otherwise the chain test would pass vacuously through
     // under-cap per-group buckets)
-    graft.functions.GraftExpressions.register(spark)
     val maxBucket = feed
       .withColumn("sig", expr("minhash_sig(sh, 128)"))
       .select(explode(array((0 until 16).map(b =>

@@ -99,7 +99,6 @@ class Round12OpsSpec extends AnyFunSuite {
     val (rows, feed) = feedWithIds((g, i) => (g * 100L + i) * 16)
 
     // precondition: exactly one 70-member bucket, nothing else ≥ 2
-    graft.functions.GraftExpressions.register(spark)
     val bucketSizes = feed
       .withColumn("s", expr("minhash_sig(sh, 128)"))
       .select(explode(array((0 until 16).map(b =>

@@ -125,10 +125,10 @@ class AsOfJoinSpec extends AnyFunSuite {
   }
 
   test("GraftExtensions alone plans the as-of join, pruned to the scans' ReadSchema") {
-    // the fixture is the shipped session: with the AsOf.register
-    // fallback's strategy and rule removed, the extension's own must
-    // plan the operator, and the columns nothing consumes must leave
-    // the file scans even behind the state side's Union
+    // the fixture is the shipped session: with the session-global
+    // experimental strategies and rules emptied, the extension's own
+    // must plan the operator, and the columns nothing consumes must
+    // leave the file scans even behind the state side's Union
     import spark.implicits._
     val ev = graft.Tables.events(spark, sf0001)
     val l = ev.filter($"event_type" === "purchase")
@@ -165,8 +165,8 @@ class AsOfJoinSpec extends AnyFunSuite {
 
   test("AsOf.join leaves a session built with GraftExtensions untouched") {
     // the fixture names graft.GraftExtensions in spark.sql.extensions,
-    // so the extension already plans the operator and the register
-    // fallback must not append a second strategy to the session
+    // so the extension already plans the operator and AsOf.join must
+    // not append a second strategy to the session
     import spark.implicits._
     val l = Seq((1L, 10L, 1L)).toDF("k", "t", "lid")
     val r = Seq((1L, 5L, 2L)).toDF("rk", "rt", "rid")
