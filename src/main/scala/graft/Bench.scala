@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.logging.log4j.LogManager
 import org.apache.spark.sql.SparkSession
 
 /** Benchmark main (driver contract): run every registered query on
@@ -231,7 +232,8 @@ object Bench {
       val p = java.nio.file.Paths.get("BENCH_trailer.json")
       java.nio.file.Files.write(p, (sidecar + "\n").getBytes("UTF-8"))
     } catch { case t: Throwable =>
-      Console.err.println(s"GRAFT WARN could not write BENCH_trailer.json: $t")
+      LogManager.getLogger("graft.Bench").warn(
+        s"GRAFT WARN could not write BENCH_trailer.json: $t")
     }
     spark.stop()
   }

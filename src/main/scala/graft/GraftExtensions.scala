@@ -41,6 +41,7 @@ object GraftExtensions {
     fn[Phash64]("phash64")(es => Phash64(es.head)),
     fn[Fingerprint64]("fingerprint64")(es => Fingerprint64(es.head)),
     fn[CosineSim]("cosine_sim")(es => CosineSim(es.head, es(1))),
+    fn[FpDot]("fp_dot")(es => FpDot(es.head, es(1))),
     fn[VecValid]("vec_valid")(es => VecValid(es.head)),
     fn[HyperplaneLsh]("lsh_bucket")(es => HyperplaneLsh(es.head, int(es(1)),
       es(2).eval().asInstanceOf[Number].longValue())),

@@ -1,5 +1,10 @@
 package graft
 
+import java.util.concurrent.ConcurrentHashMap
+
+import scala.util.Try
+
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -7,8 +12,60 @@ import org.apache.spark.sql.types._
 /** Loaders for the driver-generated test tables (TESTDATA.md). */
 object Tables {
 
-  def table(s: SparkSession, dir: String, name: String): DataFrame =
-    s.read.parquet(s"$dir/$name.parquet")
+  /** The session confs Spark's parquet schema inference reads. */
+  private val InferenceConfs = Seq(
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.mergeSchema",
+    "spark.sql.caseSensitive")
+
+  /** What an inferred schema depends on: the file's status and the
+    * inference confs' session values. */
+  private final case class SchemaKey(length: Long, mtime: Long, confs: Seq[Option[String]])
+
+  /** One entry per qualified file path: the key it was inferred under
+    * and the `StructType` Spark's own inference returned. */
+  private val inferred = new ConcurrentHashMap[String, (SchemaKey, StructType)]()
+
+  /** The table `<dir>/<name>.parquet`, read with the schema Spark
+    * inferred for the same file before, so a repeated read starts no
+    * inference job (one `parquet at` job per call otherwise).
+    *
+    * The cache key is the qualified path, the file's length and
+    * modification time, and the session values of [[InferenceConfs]].
+    * A hit reads `s.read.schema(known).parquet(path)`. Everything else
+    * — a first read, a changed status or conf, a directory, a missing
+    * file, a status that cannot be read — is a plain
+    * `s.read.parquet(path)`, so its errors are Spark's own, and a
+    * successful one replaces the path's entry. No footer is parsed
+    * here: the only schema ever reused is the one Spark returned. */
+  def table(s: SparkSession, dir: String, name: String): DataFrame = {
+    val p = s"$dir/$name.parquet"
+    fileKey(s, p) match {
+      case Some((path, key)) =>
+        Option(inferred.get(path)) match {
+          case Some((k, schema)) if k == key => s.read.schema(schema).parquet(p)
+          case _ =>
+            val df = s.read.parquet(p)
+            inferred.put(path, (key, df.schema))
+            df
+        }
+      case None => s.read.parquet(p)
+    }
+  }
+
+  /** (qualified path, schema key) of a regular file, None otherwise. */
+  private def fileKey(s: SparkSession, p: String): Option[(String, SchemaKey)] =
+    Try {
+      val path = new Path(p)
+      val fs = path.getFileSystem(s.sessionState.newHadoopConf())
+      val st = fs.getFileStatus(path)
+      if (!st.isFile) None
+      else Some(fs.makeQualified(path).toString ->
+        SchemaKey(st.getLen, st.getModificationTime, InferenceConfs.map(s.conf.getOption)))
+    }.toOption.flatten
 
   /** Spread a frame across the session's cores ONLY when its planned
     * partition count is below them (r16 optimization pass, guide §2.3/

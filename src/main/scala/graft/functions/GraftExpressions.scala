@@ -1,7 +1,13 @@
 package graft.functions
 
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
+import org.apache.spark.sql.catalyst.analysis.TypeCheckResult.{TypeCheckFailure, TypeCheckSuccess}
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.codegen.Block._
+import org.apache.spark.sql.catalyst.util.ArrayData
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types._
 
 /** Custom Catalyst expressions for the training-data pipeline
@@ -102,6 +108,53 @@ object GraftExpressions {
     override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
       defineCodeGen(ctx, ev, (a, b) => s"$H.cosine($a, $b)")
     override protected def withNewChildrenInternal(l: Expression, r: Expression): CosineSim =
+      copy(left = l, right = r)
+  }
+
+  /** (array<double>, foldable array<double>) → BIGINT fixed-point dot
+    * product Σ floor(v_i·w_i·1e6 + 0.5), one generated pass over `v`
+    * with the weights decoded once (see [[HashOps.fpDot]]). It is the
+    * value of `aggregate(zip_with(v, w, (x, y) -> floor(x * y * 1000000
+    * + 0.5)), 0L, (acc, t) -> acc + t)`, whose lambdas run interpreted:
+    * NULL when the sizes differ or an element of `v` is NULL (zip_with
+    * pads with NULL), and `Add`'s overflow under the session's ANSI
+    * mode, fixed when the function is resolved, as `Add`'s is. */
+  case class FpDot(left: Expression, right: Expression,
+      ansi: Boolean = SQLConf.get.ansiEnabled) extends BinaryExpression {
+    override def nullIntolerant: Boolean = true
+    override def nullable: Boolean = true
+    override def dataType: DataType = LongType
+    override def checkInputDataTypes(): TypeCheckResult =
+      (left.dataType, right.dataType) match {
+        case (ArrayType(DoubleType, _), ArrayType(DoubleType, _))
+            if right.foldable && weights != null => TypeCheckSuccess
+        case (l, r) => TypeCheckFailure(s"fp_dot needs (array<double>, " +
+          s"a foldable array<double> without NULLs), got ($l, $r)")
+      }
+    /** The weights, decoded once; null when `w` is NULL or holds one. */
+    private lazy val weights: Array[Double] = right.eval() match {
+      case w: ArrayData if !(0 until w.numElements()).exists(w.isNullAt) => w.toDoubleArray()
+      case _ => null
+    }
+    override def eval(input: InternalRow): Any = left.eval(input) match {
+      case null => null
+      case v: ArrayData =>
+        val sum = HashOps.fpDot(v, weights, ansi)
+        if (HashOps.fpDotDefined(v, weights.length)) sum else null
+    }
+    override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+      val v = left.genCode(ctx)
+      val w = ctx.addReferenceObj("fpDotWeights", weights, "double[]")
+      ev.copy(code = code"""
+        |${v.code}
+        |boolean ${ev.isNull} = ${v.isNull};
+        |long ${ev.value} = -1L;
+        |if (!${ev.isNull}) {
+        |  ${ev.value} = $H.fpDot(${v.value}, $w, $ansi);
+        |  ${ev.isNull} = !$H.fpDotDefined(${v.value}, $w.length);
+        |}""".stripMargin)
+    }
+    override protected def withNewChildrenInternal(l: Expression, r: Expression): FpDot =
       copy(left = l, right = r)
   }
 

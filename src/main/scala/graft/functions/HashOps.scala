@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData, MathUtils}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Hot-loop hash/vector kernels, written against Catalyst's internal
@@ -167,6 +167,34 @@ object HashOps {
       i += 1
     }
     if (na == 0.0 || nb == 0.0) 0.0 else dot / (math.sqrt(na) * math.sqrt(nb))
+  }
+
+  /** Σ floor(v_i·w_i·1e6 + 0.5) over the leading terms of `v` and `w`
+    * that are defined: it stops at the shorter length and at the first
+    * NULL element of `v`. Each term is Spark `Floor`'s saturating
+    * `(long)` cast of the same IEEE expression `(v_i·w_i)·1e6 + 0.5`;
+    * the sum runs left to right from 0 and, with `ansi`, overflows the
+    * way Spark's ANSI `Add` does ([ARITHMETIC_OVERFLOW]), otherwise it
+    * wraps. Whether the whole dot is defined is [[fpDotDefined]]. */
+  def fpDot(v: ArrayData, w: Array[Double], ansi: Boolean): Long = {
+    val n = math.min(v.numElements(), w.length)
+    var acc = 0L
+    var i = 0
+    while (i < n && !v.isNullAt(i)) {
+      val t = math.floor(v.getDouble(i) * w(i) * 1000000 + 0.5).toLong
+      acc = if (ansi) MathUtils.addExact(acc, t) else acc + t
+      i += 1
+    }
+    acc
+  }
+
+  /** Whether every term of [[fpDot]] is defined: `v` has `n` elements
+    * and none of them is NULL. */
+  def fpDotDefined(v: ArrayData, n: Int): Boolean = {
+    if (v.numElements() != n) return false
+    var i = 0
+    while (i < n) { if (v.isNullAt(i)) return false; i += 1 }
+    true
   }
 
   /** Valid-vector predicate (the Spark half of the contract documented

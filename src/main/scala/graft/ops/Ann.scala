@@ -593,7 +593,7 @@ object Ann {
     * the sum, so the 64-term reduction is BIGINT addition —
     * order-free across partitions and engines.
     *
-    * 100 TB: fully narrow — 16 codegen'd fold expressions per row at
+    * 100 TB: fully narrow — 16 generated `fp_dot` passes per row at
     * scan parallelism, zero shuffles, no UDF; output is 16 doubles per
     * vector (4× compression before any index build touches it). */
   val RpOutDims = 16
@@ -613,11 +613,7 @@ object Ann {
   def embRandomProjection(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val cols = (0 until RpOutDims).map { k =>
-      val sgn = array(rpSigns(k).map(lit): _*)
-      val fp = aggregate(
-        zip_with($"v", sgn, (x, sg) =>
-          floor(x * sg * 1000000 + 0.5).cast("long")),
-        lit(0L), (acc, x) => acc + x)
+      val fp = call_function("fp_dot", $"v", array(rpSigns(k).map(lit): _*))
       r4(fp.cast("double") / 1000000).as(f"p$k%02d")
     }
     corpus(s, dir)

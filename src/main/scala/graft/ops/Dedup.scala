@@ -1003,7 +1003,7 @@ object Dedup {
     // caller-side persist + count that materialized the whole mining
     // DAG one extra cached pass before the checkpoint re-counted the
     // same edges)
-    val (labels, _) =
+    val (labels, _, _) =
       starContract(e.select($"d1".as("u"), $"d2".as("v")), -1)
     labels.select($"u".as("doc_id"), $"l".as("canonical_id"))
       .withColumn("cluster_size",
@@ -1014,7 +1014,8 @@ object Dedup {
   /** Alternating large-star/small-star connected components (Kiveris
     * et al., "Connected Components in MapReduce and Beyond", SoCC'14).
     * Input: directed pair frame (u, v); output: ((u, l) labels for
-    * every endpoint with l = component minimum, rounds taken).
+    * every endpoint with l = component minimum, rounds taken, input
+    * edge count). There are at most 2 × edges labels.
     *
     * Each round:
     *  - LARGE-STAR: every node links its *larger* neighbors to its
@@ -1068,7 +1069,7 @@ object Dedup {
   val SmallGraphCutoff = 250000L
 
   def starContract(edges0raw: DataFrame, parts: Int,
-      smallCutoff: Long = SmallGraphCutoff): (DataFrame, Int) = {
+      smallCutoff: Long = SmallGraphCutoff): (DataFrame, Int, Long) = {
     val s = edges0raw.sparkSession
     import s.implicits._
     // materialize the caller's edge derivation ONCE: verts and the
@@ -1127,7 +1128,7 @@ object Dedup {
         }
         .toDF("u", "l")
         .localCheckpoint()
-      return (labels, 0)
+      return (labels, 0, nEdges0)
     }
     val verts = edges0.select($"u")
       .unionByName(edges0.select($"v".as("u")))
@@ -1206,7 +1207,7 @@ object Dedup {
       val labels = verts.join(edges, Seq("u"), "left")
         .select($"u", coalesce($"v", $"u").as("l"))
         .localCheckpoint()
-      (labels, rounds)
+      (labels, rounds, nEdges0)
     }
   }
   /** Shared CTE chain: edges (C2's exact pair derivation ∪ closed-form

@@ -474,20 +474,21 @@ object Multimodal {
     val hashed = phashHashed(s, dir).localCheckpoint()
     val pairs = pairsFromHashed(hashed)
       .select($"d1".as("u"), $"d2".as("v"))
-    val (labels, _) = Dedup.starContract(pairs, 32)
+    val (labels, _, nEdges) = Dedup.starContract(pairs, 32)
     val mediaType = expr(
       "CASE doc_id % 3 WHEN 0 THEN 'image' WHEN 1 THEN 'audio' " +
       "ELSE 'video' END")
-    // size-gated broadcast (r16 verdict task 7, same gate as
-    // pipelineCanonicalCorpus): the checkpointed labels RDD carries no
-    // stats, so the planner defaults this corpus⋈labels join to SMJ —
-    // one cheap count over the checkpoint elects the broadcast when the
-    // label set is provably small, and keeps SMJ above the gate (label
+    // size-gated broadcast (same gate as pipelineCanonicalCorpus): the
+    // checkpointed labels RDD carries no stats, so the planner defaults
+    // this corpus⋈labels join to SMJ. Labels are at most 2 × the edge
+    // count starContract already took, so below the gate that bound
+    // elects the broadcast with no job; above it one count over the
+    // checkpoint decides, and SMJ stays for a large label set (label
     // volume is duplicate-proportional at 100 TB).
     val labelSide = {
       val l = labels.withColumnRenamed("u", "doc_id")
-      if (labels.count() <= PipelineQueries.DropBroadcastMaxRows) broadcast(l)
-      else l
+      val max = PipelineQueries.DropBroadcastMaxRows
+      if (2 * nEdges <= max || labels.count() <= max) broadcast(l) else l
     }
     hashed.select($"doc_id")
       .join(labelSide, Seq("doc_id"), "left")

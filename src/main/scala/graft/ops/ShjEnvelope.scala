@@ -2,6 +2,7 @@ package graft.ops
 
 import scala.annotation.tailrec
 
+import org.apache.logging.log4j.LogManager
 import org.apache.spark.network.util.JavaUtils
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.plans.logical.{Filter, Join, LogicalPlan, Project}
@@ -55,6 +56,8 @@ object ShjEnvelope {
     * flags long before a real executor OOM. */
   val BudgetBytes: Long = 128L * 1024 * 1024
 
+  private val log = LogManager.getLogger("graft.ops.ShjEnvelope")
+
   /** Last breach observed (stage, estimatedBytes, partitions) — test
     * observable. STICKY: a clean check never clears it, because a
     * multi-pin operator (c33 checks two frames) would otherwise erase
@@ -104,7 +107,7 @@ object ShjEnvelope {
         s"frame_bytes/100MiB (≈ ${est / (100L * 1024 * 1024) + 1}), keep " +
         "spark.sql.adaptive.advisoryPartitionSizeInBytes under the budget, or " +
         "flip this pin to shuffle_merge (spillable, ~6.8× sort premium)."
-      Console.err.println(s"GRAFT WARN $msg")
+      log.warn(s"GRAFT WARN $msg")
     }
     df
   }

@@ -7,6 +7,7 @@ import java.util.{Map => JMap, Set => JSet}
 import scala.collection.JavaConverters._
 import scala.collection.mutable.ArrayBuffer
 
+import org.apache.logging.log4j.LogManager
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
@@ -764,7 +765,7 @@ class PgWireTcpStream(host: String, port: Int, maxPerTrigger: Int = 0,
         // way, but a swallowed bootstrap error would surface only as a
         // mysteriously-empty stream — say what happened (r16 review).
         case t: Throwable =>
-          if (!stopped) Console.err.println(
+          if (!stopped) PgWireTcpStream.log.warn(
             s"GRAFT WARN pgoutput-tcp reader died: ${t.getClass.getSimpleName}: ${t.getMessage}")
       }
       finally lock.synchronized { ended = true; lock.notifyAll() }
@@ -908,6 +909,8 @@ class PgWireTcpStream(host: String, port: Int, maxPerTrigger: Int = 0,
 }
 
 object PgWireTcpStream {
+  private[v2] val log = LogManager.getLogger(classOf[PgWireTcpStream])
+
   /** most recently constructed stream — test-only retention probe */
   @volatile private[graft] var latest: PgWireTcpStream = _
 }

@@ -25,8 +25,6 @@ object DirtyData {
     val spark = graft.GraftSession.local()
     spark.sparkContext.setLogLevel("WARN")
 
-    def slice(idCol: String, r: Int) = pmod(col(idCol), lit(23)) === lit(r)
-
     // single-FILE layout, exactly like /root/testdata/sf*: the DuckDB
     // side of the parity check reads '<dir>/<table>.parquet' as a file
     def write(name: String, df: DataFrame): Unit =
@@ -55,38 +53,7 @@ object DirtyData {
       .withColumn("source",
         when(slice("doc_id", 13), lit(null: String)).otherwise(col("source"))))
 
-    val emb = spark.read.parquet(s"$src/embeddings.parquet")
-    write("embeddings", emb
-      .withColumn("embedding",
-        when(slice("vec_id", 3), lit(null).cast("array<float>"))
-          .when(slice("vec_id", 5),                      // all-zero vector
-            expr("transform(embedding, x -> cast(0.0 as float))"))
-          .when(slice("vec_id", 11),                     // NaN element (r11 ADVICE):
-            // the non-finite defect class — vec_valid drops these and
-            // the oracle's ValidVecSql carries a matching
-            // isfinite(list_sum(...)) term (a bare list_sum(...) > 0
-            // fold would KEEP them, since both engines order NaN > 0,
-            // and NaN then poisons every downstream kernel); this slice
-            // makes the parity gate prove agreement
-            expr("transform(embedding, (x, i) -> case when i = 0 then cast('NaN' as float) else x end)"))
-          .when(slice("vec_id", 13),                     // ±Inf element (r12 review:
-            // the OTHER overflowed-encoder shape — an Inf passes a
-            // NaN-only gate, then Inf−Inf dots go NaN downstream where
-            // Spark's floor(NaN)→0 silently diverges from DuckDB's NaN)
-            expr("transform(embedding, (x, i) -> case when i = 0 then cast('Infinity' as float)" +
-              " when i = 1 then cast('-Infinity' as float) else x end)"))
-          .when(slice("vec_id", 17),                     // finite-but-huge element
-            // (r13, from r12 ADVICE): 1e20 is a FINITE float whose
-            // float-domain square overflows — the class where the r12
-            // float-fold oracle silently diverged from the engine's
-            // double-domain kernel. Both sides now DROP it against the
-            // explicit VecNormCap bound (keeping it poisons 11 queries'
-            // int64 fixed-point envelopes — measured r13); this slice
-            // pins that both engines agree on the drop.
-            expr("transform(embedding, (x, i) -> case when i = 0 then cast(1.0e20 as float) else x end)"))
-          .otherwise(col("embedding")))
-      .withColumn("label",
-        when(slice("vec_id", 7), lit(null: Integer)).otherwise(col("label"))))
+    write("embeddings", embeddings(spark.read.parquet(s"$src/embeddings.parquet")))
 
     val ev = graft.Tables.eventsRaw(spark, src)
     write("events", ev
@@ -123,4 +90,40 @@ object DirtyData {
 
     spark.stop()
   }
+
+  private def slice(idCol: String, r: Int) = pmod(col(idCol), lit(23)) === lit(r)
+
+  /** The replica's embeddings: NULL, all-zero, NaN-, ±Inf- and
+    * 1e20-element vectors and NULL labels, each on its own residue. */
+  def embeddings(emb: DataFrame): DataFrame = emb
+    .withColumn("embedding",
+      when(slice("vec_id", 3), lit(null).cast("array<float>"))
+        .when(slice("vec_id", 5),                      // all-zero vector
+          expr("transform(embedding, x -> cast(0.0 as float))"))
+        .when(slice("vec_id", 11),                     // NaN element:
+          // the non-finite defect class — vec_valid drops these and
+          // the oracle's ValidVecSql carries a matching
+          // isfinite(list_sum(...)) term (a bare list_sum(...) > 0
+          // fold would KEEP them, since both engines order NaN > 0,
+          // and NaN then poisons every downstream kernel); this slice
+          // makes the parity gate prove agreement
+          expr("transform(embedding, (x, i) -> case when i = 0 then cast('NaN' as float) else x end)"))
+        .when(slice("vec_id", 13),                     // ±Inf element (the
+          // OTHER overflowed-encoder shape — an Inf passes a
+          // NaN-only gate, then Inf−Inf dots go NaN downstream where
+          // Spark's floor(NaN)→0 silently diverges from DuckDB's NaN)
+          expr("transform(embedding, (x, i) -> case when i = 0 then cast('Infinity' as float)" +
+            " when i = 1 then cast('-Infinity' as float) else x end)"))
+        .when(slice("vec_id", 17),                     // finite-but-huge element:
+          // 1e20 is a FINITE float whose
+          // float-domain square overflows — the class where a
+          // float-fold oracle silently diverged from the engine's
+          // double-domain kernel. Both sides now DROP it against the
+          // explicit VecNormCap bound (keeping it poisons 11 queries'
+          // int64 fixed-point envelopes); this slice
+          // pins that both engines agree on the drop.
+          expr("transform(embedding, (x, i) -> case when i = 0 then cast(1.0e20 as float) else x end)"))
+        .otherwise(col("embedding")))
+    .withColumn("label",
+      when(slice("vec_id", 7), lit(null: Integer)).otherwise(col("label")))
 }

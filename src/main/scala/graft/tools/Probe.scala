@@ -181,11 +181,8 @@ object Probe {
     private val done = new ConcurrentLinkedQueue[Job]()
     spark.sparkContext.addSparkListener(this)
 
-    override def onJobStart(e: SparkListenerJobStart): Unit = if (!isMarker(e)) {
-      val site = e.stageInfos.sortBy(_.stageId).lastOption
-        .map(_.name.takeWhile(_ != '\n')).getOrElse("?")
-      starts.put(e.jobId, (e.time, site))
-    }
+    override def onJobStart(e: SparkListenerJobStart): Unit =
+      if (!isMarker(e)) starts.put(e.jobId, (e.time, callSite(e)))
 
     override def onJobEnd(e: SparkListenerJobEnd): Unit =
       Option(starts.remove(e.jobId)).foreach { case (t0, site) =>
@@ -196,6 +193,12 @@ object Probe {
 
     def jobs(): Seq[Job] = { drainListenerBus(spark); done.asScala.toSeq.sortBy(_.id) }
   }
+
+  /** A job's call site: the first line of its final stage's name
+    * (e.g. `parquet at Tables.scala:58`). */
+  private[graft] def callSite(e: SparkListenerJobStart): String =
+    e.stageInfos.sortBy(_.stageId).lastOption
+      .map(_.name.takeWhile(_ != '\n')).getOrElse("?")
 
   private val MarkerKey = "graft.listener.marker"
 

@@ -13,7 +13,7 @@ class InstallPathSpec extends AnyFunSuite {
 
   private val names = Seq(
     "minhash_sig", "simhash64", "byte_sum", "phash32", "phash64",
-    "fingerprint64", "cosine_sim", "vec_valid", "lsh_bucket", "pq_codes",
+    "fingerprint64", "cosine_sim", "fp_dot", "vec_valid", "lsh_bucket", "pq_codes",
     "pq_adc_lut", "pg_decode", "pg_decode_permissive", "pg_encode",
     "pg_array", "pg_split_frames", "min_k", "min_k_by", "topk_agg", "mg_agg")
 
@@ -30,7 +30,7 @@ class InstallPathSpec extends AnyFunSuite {
       (b(id)._1 eq info) && (b(id)._2 eq build)
     }
 
-  test("a new session resolves all 20 graft functions before any query runs") {
+  test("a new session resolves every graft function before any query runs") {
     val s = spark.newSession()
     val reg = s.sessionState.functionRegistry
     assert(GraftExtensions.functions.map(_._1.funcName).sorted === names.sorted)

@@ -1,7 +1,6 @@
 package graft
 
 import java.util.concurrent.ConcurrentLinkedQueue
-import java.util.concurrent.atomic.AtomicInteger
 
 import scala.jdk.CollectionConverters._
 
@@ -24,16 +23,20 @@ object SparkEvents extends AdaptiveSparkPlanHelper {
   def drain(spark: SparkSession): Unit = Probe.drainListenerBus(spark)
 
   /** Spark jobs `body` runs, on any thread (streams included). */
-  def jobCount(spark: SparkSession)(body: => Unit): Int = {
+  def jobCount(spark: SparkSession)(body: => Unit): Int = jobSites(spark)(body).size
+
+  /** Call sites of the Spark jobs `body` runs, in start order, as
+    * `Probe --jobs` prints them. */
+  def jobSites(spark: SparkSession)(body: => Unit): Seq[String] = {
     val sc = spark.sparkContext
     drain(spark)
-    val n = new AtomicInteger
+    val sites = new ConcurrentLinkedQueue[String]()
     val l = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (!Probe.isMarker(e)) n.incrementAndGet()
+        if (!Probe.isMarker(e)) sites.add(Probe.callSite(e))
     }
     sc.addSparkListener(l)
-    try { body; drain(spark); n.get } finally sc.removeSparkListener(l)
+    try { body; drain(spark); sites.asScala.toSeq } finally sc.removeSparkListener(l)
   }
 
   /** Executed plans of the file writes `body` runs (search them with

@@ -94,7 +94,7 @@ class DedupSpec extends AnyFunSuite {
     // union-find fast path would otherwise absorb every fixture-scale
     // graph and leave the loop untested)
     val chain = (0L until 199L).map(i => (i + 1, i)).toDF("u", "v")
-    val (labels, rounds) = Dedup.starContract(chain, 4, smallCutoff = 0L)
+    val (labels, rounds, _) = Dedup.starContract(chain, 4, smallCutoff = 0L)
     val got = labels.as[(Long, Long)].collect().toMap
     assert(got.size === 200)
     assert(got.values.forall(_ == 0L), "every node labels to the chain min")
@@ -102,7 +102,7 @@ class DedupSpec extends AnyFunSuite {
       s"expected the loop to run ~log2(200) rounds, got $rounds")
     // multi-component + singleton sanity on the same code path
     val multi = Seq((1L, 2L), (2L, 3L), (10L, 11L), (20L, 20L)).toDF("u", "v")
-    val (l2, _) = Dedup.starContract(multi, 2, smallCutoff = 0L)
+    val (l2, _, _) = Dedup.starContract(multi, 2, smallCutoff = 0L)
     val m2 = l2.as[(Long, Long)].collect().toMap
     assert(m2 === Map(1L -> 1L, 2L -> 1L, 3L -> 1L,
       10L -> 10L, 11L -> 10L, 20L -> 20L))
@@ -118,9 +118,9 @@ class DedupSpec extends AnyFunSuite {
       (for (a <- 200L to 205L; b <- 200L to 205L if a != b) yield (a, b)) ++
       (0L until 30L).map(i => (i, i + 1)) ++            // reversed dups
       Seq((300L, 300L))).toDF("u", "v")                 // pure singleton
-    val (fast, fr) = Dedup.starContract(edges, 4)
+    val (fast, fr, _) = Dedup.starContract(edges, 4)
     assert(fr === 0, "fixture-scale graph must take the fast path")
-    val (loop, lr) = Dedup.starContract(edges, 4, smallCutoff = 0L)
+    val (loop, lr, _) = Dedup.starContract(edges, 4, smallCutoff = 0L)
     assert(lr >= 1, "cutoff 0 must force the distributed loop")
     val fm = fast.as[(Long, Long)].collect().toMap
     val lm = loop.as[(Long, Long)].collect().toMap
