@@ -184,17 +184,10 @@ object Bench {
     val medTotal = results.map(_._3).filter(_ >= 0).sum
     // Name which probe classes drifted WITHIN this run (r14 verdict
     // task 3's second half: the triples alone still make the reader do
-    // the ratio math). A class is flagged when its triple's max/min
-    // exceeds 1.5× — the same threshold the per-query noise gate uses —
-    // so "drift_classes":[] certifies a stable window and a non-empty
-    // list names the query classes whose cross-round deltas are
-    // unattributable this round (scan/agg shapes vs shuffle-heavy
-    // self-joins). Within-run only by design: an absolute idle
-    // baseline would hardcode this box.
-    val driftClasses = Seq(
+    // the ratio math)
+    val driftClasses = graft.tools.DriftCanary.driftedClasses(Seq(
       "scan" -> Seq(canaryPre, canaryMid, canaryPost),
-      "shuffle" -> Seq(canary2Pre, canary2Mid, canary2Post)
-    ).collect { case (cls, t) if t.min > 0 && t.max / t.min > 1.5 => cls }
+      "shuffle" -> Seq(canary2Pre, canary2Mid, canary2Post)))
     println(s"""{"queries_max":$maxs,"queries_median":$meds,"queries":$qs,"noise_vs_prev":${jarr(noise)},"noisy_queries":${jarr(noisyQueries)},"noisy":${noisyQueries.nonEmpty},"n_noisy":${noisyQueries.size},"n_ok":${results.count(_._2 >= 0)},"n_failed":${failed.size},"failed":${jarr(failed)},"metric":"total","value":${f3(total)},"median_total":${f3(medTotal)},"pairwise_min_total":${f3(pairwiseMinTotal)},"sweep_a_total":${f3(sweepATotal)},"sweep_b_total":${f3(sweepBTotal)},"canary_pre":${f3(canaryPre)},"canary_mid":${f3(canaryMid)},"canary_post":${f3(canaryPost)},"canary2_pre":${f3(canary2Pre)},"canary2_mid":${f3(canary2Mid)},"canary2_post":${f3(canary2Post)},"drift_classes":${jarr(driftClasses)},"runs":$Runs,"unit":"sec","sf":"$sfDir"}""")
     // Per-query compact lines (r16 verdict task 1): the headline line
     // above is several KB, so a consumer that keeps only the LAST

@@ -1,4 +1,5 @@
 package graft
+import org.apache.logging.log4j.LogManager
 import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
@@ -21,7 +22,7 @@ object Verify {
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
+        LogManager.getLogger("graft.Verify").warn(s"[verify] $name failed: ${e.getMessage}")
       }
       // queries that persist() internal branches (C2/C3) return lazy
       // frames, so they can't unpersist before the caller's action —

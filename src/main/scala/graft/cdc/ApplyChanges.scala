@@ -1,6 +1,6 @@
 package graft.cdc
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -20,11 +20,21 @@ object ApplyChanges {
     * removes the key. `ordering` must be a total order within key
     * (e.g. LSN / sequence number). */
   def latest(changes: DataFrame, keys: Seq[String], ordering: Seq[String],
-      opCol: String = "op", deleteOp: String = "d"): DataFrame = {
-    val w = Window.partitionBy(keys.map(col): _*).orderBy(ordering.map(col(_).desc): _*)
+      opCol: String = "op", deleteOp: String = "d"): DataFrame =
+    latestWithTombstones(changes, keys.map(col), ordering.map(col))
+      .filter(col(opCol) =!= deleteOp)
+
+  /** Latest row per key, KEEPING delete tombstones — what an upsert
+    * table stores, so a late lower-ordered change can never resurrect
+    * a deleted key. `partition` must include the key; a caller may lead
+    * with a function of the key (a bucket) so the window reuses a
+    * clustering its input already has. */
+  def latestWithTombstones(changes: DataFrame, partition: Seq[Column],
+      ordering: Seq[Column]): DataFrame = {
+    val w = Window.partitionBy(partition: _*).orderBy(ordering.map(_.desc): _*)
     changes
       .withColumn("__rn", row_number().over(w))
-      .filter(col("__rn") === 1 && col(opCol) =!= deleteOp)
+      .filter(col("__rn") === 1)
       .drop("__rn")
   }
 

@@ -1224,7 +1224,7 @@ object CdcQueries {
     // route them into the last batch; well-formed feeds carry none, seq
     // is framing-mandatory). Sorting each file by seq keeps row order
     // deterministic for latestWithTombstones' seq-only tie-break; batch
-    // ORDER is the point of the stream (v0 = first half).
+    // ORDER is the point of the stream (m0 = first half).
     val inDir = CdcStream.stageBatches(changes.filter($"seq".isNotNull).toDF(),
       when($"seq" <= cut, "00").otherwise("01"), Seq("00", "01"),
       s"graft_$tag", $"seq")
@@ -1233,16 +1233,21 @@ object CdcQueries {
       .as[ChangeRecord]
   }
 
+  /** Bucket count of the A26/A27 upsert tables: it sizes to KEY
+    * volume (file-churn vs rewrite-granularity trade: ~executor-sized
+    * buckets at scale); 16 at test SF. */
+  private val SinkBuckets = 16
+
   /** Time travel over the MVCC upsert sink: the feed streams through
-    * [[graft.sinks.MaterializedTable.upsertSink]] in two micro-batches
-    * (split at the median LSN), producing immutable snapshots v0 and
-    * v1 with an atomic pointer flip. The query then reads BOTH — the
-    * current state via the pointer, the v0 state via its version
+    * [[graft.sinks.PartitionedTable.upsertSink]] in two micro-batches
+    * (split at the median LSN), committing immutable manifests m0 and
+    * m1 with an atomic pointer flip. The query then reads BOTH — the
+    * current state via the pointer, the m0 state via its manifest
     * handle — and reports each live key's current row next to its
-    * as-of-v0 row (null if the key didn't exist yet). This is the
-    * reader's side of snapshot isolation: a v0 reader is undisturbed
-    * by the v1 write. The feed-split scalar is bounded-harness prep;
-    * the operator itself (snapshot write/read/join) runs on executors,
+    * as-of-m0 row (null if the key didn't exist yet). This is the
+    * reader's side of snapshot isolation: an m0 reader is undisturbed
+    * by the m1 write. The feed-split scalar is bounded-harness prep;
+    * the operator itself (bucket write/read/join) runs on executors,
     * one key shuffle per side. */
   def timeTravel(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
@@ -1250,12 +1255,12 @@ object CdcQueries {
     val table = graft.Scratch.dir("graft_tt_tbl").toString
     val ckpt = graft.Scratch.dir("graft_tt_ck").toString
     CdcStream.drain(CdcStream.startWithStateConf(s)(
-      graft.sinks.MaterializedTable.upsertSink(stream, table, ckpt)))
-    val vs = graft.sinks.MaterializedTable.versions(s, table)
-    val v0 = graft.sinks.MaterializedTable.readVersion(s, table, vs.head)
+      graft.sinks.PartitionedTable.upsertSink(stream, table, ckpt, SinkBuckets)))
+    val ms = graft.sinks.PartitionedTable.versions(s, table)
+    val m0 = graft.sinks.PartitionedTable.readVersion(s, table, ms.head, SinkBuckets)
       .filter($"op" =!= "d")
-    val cur = graft.sinks.MaterializedTable.readLatest(s, table)
-    cur.as("c").join(v0.as("o"), $"c.key" === $"o.key", "left")
+    val cur = graft.sinks.PartitionedTable.readLatest(s, table, SinkBuckets)
+    cur.as("c").join(m0.as("o"), $"c.key" === $"o.key", "left")
       .select($"c.key".as("user_id"), $"c.event_type".as("cur_event_type"),
         $"c.value".as("cur_value"), $"c.seq".as("cur_seq"),
         $"o.event_type".as("old_event_type"), $"o.value".as("old_value"),
@@ -1366,7 +1371,7 @@ object CdcQueries {
   // --------------------------------------------------------------- A27
   /** Incremental partitioned materialization + compaction over the
     * bucket-partitioned MVCC sink ([[graft.sinks.PartitionedTable]]):
-    * the 2-batch change stream upserts into 64 hash buckets (each batch
+    * the 2-batch change stream upserts into 16 hash buckets (each batch
     * rewrites only the buckets its keys touch; untouched buckets carry
     * forward by manifest reference), then `compact` drops delete
     * tombstones at or below the fully-acked seq horizon and merges each
@@ -1376,18 +1381,15 @@ object CdcQueries {
     * tombstone-GC mechanics are asserted in PartitionedTableSpec. */
   def compaction(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    // bucket count sizes to KEY volume (file-churn vs rewrite-granularity
-    // trade: ~executor-sized buckets at scale); 16 at test SF
-    val Buckets = 16
     val stream = twoBatchChangeStream(s, dir, "cpt")
     val table = graft.Scratch.dir("graft_cpt_tbl").toString
     val ckpt = graft.Scratch.dir("graft_cpt_ck").toString
     CdcStream.drain(CdcStream.startWithStateConf(s)(
-      graft.sinks.PartitionedTable.upsertSink(stream, table, ckpt, Buckets)))
+      graft.sinks.PartitionedTable.upsertSink(stream, table, ckpt, SinkBuckets)))
     val horizon = ChangeFeed.fromEvents(s, dir)
       .agg(max($"seq")).as[Option[Long]].head().getOrElse(0L)
-    graft.sinks.PartitionedTable.compact(s, table, Buckets, horizon)
-    lastState(graft.sinks.PartitionedTable.readLatest(s, table, Buckets))
+    graft.sinks.PartitionedTable.compact(s, table, SinkBuckets, horizon)
+    lastState(graft.sinks.PartitionedTable.readLatest(s, table, SinkBuckets))
   }
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(

@@ -1,15 +1,17 @@
 package graft.examples
 
 import graft.cdc.{CdcStream, ChangeFeed}
-import graft.sinks.MaterializedTable
+import graft.sinks.PartitionedTable
 
 /** End-to-end example: consume the events table as a bounded change
   * stream and maintain a materialized latest-state parquet table with
-  * the snapshot/pointer upsert sink.
+  * the bucketed manifest/pointer upsert sink.
   *
   *   runMain graft.examples.MaterializeEvents <sfDir> <tableDir> <ckptDir>
   */
 object MaterializeEvents {
+  private val Buckets = 16
+
   def main(args: Array[String]): Unit = {
     val Array(sfDir, tableDir, ckptDir) = args.take(3)
     val spark = graft.GraftSession.local()
@@ -24,11 +26,11 @@ object MaterializeEvents {
       .parquet(sfDir)
       .withColumn("ts", graft.Tables.eventTs(schema("ts").dataType))))
 
-    CdcStream.drain(MaterializedTable.upsertSink(changes, tableDir, ckptDir))
+    CdcStream.drain(PartitionedTable.upsertSink(changes, tableDir, ckptDir, Buckets))
 
-    val state = MaterializedTable.readLatest(spark, tableDir)
+    val state = PartitionedTable.readLatest(spark, tableDir, Buckets)
     println(s"MATERIALIZED rows=${state.count()} " +
-      s"tombstones=${MaterializedTable.readSnapshot(spark, tableDir).get
+      s"tombstones=${PartitionedTable.readSnapshot(spark, tableDir, Buckets).get
         .filter($"op" === "d").count()}")
     state.orderBy($"key").show(5)
     spark.stop()

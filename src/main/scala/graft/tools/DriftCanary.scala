@@ -37,6 +37,16 @@ object DriftCanary {
   /** One discarded codegen-warm call, then the timed probe. */
   def warmThenTime(spark: SparkSession): Double = { run(spark); run(spark) }
 
+  /** The probe classes that drifted within one run: a class whose
+    * timings' max/min exceeds 1.5× — the same threshold Bench's
+    * per-query noise gate uses — either way. An empty result certifies
+    * a stable window; a non-empty one names the query classes whose
+    * cross-window deltas are unattributable (scan/agg shapes vs
+    * shuffle-heavy self-joins). Within-run only by design: an absolute
+    * idle baseline would hardcode the box. */
+  def driftedClasses(timings: Seq[(String, Seq[Double])]): Seq[String] =
+    timings.collect { case (cls, t) if t.min > 0 && t.max / t.min > 1.5 => cls }
+
   /** Shuffle-class probe (r15, from the r14 verdict: the scan-shape
     * canary above is blind to CLASS-selective drift — r14's sf1 sweep
     * moved the shingle-self-join class +46–47% on untouched code while

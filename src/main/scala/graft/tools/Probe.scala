@@ -158,12 +158,8 @@ object Probe {
         val (scanPost, joinPost) = (DriftCanary.run(spark), DriftCanary.runJoin(spark))
         println(f"TIMER __canary_post__: $scanPost%.2f s")
         println(f"TIMER __canary2_post__: $joinPost%.2f s")
-        // Bench's drift_classes rule: a class whose pre/post pair moves
-        // >1.5x either way has drifted; an empty list means the sweep
-        // total is comparable across windows as it stands
-        val drifted = Seq("scan" -> (scanPre, scanPost), "shuffle" -> (joinPre, joinPost))
-          .collect { case (cls, (a, b))
-            if math.min(a, b) > 0 && math.max(a, b) / math.min(a, b) > 1.5 => cls }
+        val drifted = DriftCanary.driftedClasses(Seq(
+          "scan" -> Seq(scanPre, scanPost), "shuffle" -> Seq(joinPre, joinPost)))
         println(s"CANARY VERDICT: drift_classes=${drifted.mkString("[", ",", "]")}")
       }
       println(f"TIMER __total__: $total%.2f s (pairwise-min of ${o.runs} runs/query)")

@@ -66,31 +66,40 @@ class StorageLayoutSpec extends AnyFunSuite {
     s2.sql("DROP TABLE IF EXISTS lineitem_b")
   }
 
+  /** A table dir holding, per name `v{batch}_{ts}`, a version dir and
+    * its manifest `m{batch}_{ts}` (one bucket), pointer on `current`. */
+  private def fabricateTable(prefix: String, names: Seq[String], current: String): String = {
+    val table = Files.createTempDirectory(prefix).toString
+    names.foreach { v =>
+      new java.io.File(table, s"$v/__b=0").mkdirs()
+      Files.write(java.nio.file.Paths.get(table, "m" + v.drop(1)),
+        s"buckets\t1\n0\t$v".getBytes)
+    }
+    Files.write(java.nio.file.Paths.get(table, "_LATEST"), current.getBytes)
+    table
+  }
+
   test("vacuum keeps the pointer target and recent snapshots only") {
-    val table = Files.createTempDirectory("vac").toString
-    // fabricate three snapshot dirs + pointer at the middle one
-    val f = new java.io.File(table)
-    Seq("v0_1", "v1_2", "v2_3").foreach(v => new java.io.File(f, v).mkdirs())
-    Files.write(java.nio.file.Paths.get(table, "_LATEST"), "v2_3".getBytes)
-    val deleted = graft.sinks.MaterializedTable.vacuum(spark, table, keep = 1)
-    assert(deleted === Seq("v0_1", "v1_2"))
-    assert(new java.io.File(f, "v2_3").exists())
+    // three committed manifests, pointer on the newest
+    val table = fabricateTable("vac", Seq("v0_1", "v1_2", "v2_3"), "m2_3")
+    val deleted = graft.sinks.PartitionedTable.vacuum(spark, table, keep = 1)
+    assert(deleted === Seq("v0_1", "v1_2", "m0_1", "m1_2"))
+    assert(new java.io.File(table, "v2_3").exists())
+    assert(new java.io.File(table, "m2_3").exists())
   }
 
   test("vacuum survives a checkpoint restart that reset batch ids") {
     // r10 review finding: batch ids restart at 0 on a fresh checkpoint
     // while the wall-clock suffix keeps growing — a batch-id-first
-    // sort would rank the restarted run's snapshots below the dead
-    // run's and vacuum would delete the NEWEST dirs, keeping stale ones
-    val table = Files.createTempDirectory("vac_restart").toString
-    val f = new java.io.File(table)
-    // run 1 wrote v4_100/v5_101; the restarted job wrote v0_200 (current)
-    Seq("v4_100", "v5_101", "v0_200").foreach(v => new java.io.File(f, v).mkdirs())
-    Files.write(java.nio.file.Paths.get(table, "_LATEST"), "v0_200".getBytes)
-    assert(graft.sinks.MaterializedTable.versions(spark, table) ===
-      Seq("v4_100", "v5_101", "v0_200"))
-    val deleted = graft.sinks.MaterializedTable.vacuum(spark, table, keep = 1)
-    assert(deleted === Seq("v4_100", "v5_101"))
-    assert(new java.io.File(f, "v0_200").exists())
+    // sort would rank the restarted run's manifests below the dead
+    // run's and vacuum would delete the NEWEST, keeping stale ones
+    // run 1 committed m4_100/m5_101; the restarted job m0_200 (current)
+    val table = fabricateTable("vac_restart", Seq("v4_100", "v5_101", "v0_200"), "m0_200")
+    assert(graft.sinks.PartitionedTable.versions(spark, table) ===
+      Seq("m4_100", "m5_101", "m0_200"))
+    val deleted = graft.sinks.PartitionedTable.vacuum(spark, table, keep = 1)
+    assert(deleted === Seq("v4_100", "v5_101", "m4_100", "m5_101"))
+    assert(new java.io.File(table, "v0_200").exists())
+    assert(new java.io.File(table, "m0_200").exists())
   }
 }

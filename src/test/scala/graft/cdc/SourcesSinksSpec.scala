@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SparkFixture.{spark, sf0001}
-import graft.sinks.MaterializedTable
+import graft.sinks.PartitionedTable
 import graft.sources.ChangeEventFiles
 
 class SourcesSinksSpec extends AnyFunSuite {
@@ -89,10 +89,10 @@ class SourcesSinksSpec extends AnyFunSuite {
           .when($"event_type" === "error", "d").otherwise("u").as("op"),
         $"event_type", $"value", unix_micros($"ts").as("tsMicros"))
       .as[ChangeRecord]
-    val q = MaterializedTable.upsertSink(stream, table, ckpt)
+    val q = PartitionedTable.upsertSink(stream, table, ckpt, 16)
     try q.processAllAvailable() finally q.stop()
 
-    val got = MaterializedTable.readLatest(spark, table)
+    val got = PartitionedTable.readLatest(spark, table, 16)
       .select($"key", $"seq", $"event_type", $"value")
       .as[(Long, Long, String, Double)].collect().toSet
     val want = ApplyChanges.latest(
@@ -102,7 +102,7 @@ class SourcesSinksSpec extends AnyFunSuite {
     assert(got === want)
     assert(got.nonEmpty)
     // tombstones are retained in the snapshot itself
-    val snap = MaterializedTable.readSnapshot(spark, table).get
+    val snap = PartitionedTable.readSnapshot(spark, table, 16).get
     assert(snap.filter(col("op") === "d").count() > 0)
   }
 }

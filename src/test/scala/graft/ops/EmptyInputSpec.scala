@@ -14,10 +14,9 @@ import graft.SparkFixture.spark
   * raises by name; text_bpe_apply: pair exhaustion stops training
   * early, matching the oracle's empty-winner CROSS JOIN) — a 100 TB
   * stage fed an empty partition should flow, not abort. The full gate
-  * is the sweep (171 queries: 170 clean, 1 named contract —
-  * cdc_compaction's "no snapshot", a genuine caller bug); this spec
-  * pins the cheap representative fixes so a regression fails in
-  * `sbt test` without the sweep. */
+  * is the sweep (171 queries, all clean); this spec pins the cheap
+  * representative fixes so a regression fails in `sbt test` without
+  * the sweep. */
 class EmptyInputSpec extends AnyFunSuite {
 
   private lazy val emptyDir: String = {
@@ -62,10 +61,11 @@ class EmptyInputSpec extends AnyFunSuite {
     assert(rows("text_bpe_apply").isEmpty)  // was: named no-pairs error
   }
 
-  test("empty feed: the one remaining named contract fires by name") {
-    // compaction over a sink that never produced a snapshot IS a caller
-    // bug (there is nothing to compact INTO) — stays a named error
-    val e = intercept[IllegalStateException](rows("cdc_compaction"))
-    assert(e.getMessage.contains("no snapshot"))
+  test("empty feed: the upsert-sink queries read an empty table") {
+    // two empty micro-batches commit two empty manifests: the table
+    // exists and holds nothing, so compaction and time travel both
+    // return zero rows (was: cdc_compaction's named "no snapshot")
+    assert(rows("cdc_compaction").isEmpty)
+    assert(rows("cdc_time_travel").isEmpty)
   }
 }

@@ -152,16 +152,12 @@ class PartitionedTableSpec extends AnyFunSuite {
     assert(e.getMessage.contains("buckets"), e.getMessage)
   }
 
-  test("generic vacuum refuses the layout; manifest-aware vacuum keeps referenced dirs") {
+  test("manifest-aware vacuum keeps referenced dirs") {
     // r10 review finding: keep-newest vacuum on this layout would
     // delete version dirs the CURRENT manifest still references for
     // untouched buckets
     val b1 = (0L until 100L).map(k => rec(k, k + 1, "i"))
     val table = runTwoBatches("ptvac", b1, Seq(rec(0L, 1000L, "u")))
-    val e = intercept[IllegalStateException] {
-      MaterializedTable.vacuum(spark, table, keep = 1)
-    }
-    assert(e.getMessage.contains("PartitionedTable.vacuum"), e.getMessage)
     // both version dirs are referenced by the current manifest (batch-2
     // rewrote one bucket; 15 carry forward) — only the old manifest
     // may be deleted
@@ -176,5 +172,43 @@ class PartitionedTableSpec extends AnyFunSuite {
     assert(deleted2.exists(_.startsWith("v")),
       s"expected unreferenced v-dirs deleted: $deleted2")
     assert(PartitionedTable.readLatest(spark, table, Buckets).count() === 100)
+  }
+
+  test("an older manifest reads the state it committed (time travel)") {
+    import spark.implicits._
+    val b1 = (0L until 30L).map(k => rec(k, k + 1, "i"))
+    val b2 = Seq(rec(2L, 500L, "u"), rec(5L, 501L, "d"), rec(40L, 502L, "i"))
+    val table = runTwoBatches("tt", b1, b2)
+    val ms = PartitionedTable.versions(spark, table)
+    assert(ms.size === 2, s"expected one manifest per batch, got $ms")
+    val first = PartitionedTable.readVersion(spark, table, ms.head, Buckets)
+      .drop("__b").as[ChangeRecord].collect().sortBy(_.key).toSeq
+    assert(first === b1, "the first manifest must read the batch-0 state")
+    val want = (b1.filterNot(r => Set(2L, 5L)(r.key)) ++
+      Seq(rec(2L, 500L, "u"), rec(40L, 502L, "i"))).sortBy(_.key)
+    val cur = PartitionedTable.readLatest(spark, table, Buckets)
+      .as[ChangeRecord].collect().sortBy(_.key).toSeq
+    assert(cur === want, "readLatest must read the batch-1 state")
+    // the newest manifest is the pointer target: it reads the same
+    // state, tombstone included
+    val last = PartitionedTable.readVersion(spark, table, ms.last, Buckets)
+    assert(last.filter($"op" =!= "d").count() === want.size)
+    assert(last.filter($"op" === "d").select("key").as[Long].collect().toSeq === Seq(5L))
+  }
+
+  test("an empty first batch reads as an empty table without a job") {
+    val table = runTwoBatches("empty1", Seq.empty, Seq.empty)
+    assert(PartitionedTable.readManifest(spark, table).isEmpty)
+    var rows = Array.empty[org.apache.spark.sql.Row]
+    var columns = Array.empty[String]
+    val jobs = graft.SparkEvents.jobCount(spark) {
+      val state = PartitionedTable.readLatest(spark, table, Buckets)
+      columns = state.columns
+      rows = state.collect()
+    }
+    assert(rows.isEmpty)
+    assert(columns.toSeq ===
+      org.apache.spark.sql.Encoders.product[ChangeRecord].schema.fieldNames.toSeq)
+    assert(jobs === 0, s"reading an empty manifest ran $jobs jobs")
   }
 }

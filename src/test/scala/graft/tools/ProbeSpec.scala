@@ -34,4 +34,14 @@ class ProbeSpec extends AnyFunSuite {
     assert(failed === 1)
     assert(lines.exists(l => l.startsWith("TIMER no_such_query: FAILED")), lines)
   }
+
+  test("one drift rule: a class whose timings move more than 1.5x either way") {
+    // Bench passes pre/mid/post triples, Probe pre/post pairs
+    assert(DriftCanary.driftedClasses(Seq(
+      "scan" -> Seq(2.0, 3.0, 2.5), "shuffle" -> Seq(1.0, 1.2, 1.51))) === Seq("shuffle"))
+    assert(DriftCanary.driftedClasses(Seq(
+      "scan" -> Seq(4.0, 2.0), "shuffle" -> Seq(1.0, 1.5))) === Seq("scan"))
+    // a zero reading names no class (no ratio to take)
+    assert(DriftCanary.driftedClasses(Seq("scan" -> Seq(0.0, 9.0))) === Seq.empty)
+  }
 }
