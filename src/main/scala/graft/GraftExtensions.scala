@@ -51,7 +51,6 @@ object GraftExtensions {
     fn[PgDecodePermissive]("pg_decode_permissive")(es => PgDecodePermissive(es.head)),
     fn[PgEncode]("pg_encode")(es => PgEncode(es.head)),
     fn[PgArrayParse]("pg_array")(es => PgArrayParse(es.head)),
-    fn[PgSplitFrames]("pg_split_frames")(es => PgSplitFrames(es.head)),
     fn[MinKAgg]("min_k")(es => MinKAgg(es.head, int(es(1)))),
     fn[MinKPairAgg]("min_k_by")(es => MinKPairAgg(es.head, int(es(1)))),
     fn[TopKAgg]("topk_agg")(es => TopKAgg(es.head, int(es(1)))),

@@ -12,6 +12,11 @@ import org.apache.spark.sql.SparkSession
   */
 object GraftSession {
 
+  /** Local core count for the bench, Verify and tool sessions:
+    * `SPARK_GRAFT_CPUS`, else the machine's. */
+  def cpus: Int = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
+    .getOrElse(Runtime.getRuntime.availableProcessors())
+
   def builder(master: String, shufflePartitions: Int): SparkSession.Builder =
     SparkSession.builder()
       .master(master)

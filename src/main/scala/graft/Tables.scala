@@ -12,6 +12,10 @@ import org.apache.spark.sql.types._
 /** Loaders for the driver-generated test tables (TESTDATA.md). */
 object Tables {
 
+  /** Half-up rounding to 4 decimals, `floor(x * 10000 + 0.5) / 10000`:
+    * the rounding the query results and their DuckDB oracles share. */
+  def r4(c: Column): Column = floor(c * 10000 + 0.5) / 10000
+
   /** The session confs Spark's parquet schema inference reads. */
   private val InferenceConfs = Seq(
     "spark.sql.parquet.binaryAsString",

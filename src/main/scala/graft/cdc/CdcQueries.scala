@@ -12,7 +12,9 @@ import scala.jdk.CollectionConverters._
   * The decode paths are verified by roundtrip: Spark encodes the
   * canonical change feed to the wire format (binary pgoutput / wal2json
   * JSON / Debezium JSON), decodes it back distributed, and the result
-  * must hash-match a plain SQL projection of the source table.
+  * must hash-match a plain SQL projection of the source table. The
+  * roundtrips and the streaming sources share one codec per format
+  * ([[PgOutputFeed]], [[Wal2JsonFeed]], [[DebeziumFeed]]).
   */
 object CdcQueries {
 
@@ -29,90 +31,26 @@ object CdcQueries {
        |FROM changes ORDER BY seq""".stripMargin
 
   // ---------------------------------------------------------------- A1
-  def pgoutputDecode(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    val changes = ChangeFeed.fromEvents(s, dir)
-    val wire = changes.select(struct(
-      when($"op" === "i", "I").when($"op" === "d", "D").otherwise("U").as("op"),
-      lit(1).as("relation_id"),
-      array($"key".cast("string"), $"seq".cast("string")).as("key_cells"),
-      when($"op" =!= "d",
-        array($"key".cast("string"), $"event_type", $"value".cast("string"),
-          date_format($"ts", tsFmt), $"seq".cast("string"))).as("cells")).as("m"))
-      .select(expr("pg_encode(m)").as("raw"))
-    val d = wire.select(expr("pg_decode(raw)").as("d")).select($"d.*")
-    d.select(
-      when($"op" === "I", "i").when($"op" === "D", "d").otherwise("u").as("op"),
-      when($"op" === "D", element_at($"key_cells", 1))
-        .otherwise(element_at($"cells", 1)).cast("long").as("user_id"),
-      when($"op" =!= "D", element_at($"cells", 2)).as("event_type"),
-      when($"op" =!= "D", element_at($"cells", 3)).cast("double").as("value"),
-      when($"op" =!= "D", element_at($"cells", 4)).as("ts_str"),
-      when($"op" === "D", element_at($"key_cells", 2))
-        .otherwise(element_at($"cells", 5)).cast("long").as("seq"))
-      .orderBy($"seq")
-  }
+  def pgoutputDecode(s: SparkSession, dir: String): DataFrame =
+    parsed(PgOutputFeed.decode(
+      ChangeFeed.fromEvents(s, dir).select(PgOutputFeed.encode().as("msg"))))
 
   // ---------------------------------------------------------------- A2
-  def wal2jsonParse(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    val changes = ChangeFeed.fromEvents(s, dir)
-    val cols = Seq("user_id", "event_type", "value", "ts", "event_id")
-    val types = Seq("bigint", "text", "double precision", "timestamp", "bigint")
-    val doc = changes.select(to_json(struct(array(struct(
-      when($"op" === "i", "insert").when($"op" === "d", "delete")
-        .otherwise("update").as("kind"),
-      lit("public").as("schema"),
-      lit("users").as("table"),
-      when($"op" =!= "d", array(cols.map(lit): _*)).as("columnnames"),
-      when($"op" =!= "d", array(types.map(lit): _*)).as("columntypes"),
-      when($"op" =!= "d",
-        array($"key".cast("string"), $"event_type", $"value".cast("string"),
-          date_format($"ts", tsFmt), $"seq".cast("string"))).as("columnvalues"),
-      when($"op" === "d", struct(
-        array(lit("user_id"), lit("event_id")).as("keynames"),
-        array(lit("bigint"), lit("bigint")).as("keytypes"),
-        array($"key".cast("string"), $"seq".cast("string")).as("keyvalues")))
-        .as("oldkeys"))).as("change"))).as("doc"))
-    val flat = JsonParsers.wal2jsonFlatten(
-      doc.select(JsonParsers.parseWal2Json($"doc").as("change")), "change")
-    flat.select(
-      when($"kind" === "insert", "i").when($"kind" === "delete", "d")
-        .otherwise("u").as("op"),
-      coalesce($"after"("user_id"), $"old_keys"("user_id")).cast("long").as("user_id"),
-      $"after"("event_type").as("event_type"),
-      $"after"("value").cast("double").as("value"),
-      $"after"("ts").as("ts_str"),
-      coalesce($"after"("event_id"), $"old_keys"("event_id")).cast("long").as("seq"))
-      .orderBy($"seq")
-  }
+  def wal2jsonParse(s: SparkSession, dir: String): DataFrame =
+    parsed(Wal2JsonFeed.decode(
+      ChangeFeed.fromEvents(s, dir).select(Wal2JsonFeed.encode.as("doc"))))
 
   // ---------------------------------------------------------------- A3
-  def debeziumParse(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    val changes = ChangeFeed.fromEvents(s, dir)
-    val rowType = StructType(Seq(
-      StructField("user_id", LongType), StructField("event_type", StringType),
-      StructField("value", DoubleType), StructField("ts", StringType),
-      StructField("event_id", LongType)))
-    val row = struct($"key".as("user_id"), $"event_type", $"value",
-      date_format($"ts", tsFmt).as("ts"), $"seq".as("event_id"))
-    val doc = changes.select(to_json(struct(
-      when($"op" === "i", "c").when($"op" === "d", "d").otherwise("u").as("op"),
-      expr("unix_micros(ts) div 1000").as("ts_ms"),
-      when($"op" === "d", row).as("before"),
-      when($"op" =!= "d", row).as("after"),
-      struct(lit("users").as("table"), $"seq".as("lsn")).as("source"))).as("doc"))
-    doc.select(JsonParsers.parseDebezium($"doc", rowType).as("e"))
-      .select(
-        when($"e.op" === "c", "i").when($"e.op" === "d", "d").otherwise("u").as("op"),
-        coalesce($"e.after.user_id", $"e.before.user_id").as("user_id"),
-        $"e.after.event_type".as("event_type"),
-        $"e.after.value".as("value"),
-        $"e.after.ts".as("ts_str"),
-        $"e.source.lsn".as("seq"))
-      .orderBy($"seq")
-  }
+  def debeziumParse(s: SparkSession, dir: String): DataFrame =
+    parsed(DebeziumFeed.decode(
+      ChangeFeed.fromEvents(s, dir).select(DebeziumFeed.encode.as("doc"))))
+
+  /** The A1–A3 roundtrip result ([[parsedOracle]]'s shape) of a feed
+    * codec's decoded rows. */
+  private def parsed(decoded: DataFrame): DataFrame =
+    decoded.select(col("op"), col("key").as("user_id"), col("event_type"), col("value"),
+      date_format(timestamp_micros(col("tsMicros")), tsFmt).as("ts_str"), col("seq"))
+      .orderBy(col("seq"))
 
   // ---------------------------------------------------------------- A4
   def latestState(s: SparkSession, dir: String): DataFrame = {
@@ -239,7 +177,7 @@ object CdcQueries {
       2 -> array($"key".cast("string"), tsStr, $"seq".cast("string"),
         $"value".cast("string")))
     val dataMsgs = changes.select($"seq", lit(1).as("subseq"), struct(
-        when($"op" === "i", "I").when($"op" === "d", "D").otherwise("U").as("op"),
+        PgOutputFeed.toWire($"op").as("op"),
         lit(1).as("relation_id"),
         array($"key".cast("string"), $"seq".cast("string")).as("key_cells"),
         when($"op" =!= "d",
@@ -270,7 +208,7 @@ object CdcQueries {
     val m = map_from_arrays($"col_names", $"cells")
     val keyM = map_from_arrays(array(lit("user_id"), lit("event_id")), $"key_cells")
     joined.select($"seq",
-        when($"mop" === "I", "i").when($"mop" === "D", "d").otherwise("u").as("op"),
+        PgOutputFeed.fromWire($"mop").as("op"),
         when($"mop" === "D", keyM("user_id")).otherwise(m("user_id"))
           .cast("long").as("user_id"),
         when($"mop" =!= "D", m("event_type")).as("event_type"),
@@ -409,14 +347,8 @@ object CdcQueries {
     * the stage — the operational posture at 100 TB. */
   def decodeQuarantine(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val changes = ChangeFeed.fromEvents(s, dir)
-    val wire = changes.select($"seq", struct(
-        when($"op" === "i", "I").when($"op" === "d", "D").otherwise("U").as("op"),
-        lit(1).as("relation_id"),
-        array($"key".cast("string"), $"seq".cast("string")).as("key_cells"),
-        when($"op" =!= "d",
-          array($"key".cast("string"), $"event_type")).as("cells")).as("m"))
-      .select($"seq", expr("pg_encode(m)").as("raw"))
+    val wire = ChangeFeed.fromEvents(s, dir)
+      .select($"seq", PgOutputFeed.encode().as("raw"))
       // zero the message-type byte of every 97th record
       .select($"seq", when($"seq" % 97 === 0,
           concat(lit(Array[Byte](0)), expr("substring(raw, 2, length(raw))")))
@@ -916,44 +848,33 @@ object CdcQueries {
   /** File-backed replication source of BINARY pgoutput messages — the
     * sandbox analogue of the reference's replication socket (main.go:
     * 18–60 creates the slot; :101–135 consumes XLogData messages).
-    * Stage 1 writes the feed as length-prefix-framed binary segment
-    * files — framing stands in for XLogData's one-message envelope —
-    * from the EXECUTORS (mapPartitions, one segment per WAL chunk; on
-    * a cluster the same code targets a DFS path). Stage 2 is the
+    * Stage 1 writes the feed ([[PgOutputFeed]]) as binary segment files
+    * of [[PgOutput.writeFrame]] frames — framing stands in for
+    * XLogData's one-message envelope — from the EXECUTORS
+    * (mapPartitions, one segment per WAL chunk; on a cluster the same
+    * code targets a DFS path). Stage 2 is the
     * consumer under test: the `format("pgoutput")` DataSource V2
     * reader ([[graft.sources.v2.PgOutputFileSource]]) streams the
     * segments and recovers one row per wire message (frame splitting
-    * is source logic now, as in the reference's client loop),
+    * is source logic, as in the reference's client loop), the codec's
     * `pg_decode` runs in the scan stage, and the streaming upsert
     * operator materializes latest-state. Unlike A1/A7 the bytes on
     * disk ARE the wire format — the source, codec, and state machine
     * are exercised end-to-end. */
-  def replicationSource(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    val segDir = writeWireSegments(s, dir)
-    val decoded = s.readStream.format("pgoutput").load(segDir)
-      .select(org.apache.spark.sql.functions.col("msg"))
-    latestStateFromWire(s, decoded)
-  }
+  def replicationSource(s: SparkSession, dir: String): DataFrame =
+    latestStateFromWire(s,
+      s.readStream.format("pgoutput").load(writeWireSegments(s, dir)).select(col("msg")))
 
   /** A22 stage 1, factored (r13) so the loopback-TCP transport spec can
     * replay the SAME segment bytes over a socket: encodes the change
-    * feed as length-prefix-framed binary pgoutput segment files from
-    * the executors and returns the segment dir. */
+    * feed as framed binary pgoutput segment files from the executors
+    * and returns the segment dir. */
   private[graft] def writeWireSegments(s: SparkSession, dir: String): String = {
     import s.implicits._
-    val changes = ChangeFeed.fromEvents(s, dir)
-    val wire = changes.select($"seq", struct(
-        when($"op" === "i", "I").when($"op" === "d", "D").otherwise("U").as("op"),
-        lit(1).as("relation_id"),
-        array($"key".cast("string"), $"seq".cast("string")).as("key_cells"),
-        when($"op" =!= "d",
-          array($"key".cast("string"), $"event_type", $"value".cast("string"),
-            expr("unix_micros(ts)").cast("string"), $"seq".cast("string")))
-          .as("cells")).as("m"))
-      .select($"seq", expr("pg_encode(m)").as("raw"))
+    val wire = ChangeFeed.fromEvents(s, dir)
+      .select($"seq", PgOutputFeed.encode().as("raw"))
     val segDir = graft.Scratch.dir("graft_replsrc").toString
-    // one segment per core: encode, write, and (binaryFile reads one
+    // one segment per core: encode, write, and (the source reads one
     // split per file) decode all run at full parallelism — a WAL is
     // many segments anyway
     val nSeg = s.sparkContext.defaultParallelism
@@ -961,12 +882,10 @@ object CdcQueries {
       .select($"raw").as[Array[Byte]]
       .mapPartitions { msgs =>
         val bos = new java.io.ByteArrayOutputStream()
+        val out = new java.io.DataOutputStream(bos)
         var n = 0
-        msgs.foreach { m =>
-          bos.write((m.length >>> 24) & 0xff); bos.write((m.length >>> 16) & 0xff)
-          bos.write((m.length >>> 8) & 0xff); bos.write(m.length & 0xff)
-          bos.write(m); n += 1
-        }
+        msgs.foreach { m => PgOutput.writeFrame(out, m); n += 1 }
+        out.flush()
         java.nio.file.Files.write(java.nio.file.Paths.get(segDir,
           f"seg_${org.apache.spark.TaskContext.getPartitionId()}%05d.bin"),
           bos.toByteArray)
@@ -981,77 +900,28 @@ object CdcQueries {
     * verbatim by the file transport (A22's registered query) and the
     * loopback-TCP transport (PgWireTcpSpec), which is the point: the
     * decode path and state machine cannot diverge between transports. */
-  private[graft] def latestStateFromWire(s: SparkSession, msgs: DataFrame): DataFrame = {
-    import s.implicits._
-    val decoded = msgs
-      .select(expr("pg_decode(msg)").as("d"))
-      .select(
-        // inserts carry no key tuple on the wire (pgoutput semantics)
-        when($"d.op" === "D", element_at($"d.key_cells", 1))
-          .otherwise(element_at($"d.cells", 1)).cast("long").as("key"),
-        when($"d.op" === "D", element_at($"d.key_cells", 2))
-          .otherwise(element_at($"d.cells", 5)).cast("long").as("seq"),
-        when($"d.op" === "I", "i").when($"d.op" === "D", "d")
-          .otherwise("u").as("op"),
-        coalesce(element_at($"d.cells", 2), lit("")).as("event_type"),
-        // a NULL column value survives the wire ('n' cell) round trip —
-        // ChangeRecord.value is Option, no 0.0 default
-        element_at($"d.cells", 3).cast("double").as("value"),
-        coalesce(element_at($"d.cells", 4).cast("long"), lit(0L)).as("tsMicros"))
-      .as[ChangeRecord]
-    lastState(CdcStream.runLatestStateBounded(s, decoded))
-  }
+  private[graft] def latestStateFromWire(s: SparkSession, msgs: DataFrame): DataFrame =
+    lastState(CdcStream.runLatestStateBounded(s,
+      ChangeFeed.decodedRecords(PgOutputFeed.decode(msgs))))
 
   // --------------------------------------------------------------- A23
   /** Streaming wal2json FILE source end-to-end: executors write the
     * feed as JSON-lines wal2json documents (`to_json` + `write.text` —
     * the on-disk twin of a wal2json Kafka topic), then the consumer
-    * under test readStreams them through
-    * [[graft.sources.ChangeEventFiles.wal2jsonStream]], projects typed
-    * cells per the DECLARED column types (pgTyped), and materializes
-    * latest-state with the streaming upsert operator. Complements A22:
+    * under test readStreams them through `format("wal2json")`,
+    * [[Wal2JsonFeed]] types the cells per their DECLARED column types
+    * (pgTyped), and the streaming upsert operator materializes
+    * latest-state. Complements A22:
     * same state contract, JSON wire instead of binary pgoutput. */
   def wal2jsonStreamSource(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    import graft.sources.ChangeEventFiles
-    val changes = ChangeFeed.fromEvents(s, dir)
-    val doc = changes.select(to_json(struct(array(struct(
-        when($"op" === "i", "insert").when($"op" === "d", "delete")
-          .otherwise("update").as("kind"),
-        lit("public").as("schema"), lit("users").as("table"),
-        when($"op" =!= "d", array(lit("user_id"), lit("event_type"),
-          lit("value"), lit("ts_us"), lit("event_id"))).as("columnnames"),
-        when($"op" =!= "d", array(lit("bigint"), lit("text"),
-          lit("double precision"), lit("bigint"), lit("bigint"))).as("columntypes"),
-        when($"op" =!= "d", array($"key".cast("string"), $"event_type",
-          $"value".cast("string"), expr("unix_micros(ts)").cast("string"),
-          $"seq".cast("string"))).as("columnvalues"),
-        when($"op" === "d", struct(
-          array(lit("user_id"), lit("event_id")).as("keynames"),
-          array(lit("bigint"), lit("bigint")).as("keytypes"),
-          array($"key".cast("string"), $"seq".cast("string")).as("keyvalues")))
-          .as("oldkeys"))).as("change"))).as("doc"))
     val segDir = graft.Scratch.dir("graft_w2js").toString
     // one JSON-lines file per core: the file source assigns one split
     // per small text file, so file count caps parse parallelism
-    doc.repartition(s.sparkContext.defaultParallelism)
+    ChangeFeed.fromEvents(s, dir).select(Wal2JsonFeed.encode.as("doc"))
+      .repartition(s.sparkContext.defaultParallelism)
       .write.mode("overwrite").text(segDir)
-    val flat = ChangeEventFiles.wal2jsonStream(s, segDir)
-    val decoded = flat.select(
-        coalesce(ChangeEventFiles.typedCell($"after", "user_id", "bigint"),
-          $"old_keys"("user_id").cast("long")).as("key"),
-        coalesce(ChangeEventFiles.typedCell($"after", "event_id", "bigint"),
-          $"old_keys"("event_id").cast("long")).as("seq"),
-        when($"kind" === "insert", "i").when($"kind" === "delete", "d")
-          .otherwise("u").as("op"),
-        coalesce($"after"("event_type"), lit("")).as("event_type"),
-        // NULL column value survives the JSON round trip (Option field)
-        ChangeEventFiles.typedCell($"after", "value", "double precision")
-          .as("value"),
-        coalesce(ChangeEventFiles.typedCell($"after", "ts_us", "bigint"),
-          lit(0L)).as("tsMicros"))
-      .as[ChangeRecord]
-    lastState(CdcStream.runLatestStateBounded(s, decoded))
+    val decoded = Wal2JsonFeed.decode(s.readStream.format("wal2json").load(segDir))
+    lastState(CdcStream.runLatestStateBounded(s, ChangeFeed.decodedRecords(decoded)))
   }
 
   // --------------------------------------------------------------- A24
@@ -1091,42 +961,17 @@ object CdcQueries {
   /** Streaming Debezium FILE source end-to-end: executors write the
     * feed as JSON-lines Debezium envelopes (op/before/after/ts_ms/
     * source — the topic-on-disk shape), the consumer readStreams them
-    * through [[graft.sources.ChangeEventFiles.debeziumStream]] with a
+    * through `format("debezium")`, parses them with [[DebeziumFeed]]'s
     * TYPED row schema (ts carried as epoch micros) and materializes
     * latest-state. Completes the wire trio: binary pgoutput (A22),
     * wal2json (A23), Debezium (A25) — all held to the same state
     * contract. */
   def debeziumStreamSource(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    import graft.sources.ChangeEventFiles
-    val changes = ChangeFeed.fromEvents(s, dir)
-    val rowType = StructType(Seq(
-      StructField("user_id", LongType), StructField("event_type", StringType),
-      StructField("value", DoubleType), StructField("ts_us", LongType),
-      StructField("event_id", LongType)))
-    val row = struct($"key".as("user_id"), $"event_type", $"value",
-      expr("unix_micros(ts)").as("ts_us"), $"seq".as("event_id"))
-    val doc = changes.select(to_json(struct(
-      when($"op" === "i", "c").when($"op" === "d", "d").otherwise("u").as("op"),
-      expr("unix_micros(ts) div 1000").as("ts_ms"),
-      when($"op" === "d", row).as("before"),
-      when($"op" =!= "d", row).as("after"),
-      struct(lit("users").as("table"), $"seq".as("lsn")).as("source"))).as("doc"))
     val segDir = graft.Scratch.dir("graft_dbzs").toString
-    doc.coalesce(4).write.mode("overwrite").text(segDir)
-    val decoded = ChangeEventFiles.debeziumStream(s, segDir, rowType)
-      .select(
-        coalesce($"after.user_id", $"before.user_id").as("key"),
-        $"source.lsn".as("seq"),
-        when($"op" === "c", "i").when($"op" === "d", "d")
-          .otherwise("u").as("op"),
-        coalesce($"after.event_type", lit("")).as("event_type"),
-        // value is COLUMN data: NULL must survive the envelope round
-        // trip (ChangeRecord.value is Option), not default to 0.0
-        $"after.value".as("value"),
-        coalesce($"after.ts_us", lit(0L)).as("tsMicros"))
-      .as[ChangeRecord]
-    lastState(CdcStream.runLatestStateBounded(s, decoded))
+    ChangeFeed.fromEvents(s, dir).select(DebeziumFeed.encode.as("doc"))
+      .coalesce(4).write.mode("overwrite").text(segDir)
+    val decoded = DebeziumFeed.decode(s.readStream.format("debezium").load(segDir))
+    lastState(CdcStream.runLatestStateBounded(s, ChangeFeed.decodedRecords(decoded)))
   }
 
   // --------------------------------------------------------------- A34
@@ -1283,34 +1128,14 @@ object CdcQueries {
     * would just partitionBy the routing column. */
   def tableRouting(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val changes = ChangeFeed.fromEvents(s, dir)
-    val wire = changes.select(struct(
-        when($"op" === "i", "I").when($"op" === "d", "D").otherwise("U").as("op"),
-        (lit(1) + ($"seq" % 2).cast("int")).as("relation_id"),
-        array($"key".cast("string"), $"seq".cast("string")).as("key_cells"),
-        when($"op" =!= "d",
-          array($"key".cast("string"), $"event_type", $"value".cast("string"),
-            $"seq".cast("string"))).as("cells")).as("m"))
-      .select(expr("pg_encode(m)").as("raw"))
-    val decoded = wire.select(expr("pg_decode(raw)").as("d"))
-      .select($"d.relation_id".as("rid"),
-        when($"d.op" === "D", element_at($"d.key_cells", 1))
-          .otherwise(element_at($"d.cells", 1)).cast("long").as("key"),
-        when($"d.op" === "D", element_at($"d.key_cells", 2))
-          .otherwise(element_at($"d.cells", 4)).cast("long").as("seq"),
-        $"d.op".as("op"),
-        element_at($"d.cells", 2).as("event_type"),
-        element_at($"d.cells", 3).cast("double").as("value"))
+    val decoded = PgOutputFeed.decode(ChangeFeed.fromEvents(s, dir)
+      .select(PgOutputFeed.encode(lit(1) + ($"seq" % 2).cast("int")).as("msg")))
     // route: relation 1 keys by user (SCD1 upsert), relation 2 keys by
     // the event itself (append-like audit: every seq is its own key)
     val routed = decoded.select(
-      when($"rid" === 1, "users").otherwise("audit").as("tbl"),
-      when($"rid" === 1, $"key").otherwise($"seq").as("route_key"),
-      $"seq",
-      // wire ops are uppercase I/U/D; normalize back to feed form
-      when($"op" === "I", "i").when($"op" === "D", "d")
-        .otherwise("u").as("op"),
-      $"event_type", $"value")
+      when($"relation_id" === 1, "users").otherwise("audit").as("tbl"),
+      when($"relation_id" === 1, $"key").otherwise($"seq").as("route_key"),
+      $"seq", $"op", $"event_type", $"value")
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy($"tbl", $"route_key").orderBy($"seq".desc)
     routed.withColumn("__rn", row_number().over(w))

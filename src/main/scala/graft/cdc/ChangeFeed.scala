@@ -68,4 +68,15 @@ object ChangeFeed {
     changes.select(col("key"), col("seq"), col("op"), col("event_type"),
       col("value"), unix_micros(col("ts")).as("tsMicros")).as[ChangeRecord]
   }
+
+  /** A feed codec's decoded rows ([[PgOutputFeed]], [[Wal2JsonFeed]],
+    * [[DebeziumFeed]]) as [[ChangeRecord]]s: a delete carries no
+    * event_type or commit time on the wire, so they read "" and 0. A
+    * NULL `value` is column data and stays NULL (an Option field). */
+  def decodedRecords(decoded: DataFrame): Dataset[ChangeRecord] = {
+    import decoded.sparkSession.implicits._
+    decoded.select(col("key"), col("seq"), col("op"),
+      coalesce(col("event_type"), lit("")).as("event_type"), col("value"),
+      coalesce(col("tsMicros"), lit(0L)).as("tsMicros")).as[ChangeRecord]
+  }
 }

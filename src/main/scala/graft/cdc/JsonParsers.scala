@@ -36,22 +36,9 @@ object JsonParsers {
       StructField("oldkeys", keysType)))))))
 
   /** Raw wal2json document column → one row per change entry with
-    * `after` (name→value map) and `old_keys` (name→value map).
-    * NOTE: `explode` silently DROPS documents that fail to parse
-    * (from_json → NULL) and empty transactions (`"change":[]`) — fine
-    * for a trusted feed; use [[parseWal2JsonPermissive]] when the feed
-    * needs quarantine accounting. */
+    * `after` (name→value map) and `old_keys` (name→value map). */
   def parseWal2Json(json: Column): Column =
     explode(from_json(json, wal2jsonSchema).getField("change"))
-
-  /** Permissive twin of [[parseWal2Json]]: an unparseable document or
-    * empty transaction surfaces as ONE row with a NULL change entry
-    * instead of vanishing — pair with `count(*) - count(change)` for
-    * quarantine accounting, the same contract as
-    * `pg_decode_permissive` on the binary path (r10 review finding:
-    * the strict parse silently lost corrupt lines with no signal). */
-  def parseWal2JsonPermissive(json: Column): Column =
-    explode_outer(from_json(json, wal2jsonSchema).getField("change"))
 
   def wal2jsonFlatten(df: DataFrame, changeCol: String): DataFrame = {
     val c = col(changeCol)

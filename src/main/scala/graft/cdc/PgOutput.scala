@@ -98,6 +98,39 @@ object PgOutput {
     b.bytes
   }
 
+  // ------------------------------------------------------------ frames
+
+  /** Appends `msg` as one segment frame: a 4-byte big-endian length,
+    * then the message bytes. A segment file is a run of frames, one
+    * per wire message — the stand-in for the XLogData envelope a
+    * replication socket provides. */
+  def writeFrame(out: java.io.DataOutputStream, msg: Array[Byte]): Unit = {
+    out.writeInt(msg.length); out.write(msg)
+  }
+
+  /** Reads frame `index` of `segment`, whose unread part holds `left`
+    * bytes; `None` at a clean end of the segment. A truncated header, a
+    * negative length, or a length past the bytes left fails with a
+    * named IOException (an EOFException for the two truncations)
+    * before anything is allocated: a corrupt length near Int.MaxValue
+    * must not become an executor-fatal OutOfMemoryError. */
+  def readFrame(in: java.io.DataInputStream, left: Long, segment: String,
+      index: Long): Option[Array[Byte]] = {
+    val b0 = in.read()
+    if (b0 < 0) return None
+    def where = s"at frame $index of $segment"
+    if (left < 4) throw new java.io.EOFException(
+      s"truncated frame header ($left bytes) $where")
+    val len = (b0 << 24) | (in.readUnsignedByte() << 16) |
+      (in.readUnsignedByte() << 8) | in.readUnsignedByte()
+    if (len < 0) throw new java.io.IOException(s"negative frame length $len $where")
+    if (len > left - 4) throw new java.io.EOFException(
+      s"frame length $len exceeds the ${left - 4} bytes left $where")
+    val buf = new Array[Byte](len)
+    in.readFully(buf)
+    Some(buf)
+  }
+
   // ------------------------------------------------------------ decode
 
   private final class Reader(bytes: Array[Byte]) {

@@ -185,42 +185,6 @@ object PgOutputExpressions {
       copy(child = c)
   }
 
-  /** Split a length-prefix-framed byte stream into its pgoutput
-    * messages: each frame is [int32 big-endian length][message bytes].
-    * Stand-in for the XLogData framing a replication socket provides
-    * (reference main.go:101–135 receives one message per XLogData);
-    * lets a binaryFile stream carry many messages per file. */
-  def splitFrames(bytes: Array[Byte]): GenericArrayData = {
-    val out = scala.collection.mutable.ArrayBuffer.empty[Any]
-    var i = 0
-    while (i < bytes.length) {
-      if (i + 4 > bytes.length)
-        throw new IllegalArgumentException(s"truncated frame header at $i")
-      val len = ((bytes(i) & 0xff) << 24) | ((bytes(i + 1) & 0xff) << 16) |
-        ((bytes(i + 2) & 0xff) << 8) | (bytes(i + 3) & 0xff)
-      // long arithmetic: `i + 4 + len` overflows Int for lengths near
-      // Int.MaxValue, bypassing this guard and surfacing a confusing
-      // copyOfRange error instead of the named one (r10 review finding)
-      if (len < 0 || i + 4 + len.toLong > bytes.length)
-        throw new IllegalArgumentException(s"bad frame length $len at $i")
-      out += java.util.Arrays.copyOfRange(bytes, i + 4, i + 4 + len)
-      i += 4 + len
-    }
-    new GenericArrayData(out.toArray)
-  }
-
-  case class PgSplitFrames(child: Expression) extends UnaryExpression {
-    override def nullIntolerant: Boolean = true
-    override def dataType: DataType = ArrayType(BinaryType, containsNull = false)
-    override def nullSafeEval(input: Any): Any =
-      splitFrames(input.asInstanceOf[Array[Byte]])
-    override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      defineCodeGen(ctx, ev,
-        c => s"graft.cdc.PgOutputExpressions.splitFrames($c)")
-    override protected def withNewChildInternal(c: Expression): PgSplitFrames =
-      copy(child = c)
-  }
-
   /** Forwards to [[graft.Graft.register]], the one install path for a
     * session built without [[graft.GraftExtensions]]. */
   def register(spark: SparkSession): Unit = graft.Graft.register(spark)

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.Tables.table
+import graft.Tables.{r4, table}
 
 /** C6–C7: similarity search over the `embeddings` table.
   *
@@ -17,8 +17,6 @@ import graft.Tables.table
   * cross product).
   */
 object Ann {
-
-  private def r4(c: Column): Column = floor(c * 10000 + 0.5) / 10000
 
   val K = 10
   /** Query vectors: vec_id < 8 (deterministic tiny query set). */

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.Tables.table
+import graft.Tables.{r4, table}
 
 /** C1–C5: deduplication operators over `documents` / `embeddings`
   * (SURVEY.md §2.C). The reference materializes clean tables from
@@ -26,9 +26,6 @@ import graft.Tables.table
   *    [[Ann.annLsh]].
   */
 object Dedup {
-
-  /** Deterministic 4-dp rounding — identical IEEE ops in both engines. */
-  private def r4(c: Column): Column = floor(c * 10000 + 0.5) / 10000
 
   /** Injection-feed id spaces (r11, closing the r10 ADVICE id-collision
     * class FOR REAL: it reproduced). The synthetic feeds re-add docs /

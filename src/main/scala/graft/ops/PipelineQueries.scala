@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import graft.cdc.CdcStream
+import graft.Tables.r4
 
 /** C-series registry: training-data pipeline operators (SURVEY.md §2.C)
   * with their DuckDB oracles. C3 shares C2's oracle (the LSH path must
@@ -184,7 +185,6 @@ object PipelineQueries {
     * and the exact median — whose approx swap C32 proves. */
   def pipelineDatasetCard(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val r4 = (c: org.apache.spark.sql.Column) => floor(c * 10000 + 0.5) / 10000
     val base = graft.Tables.table(s, dir, "documents")
       .select($"source", $"n_chars", md5($"text").as("h"),
         size(split($"text", " ")).cast("long").as("toks"),
@@ -339,7 +339,6 @@ object PipelineQueries {
     * for B21's mergeable approx sketch — same plan shape. */
   def pipelineQualityGate(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val r4 = (c: org.apache.spark.sql.Column) => floor(c * 10000 + 0.5) / 10000
     val base = graft.Tables.table(s, dir, "documents")
       .select($"doc_id", $"source", $"n_chars",
         (length($"text") * lit(1.0) / size(split($"text", " ")))
@@ -401,7 +400,6 @@ object PipelineQueries {
     * broadcast-then-classify plan as C30 hangs off the sketch row. */
   def pipelineQualityGateApprox(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val r4 = (c: org.apache.spark.sql.Column) => floor(c * 10000 + 0.5) / 10000
     graft.Tables.table(s, dir, "documents")
       .select($"source",
         (length($"text") * lit(1.0) / size(split($"text", " ")))
@@ -1038,7 +1036,6 @@ object PipelineQueries {
     import s.implicits._
     import org.apache.spark.sql.expressions.Window
     val Budget = 2000L
-    val r4 = (c: org.apache.spark.sql.Column) => floor(c * 10000 + 0.5) / 10000
     val docs = graft.Tables.table(s, dir, "documents")
       .select($"source", $"doc_id",
         size(split($"text", " ")).cast("long").as("n_tokens"),

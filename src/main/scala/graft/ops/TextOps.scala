@@ -3,15 +3,13 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Tables.table
+import graft.Tables.{r4, table}
 
 /** C8–C11: per-document text analysis. All narrow (no shuffle except
   * the final presentation sort): at 100 TB these run at scan
   * parallelism with column pruning down to (doc_id, text).
   */
 object TextOps {
-
-  private def r4(c: Column): Column = floor(c * 10000 + 0.5) / 10000
 
   /** Marker stopwords per language — tiny, inlined on both sides. */
   val Markers: Seq[(String, Seq[String])] = Seq(
@@ -199,7 +197,6 @@ object TextOps {
     * Narrow per-row array arithmetic, no shuffle. */
   def textRepetition(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val r4 = (c: org.apache.spark.sql.Column) => floor(c * 10000 + 0.5) / 10000
     table(s, dir, "documents")
       .select($"doc_id", split($"text", " ").as("w"))
       .filter(size($"w") >= 3)

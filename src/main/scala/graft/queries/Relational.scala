@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.Tables.table
+import graft.Tables.{r4, table}
 
 /** B-series: relational analytics over the materialized tables
   * (SURVEY.md §2.B). Each query has a DuckDB oracle in [[oracles]].
@@ -24,7 +24,6 @@ object Relational {
 
   /** Deterministic 2-dp rounding: identical IEEE ops in Spark + DuckDB. */
   private def money(c: Column): Column = floor(c * 100 + 0.5) / 100
-  private def money4(c: Column): Column = floor(c * 10000 + 0.5) / 10000
 
   /** User-timeline contract (dirty-data posture, r10): sessionization,
     * lifecycle, transition, cohort, and interval analytics partition
@@ -56,7 +55,7 @@ object Relational {
         money(sum($"l_extendedprice" * (lit(1.0) - $"l_discount") * (lit(1.0) + $"l_tax"))).as("sum_charge"),
         avg($"l_quantity").as("avg_qty"),
         money(avg($"l_extendedprice")).as("avg_price"),
-        money4(avg($"l_discount")).as("avg_disc"),
+        r4(avg($"l_discount")).as("avg_disc"),
         count(lit(1)).as("count_order"))
       .orderBy($"l_returnflag", $"l_linestatus")
   }

@@ -11,11 +11,10 @@ import graft.cdc.JsonParsers
   * samples under /root/reference/examples/pgoutput/events/:
   * pretty-printed wal2json documents, one change array per file).
   *
-  * Batch and streaming readers share one code path: read the raw
-  * document text, then the same `from_json` + `explode` flatten used
-  * for in-flight columns. Streaming uses the file source, so a
-  * directory of change files behaves like a (replayable) topic —
-  * Spark's standard backfill story.
+  * The readers parse with the same `from_json` + `explode` flatten as
+  * in-flight columns. Streaming JSON-lines change documents read
+  * through `format("wal2json")` / `format("debezium")` and decode with
+  * [[graft.cdc.Wal2JsonFeed]] / [[graft.cdc.DebeziumFeed]].
   */
 object ChangeEventFiles {
 
@@ -28,30 +27,9 @@ object ChangeEventFiles {
       docs.select(explode(col("change")).as("change")), "change")
   }
 
-  /** Streaming variant over a directory of JSON-lines change docs,
-    * via the `format("wal2json")` DataSource V2 reader
-    * ([[graft.sources.v2.Wal2JsonFileSource]]): the source yields one
-    * document per line with file-count offsets (a resumable wire
-    * position); the parse stays a codegen'd `from_json` projection. */
-  def wal2jsonStream(s: SparkSession, path: String): DataFrame = {
-    val docs = s.readStream.format("wal2json").load(path)
-      .select(from_json(col("doc"), JsonParsers.wal2jsonSchema).as("w"))
-      .select("w.*")
-    JsonParsers.wal2jsonFlatten(
-      docs.select(explode(col("change")).as("change")), "change")
-  }
-
   /** Debezium envelope files (JSON-lines) with a typed row schema. */
   def debezium(s: SparkSession, path: String, rowType: StructType): DataFrame =
     s.read.schema(JsonParsers.debeziumSchema(rowType)).json(path)
-
-  /** Streaming Debezium envelopes via `format("debezium")`
-    * ([[graft.sources.v2.DebeziumFileSource]]); same line-framed wire
-    * contract as wal2json with the envelope schema applied after. */
-  def debeziumStream(s: SparkSession, path: String, rowType: StructType): DataFrame =
-    s.readStream.format("debezium").load(path)
-      .select(from_json(col("doc"), JsonParsers.debeziumSchema(rowType)).as("e"))
-      .select("e.*")
 
   /** Typed projection of a text-encoded cell, per the wal2json declared
     * column type — the declarative twin of the reference's per-OID

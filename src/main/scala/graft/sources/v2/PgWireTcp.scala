@@ -290,24 +290,13 @@ class PgWireReplayServer(segDir: String, keepaliveEvery: Int = 64,
     files.iterator.flatMap { f =>
       val in = new DataInputStream(new BufferedInputStream(
         new java.io.FileInputStream(f), 65536))
-      new Iterator[Array[Byte]] {
-        private var nextFrame: Array[Byte] = advance()
-        private def advance(): Array[Byte] = {
-          val b0 = in.read()
-          if (b0 < 0) { in.close(); null }
-          else {
-            val len = (b0 << 24) | (in.readUnsignedByte() << 16) |
-              (in.readUnsignedByte() << 8) | in.readUnsignedByte()
-            val buf = new Array[Byte](len)
-            in.readFully(buf)
-            buf
-          }
-        }
-        override def hasNext: Boolean = nextFrame != null
-        override def next(): Array[Byte] = {
-          val f = nextFrame; nextFrame = advance(); f
-        }
-      }
+      val size = f.length
+      var read = 0L
+      Iterator.from(0).map { i =>
+        val frame = graft.cdc.PgOutput.readFrame(in, size - read, f.getPath, i)
+        frame.foreach(b => read += 4 + b.length)
+        frame
+      }.takeWhile { frame => if (frame.isEmpty) in.close(); frame.isDefined }.map(_.get)
     }
   }
 

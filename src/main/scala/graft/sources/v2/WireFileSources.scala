@@ -25,18 +25,18 @@ import org.apache.spark.unsafe.types.UTF8String
   *  - `format("pgoutput")`  — length-prefix-framed binary pgoutput
   *    segment files (XLogData envelope stand-in) → one row per wire
   *    message: (seg_path, frame_idx, msg binary). Decode stays a
-  *    downstream `pg_decode` projection, codegen'd in the scan stage.
+  *    downstream projection ([[graft.cdc.PgOutputFeed]]), codegen'd in
+  *    the scan stage.
   *  - `format("wal2json")` / `format("debezium")` — JSON-lines change
   *    documents → one row per line: (seg_path, frame_idx, doc string).
   *    Parsing stays a downstream `from_json`, ditto.
   *
   * Batch and micro-batch reads share one partition planner: one input
   * partition per segment file (a WAL is many segments — file count is
-  * the parallelism, same contract the binaryFile chain had). Streaming
-  * offsets are "number of files consumed" over the name-sorted
-  * listing, the same monotone progress contract as Spark's file
-  * source: segment names are written in LSN order, so the offset IS a
-  * resumable WAL position.
+  * the parallelism). Streaming offsets are "number of files consumed"
+  * over the name-sorted listing, the same monotone progress contract
+  * as Spark's file source: segment names are written in LSN order, so
+  * the offset IS a resumable WAL position.
   *
   * Scale notes: listing is one driver-side RPC per micro-batch (no
   * data moves); each reader streams ONE segment file — segment size is
@@ -57,8 +57,8 @@ abstract class FramedFileProvider extends TableProvider with DataSourceRegister 
   override def supportsExternalMetadata(): Boolean = false
 }
 
-/** Binary pgoutput wire segments: big-endian 4-byte length prefix per
-  * message (graft.cdc.PgOutput frame contract). */
+/** Binary pgoutput wire segments of [[graft.cdc.PgOutput.writeFrame]]
+  * frames. */
 class PgOutputFileSource extends FramedFileProvider {
   override def shortName(): String = "pgoutput"
   override val frameSchema: StructType = StructType(Seq(
@@ -176,31 +176,27 @@ case class SegmentReaderFactory(conf: SerializableHadoopConf)
   }
 }
 
-/** Streams one segment, yielding length-prefixed frames. Memory bound:
-  * one frame at a time plus the 64 KiB read buffer. */
+/** Streams one segment, yielding its frames through
+  * [[graft.cdc.PgOutput.readFrame]]. Memory bound: one frame at a time
+  * plus the 64 KiB read buffer. */
 class BinaryFrameReader(file: String, conf: Configuration)
     extends PartitionReader[InternalRow] {
-  private val in = {
+  private val (in, size) = {
     val hp = new HPath(file)
-    new java.io.DataInputStream(new java.io.BufferedInputStream(
-      hp.getFileSystem(conf).open(hp), 65536))
+    val fs = hp.getFileSystem(conf)
+    (new java.io.DataInputStream(new java.io.BufferedInputStream(fs.open(hp), 65536)),
+      fs.getFileStatus(hp).getLen)
   }
   private val pathUtf = UTF8String.fromString(file)
   private var idx = -1L
+  private var read = 0L
   private var current: Array[Byte] = _
 
-  override def next(): Boolean = {
-    val b0 = in.read()
-    if (b0 < 0) { false } else {
-      val len = (b0 << 24) | (in.readUnsignedByte() << 16) |
-        (in.readUnsignedByte() << 8) | in.readUnsignedByte()
-      if (len < 0) throw new java.io.IOException(
-        s"corrupt frame length $len in $file after frame $idx")
-      val buf = new Array[Byte](len)
-      in.readFully(buf)
-      current = buf; idx += 1; true
+  override def next(): Boolean =
+    graft.cdc.PgOutput.readFrame(in, size - read, file, idx + 1) match {
+      case Some(f) => current = f; idx += 1; read += 4 + f.length; true
+      case None => false
     }
-  }
   override def get(): InternalRow =
     new GenericInternalRow(Array[Any](pathUtf, idx, current))
   override def close(): Unit = in.close()

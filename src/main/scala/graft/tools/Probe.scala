@@ -76,14 +76,9 @@ object Probe {
     case p :: t => parse(t, o.copy(pos = o.pos :+ p))
   }
 
-  /** Local core count for tool sessions: `SPARK_GRAFT_CPUS`, else the
-    * machine's. */
-  private[tools] def cpus: Int = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
-    .getOrElse(Runtime.getRuntime.availableProcessors())
-
   def main(args: Array[String]): Unit = {
     val o = parse(args.toList)
-    val n = cpus
+    val n = GraftSession.cpus
     val b = GraftSession.builder(s"local[$n]", n)
       .config("spark.ui.enabled", "false")
     o.confs.foreach { case (k, v) => b.config(k, v) }

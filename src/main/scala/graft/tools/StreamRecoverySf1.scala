@@ -57,7 +57,7 @@ object StreamRecoverySf1 {
 
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/tmp/sf1")
-    val spark = graft.GraftSession.local(Probe.cpus)
+    val spark = graft.GraftSession.local(graft.GraftSession.cpus)
     spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
 

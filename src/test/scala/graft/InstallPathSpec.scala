@@ -15,7 +15,7 @@ class InstallPathSpec extends AnyFunSuite {
     "minhash_sig", "simhash64", "byte_sum", "phash32", "phash64",
     "fingerprint64", "cosine_sim", "fp_dot", "vec_valid", "lsh_bucket", "pq_codes",
     "pq_adc_lut", "pg_decode", "pg_decode_permissive", "pg_encode",
-    "pg_array", "pg_split_frames", "min_k", "min_k_by", "topk_agg", "mg_agg")
+    "pg_array", "min_k", "min_k_by", "topk_agg", "mg_agg")
 
   /** Every registry entry's (info, builder) pair, by function name. */
   private def entries(s: org.apache.spark.sql.SparkSession) = {

@@ -64,15 +64,9 @@ class PgOutputPropertySpec extends AnyFunSuite {
       .map(_.toArray)
     check(Prop.forAll(
       Gen.chooseNum(0, 8).flatMap(n => Gen.listOfN(n, msgGen))) { msgs =>
-      val seg = msgs.flatMap { m =>
-        val n = m.length
-        Array[Byte]((n >>> 24).toByte, (n >>> 16).toByte,
-          (n >>> 8).toByte, n.toByte) ++ m
-      }.toArray
-      val out = PgOutputExpressions.splitFrames(seg)
-      out.numElements() == msgs.length &&
-        (0 until out.numElements()).forall(i =>
-          out.getBinary(i).sameElements(msgs(i)))
+      val out = SplitFramesSpec.frames(SplitFramesSpec.segment(msgs), "seg_prop.bin")
+      out.length == msgs.length &&
+        out.zip(msgs).forall { case (a, b) => a.sameElements(b) }
     })
   }
 }

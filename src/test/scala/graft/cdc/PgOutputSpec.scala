@@ -104,14 +104,13 @@ class PgOutputSpec extends AnyFunSuite {
     assert(decoded === Update(16385, None, None, Seq(Some("1"))))
   }
 
-  test("splitFrames rejects a near-Int.MaxValue frame length by name") {
-    // r10 review finding: `i + 4 + len` overflowed Int and bypassed
-    // the guard, surfacing a confusing copyOfRange error instead
+  test("readFrame rejects a near-Int.MaxValue frame length by name") {
+    // the length is checked against the bytes left before anything is
+    // allocated: a 2 GB buffer request would be an OutOfMemoryError
     val b = java.nio.ByteBuffer.allocate(8).putInt(0x7FFFFFFF).putInt(0)
-    val e = intercept[IllegalArgumentException] {
-      PgOutputExpressions.splitFrames(b.array())
-    }
-    assert(e.getMessage.contains("bad frame length"), e.getMessage)
+    val e = intercept[java.io.EOFException](SplitFramesSpec.frames(b.array(), "seg_big.bin"))
+    assert(e.getMessage.contains("frame length 2147483647 exceeds the 4 bytes left"),
+      e.getMessage)
   }
 
   test("rejects corrupt input fast") {

@@ -132,5 +132,18 @@ class WireFileSourcesSpec extends AnyFunSuite {
     def causes(t: Throwable): Seq[Throwable] =
       if (t == null) Seq.empty else t +: causes(t.getCause)
     assert(causes(ex).exists(_.isInstanceOf[java.io.EOFException]))
+    assert(causes(ex).exists(t => Option(t.getMessage).exists(_.contains("seg_00001.bin"))),
+      ex.getMessage)
+  }
+
+  test("a near-Int.MaxValue frame length is a named error, not an allocation") {
+    val dir = Files.createTempDirectory("wiresrc_huge")
+    val seg = dir.resolve("seg_00001.bin")
+    Files.write(seg, Array[Byte](0x7F, -1, -1, -1, 0, 0, 0, 0))
+    val reader = new graft.sources.v2.BinaryFrameReader(seg.toString,
+      spark.sessionState.newHadoopConf())
+    val e = try intercept[java.io.IOException](reader.next()) finally reader.close()
+    assert(e.getMessage.contains("seg_00001.bin") && e.getMessage.contains("frame 0"),
+      e.getMessage)
   }
 }
